@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ._util import spread, t
+from ._util import t
 
 # Shared per-user example rollup (Spark side) and its SQL twin.
 _USERS_SQL = """

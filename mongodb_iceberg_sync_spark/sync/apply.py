@@ -81,17 +81,17 @@ def apply_batch(
     consumed, not retried. This adds one write job per batch ONLY when
     bad rows exist in it.
 
-    Exactly two Spark jobs per batch: one single-pass aggregation over
-    the raw events (invalidation count, normal count, max seq — no
-    shuffle beyond a scalar agg), then the commit job, which carries an
-    Observation so the post-LWW op count comes from the write itself
-    instead of a third job re-running the groupBy. At a 60s trigger
-    interval job-count-per-batch is the fixed overhead that bounds how
-    many tables one driver can sync (reference A32's pool sizing
-    concern, docs/design.md:480-499).
+    Four Spark jobs per warm batch without invalidations (pinned by
+    tests/test_job_budget.py). Two run the single-pass aggregation over
+    the raw events (invalidation count, normal count, max seq): its map
+    stage and its scalar result each run as a job under adaptive
+    execution. Two run the commit: the LWW groupBy's map stage, then
+    the write, which observes the post-LWW op count and every manifest
+    statistic as it runs (MorTable._write_commit), so neither costs a
+    job of its own. At a 60s trigger interval job-count-per-batch is
+    the fixed overhead that bounds how many tables one driver can sync
+    (reference A32's pool sizing concern, docs/design.md:480-499).
     """
-    from pyspark.sql import Observation
-
     from .quarantine import split_malformed, write_quarantine
 
     is_invalid = F.col("op_type").isin(*INVALIDATE_OPS)
@@ -124,12 +124,7 @@ def apply_batch(
             # and then replays the trailing ops (op_seq > invalidate) as
             # their own batch — matching the sequential-replay oracle.
             normal = normal.filter(seq < F.lit(pre.first_invalid_seq))
-        obs = Observation()
-        ops = batch_to_ops(normal, key=key).observe(
-            obs, F.count(F.lit(1)).alias("n_ops")
-        )
-        table.commit_batch(ops, batch_id)
-        n_ops = obs.get["n_ops"]
+        n_ops = table.commit_batch(batch_to_ops(normal, key=key), batch_id)
     max_seen = pre.max_seen_seq
     if q_max_seq is not None and (max_seen is None or q_max_seq > max_seen):
         # quarantined events are consumed: resume must advance past them
@@ -169,15 +164,16 @@ def apply_batch_wap(
     through apply_batch/SyncEngine instead; this guard raises so the
     mistake is loud.
     """
-    n_invalid = events.filter(F.col("op_type").isin(*INVALIDATE_OPS)).count()
-    if n_invalid:
+    stats = events.agg(
+        F.count(F.when(F.col("op_type").isin(*INVALIDATE_OPS), 1)).alias("n_invalid"),
+        F.count("*").alias("n"),
+        F.max(F.col("op_seq").cast("long")).alias("mx"),
+    ).head()
+    if stats.n_invalid:
         raise ValueError(
             "apply_batch_wap cannot handle invalidation ops "
             "(drop/rename/invalidate) — use apply_batch/SyncEngine"
         )
-    stats = events.agg(
-        F.count("*").alias("n"), F.max(F.col("op_seq").cast("long")).alias("mx")
-    ).head()
     if not stats.n:
         return {"published": True, "n_events": 0, "max_seq": None, "problems": []}
     ops = batch_to_ops(events, key=key)

@@ -32,7 +32,6 @@ from .apply import apply_batch
 from .backfill import run_backfill
 from .checkpoint import (
     RESUME_STEADY_STATE,
-    RUN_INITIAL_SYNC,
     STATE_STEADY_STATE,
     CheckpointStore,
 )
@@ -105,16 +104,7 @@ class CollectionSync:
         while True:
             try:
                 decision = self.store.restart_decision(self.sync_id)
-                if decision in (RUN_INITIAL_SYNC,):
-                    self._set(SyncState.INITIAL_SYNC)
-                    run_backfill(
-                        self.source_snapshot(),
-                        self.table,
-                        self.store,
-                        self.sync_id,
-                        key=self.key,
-                    )
-                elif decision != RESUME_STEADY_STATE:
+                if decision != RESUME_STEADY_STATE:
                     self._set(SyncState.INITIAL_SYNC)
                     run_backfill(
                         self.source_snapshot(),

@@ -14,7 +14,9 @@ parquet, structured exactly like Iceberg would:
   dropped — i.e. the MoR merge an Iceberg reader performs.
 - Write = one delta directory per batch_id; replaying a batch
   overwrites the same directory ⇒ idempotent commits (reference A21
-  at-least-once protocol, docs/design.md:339-348).
+  at-least-once protocol, docs/design.md:339-348). Each commit dir
+  carries a manifest (key bounds, column bounds, key bloom) whose
+  statistics the write itself observes — no read-back job.
 - Compact = rewrite base from the merged view, clear deltas (reference
   A24 RewriteDataFiles, docs/design.md:394-400).
 
@@ -31,7 +33,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 OP_SEQ = "_op_seq"  # total order of applied ops (resume-token position)
@@ -217,8 +219,11 @@ class MorTable:
         out = values_df.distinct().withColumn(
             "_seq_cut", F.lit(seq_cut).cast("long")
         )
-        out.write.mode("overwrite").parquet(target)
-        return self.spark.read.parquet(target).count()
+        obs = Observation()
+        out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(target)
+        return obs.get["n"]
 
     def _apply_eq_deletes(self, df: DataFrame, as_of_batch) -> DataFrame:
         """Anti-join the (base ∪ deltas) rows against every visible
@@ -267,8 +272,11 @@ class MorTable:
             F.col("_metadata.row_index").alias("row_index"),
         )
         target = f"{self.pos_delete_dir}/delete={batch_id}"
-        dels.write.mode("overwrite").parquet(target)
-        return self.spark.read.parquet(target).count()
+        obs = Observation()
+        dels.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(target)
+        return obs.get["n"]
 
     def _apply_pos_deletes(self, base: DataFrame, as_of_batch) -> DataFrame:
         """Anti-join the base scan against every visible delete file.
@@ -345,33 +353,32 @@ class MorTable:
             )
         ).mode("append").parquet(self.base_dir)
 
-    def commit_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Apply one CDC micro-batch (upserts + deletes), idempotently.
+    def commit_batch(self, batch_df: DataFrame, batch_id: int) -> int:
+        """Apply one CDC micro-batch (upserts + deletes), idempotently;
+        returns the number of rows committed.
 
         batch_df must carry [key, OP_SEQ, OP_TYPE, payload...]. A
         replayed batch_id overwrites its own delta directory — the
         Spark-native version of the reference's commit-ordering
         protocol (A21): state converges no matter how often the batch
-        replays.
+        replays. Spark jobs: the write, plus one per shuffle stage in
+        batch_df's lineage (two in all for apply_batch's LWW-folded
+        ops); the manifest statistics ride the write (_write_commit).
         """
-        target = f"{self.delta_dir}/batch={batch_id}"
-        self._writer(batch_df).mode("overwrite").parquet(target)
-        self._write_manifest(target)
+        return self._write_commit(batch_df, f"{self.delta_dir}/batch={batch_id}")
 
     def commit_batches(self, batch_df: DataFrame, batch_col: str) -> list[int]:
         """Bulk commit: one micro-batch per distinct integer value of
         ``batch_col``, byte-equivalent on disk to a ``commit_batch``
         loop (same ``batch=<id>`` dirs, same manifest JSON) at O(1)
-        Spark jobs instead of O(batches)·4.
+        Spark jobs instead of O(batches)·2.
 
-        A loop pays per batch: one filtered write (re-scanning the
-        source), one read-back, one stats agg, one bloom collect — the
-        r6 judge measured the CDC metadata fixtures at ~55 s of the
-        sf0.01 sweep on exactly this. Here ONE partitioned write lands
-        every batch dir (shuffled on the batch key, so batches build in
-        parallel tasks, not sequential jobs), then one grouped agg and
-        one grouped bloom collect produce every manifest. Returns the
-        sorted batch ids committed.
+        A loop pays one filtered write per batch, each re-scanning the
+        source. Here ONE partitioned write lands every batch dir
+        (shuffled on the batch key, so batches build in parallel tasks,
+        not sequential jobs), then one grouped agg and one grouped bloom
+        collect produce every manifest. Returns the sorted batch ids
+        committed.
 
         Only rows with a non-NULL ``batch_col`` are committed (a NULL
         micro-batch id is meaningless). Falls back to the per-batch
@@ -422,73 +429,47 @@ class MorTable:
     def _write_manifests_bulk(self, batch_ids: list[int]) -> None:
         """Manifests for many freshly-written commits in two jobs.
 
-        Field-identical to ``_write_manifest`` run per dir: bounds come
-        from reading back the written files (same non-determinism
-        contract), stats/bloom expressions are the same, only grouped
-        by the ``batch`` partition column instead of run per-commit.
-        The bloom collect is bounded by _BLOOM_BITS rows per commit
-        regardless of commit size.
+        Field-identical to what ``_write_commit`` records per commit,
+        but the statistics come from reading back the written files,
+        grouped by the ``batch`` partition column: one grouped stats agg
+        and one grouped bloom collect. The bloom collect is bounded by
+        _BLOOM_BITS rows per commit regardless of commit size.
         """
         if not batch_ids:
             return
         df = self.spark.read.option("basePath", self.delta_dir).parquet(
             *[f"{self.delta_dir}/batch={b}" for b in batch_ids]
         )
-        stat_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.name not in (OP_SEQ, OP_TYPE, "batch")
-            and f.dataType.typeName() in ("long", "integer", "double",
-                                          "float", "string", "short", "byte")
-        ]
+        stat_cols = self._stat_cols(df.schema, exclude=("batch",))
         stats = {
             r["batch"]: r
             for r in df.groupBy("batch")
             .agg(
                 F.min(self.key).alias("lo"),
                 F.max(self.key).alias("hi"),
-                *[F.min(c).alias(f"lo_{c}") for c in stat_cols],
-                *[F.max(c).alias(f"hi_{c}") for c in stat_cols],
+                *[F.min(c).alias(f"lo{i}") for i, c in enumerate(stat_cols)],
+                *[F.max(c).alias(f"hi{i}") for i, c in enumerate(stat_cols)],
             )
             .collect()
         }
-        h = F.md5(F.col(self.key).cast("string"))
-        positions = [
-            F.conv(F.substring(h, start, ln), 16, 10).cast("long")
-            % self._BLOOM_BITS
-            for start, ln in self._BLOOM_SLICES
-        ]
         bitmaps: dict[int, int] = {}
         for r in (
             df.filter(F.col(self.key).isNotNull())
-            .select("batch", F.explode(F.array(*positions)).alias("pos"))
+            .select("batch", F.explode(F.array(*self._bloom_slices())).alias("pos"))
             .distinct()
             .collect()
         ):
             bitmaps[r["batch"]] = bitmaps.get(r["batch"], 0) | (1 << int(r.pos))
         for b in batch_ids:
-            row = stats.get(b)
-            col_stats = {}
-            if row is not None:
-                for c in stat_cols:
-                    lo_v, hi_v = row[f"lo_{c}"], row[f"hi_{c}"]
-                    if isinstance(lo_v, (int, float, str)) and isinstance(
-                        hi_v, (int, float, str)
-                    ):
-                        col_stats[c] = {"min": lo_v, "max": hi_v}
-            with open(f"{self.delta_dir}/batch={b}/{MANIFEST}", "w") as f:
-                json.dump(
-                    {
-                        "key": self.key,
-                        "min": row.lo if row is not None else None,
-                        "max": row.hi if row is not None else None,
-                        "bloom_bits": self._BLOOM_BITS,
-                        "bloom": format(bitmaps.get(b, 0), "x"),
-                        "spec": self.partition_col,
-                        "columns": col_stats,
-                    },
-                    f,
-                )
+            row = stats[b]  # every dir the partitioned write made has rows
+            self._dump_manifest(
+                f"{self.delta_dir}/batch={b}",
+                row.lo,
+                row.hi,
+                self._col_stats(row, stat_cols),
+                bitmaps.get(b, 0),
+                self.partition_col,
+            )
 
     # Bloom sizing: 4096 bits / 3 hashes ≈ 1.5% false-positive rate at
     # 500 distinct keys per commit; the bitmap is 512 bytes of manifest
@@ -496,10 +477,15 @@ class MorTable:
     _BLOOM_BITS = 4096
     _BLOOM_SLICES = ((1, 8), (9, 8), (17, 8))  # 1-based md5-hex substrings
 
+    # Column bounds are recorded for JSON-faithful types only: int,
+    # float and str round-trip exactly; any other column is omitted and
+    # pruning on it degrades to "keep".
+    _STAT_TYPES = ("long", "integer", "double", "float", "string", "short", "byte")
+
     @classmethod
     def _bloom_positions(cls, key_value) -> list[int] | None:
         """Python-side bit positions for a key — MUST mirror the
-        Spark-side expression in _write_manifest (same md5-hex
+        Spark-side expression in _bloom_slices (same md5-hex
         substrings of CAST(key AS STRING)).
 
         Only str and int keys are hashed: their Python rendering equals
@@ -520,86 +506,111 @@ class MorTable:
             for start, ln in cls._BLOOM_SLICES
         ]
 
-    def _write_manifest(self, target: str) -> None:
-        """Iceberg-manifest analog: per-commit key min/max stats plus a
-        key bloom filter (puffin-blob analog) for point-lookup skipping.
-
-        Iceberg's scan planning skips data files whose column bounds
-        cannot satisfy the predicate; the same contract here at
-        commit-dir granularity, and the bloom extends it to point
-        lookups whose key falls INSIDE a commit's [min,max] that the
-        commit doesn't actually contain. One tiny agg job per commit
-        (the stats ride the write, not the read path); the bloom's
-        distinct-position set is bounded at _BLOOM_BITS rows no matter
-        how large the commit, so the driver materializes ≤512 bytes.
-        Stats are advisory — a missing manifest or bloom only disables
-        skipping for that commit.
-
-        Bounds come from READING BACK the written files, not from
-        re-running the batch DataFrame's lineage — a non-deterministic
-        batch recomputed differently would otherwise yield bounds that
-        disagree with the files on disk, making skipping lossy.
-        """
-        df = self.spark.read.parquet(target)
-        # Column-level min/max for every orderable payload column
-        # (Iceberg manifests carry lower_bounds/upper_bounds per column;
-        # same idea at commit granularity). Only JSON-faithful types are
-        # recorded — int/float/str round-trip exactly; anything else is
-        # omitted and pruning for it degrades to "keep".
-        stat_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.name not in (OP_SEQ, OP_TYPE)
-            and f.dataType.typeName() in ("long", "integer", "double",
-                                          "float", "string", "short", "byte")
-        ]
-        col_stats_row = (
-            df.agg(
-                *[F.min(c).alias(f"lo_{c}") for c in stat_cols],
-                *[F.max(c).alias(f"hi_{c}") for c in stat_cols],
-            ).head()
-            if stat_cols
-            else None
-        )
-        col_stats = {}
-        if col_stats_row is not None:
-            for c in stat_cols:
-                lo_v, hi_v = col_stats_row[f"lo_{c}"], col_stats_row[f"hi_{c}"]
-                if isinstance(lo_v, (int, float, str)) and isinstance(
-                    hi_v, (int, float, str)
-                ):
-                    col_stats[c] = {"min": lo_v, "max": hi_v}
-        row = df.agg(F.min(self.key).alias("lo"), F.max(self.key).alias("hi")).head()
+    def _bloom_slices(self) -> list:
+        """Spark-side bloom bit positions of the key, one column per
+        hash slice; NULL for a NULL key (null keys set no bits)."""
         h = F.md5(F.col(self.key).cast("string"))
-        positions = [
+        return [
             F.conv(F.substring(h, start, ln), 16, 10).cast("long")
             % self._BLOOM_BITS
             for start, ln in self._BLOOM_SLICES
         ]
-        pos_rows = (
-            df.filter(F.col(self.key).isNotNull())
-            .select(F.explode(F.array(*positions)).alias("pos"))
-            .distinct()
-            .collect()
-        )
-        bitmap = 0
-        for r in pos_rows:
-            bitmap |= 1 << int(r.pos)
+
+    def _stat_cols(self, schema, exclude=()) -> list[str]:
+        return [
+            f.name
+            for f in schema.fields
+            if f.name not in (OP_SEQ, OP_TYPE, *exclude)
+            and f.dataType.typeName() in self._STAT_TYPES
+        ]
+
+    @staticmethod
+    def _col_stats(row, stat_cols: list[str]) -> dict:
+        """{column: {min, max}} from a stats row whose ``lo{i}``/``hi{i}``
+        bound ``stat_cols[i]``; all-NULL columns are omitted."""
+        col_stats = {}
+        for i, c in enumerate(stat_cols):
+            lo_v, hi_v = row[f"lo{i}"], row[f"hi{i}"]
+            if isinstance(lo_v, (int, float, str)) and isinstance(
+                hi_v, (int, float, str)
+            ):
+                col_stats[c] = {"min": lo_v, "max": hi_v}
+        return col_stats
+
+    def _dump_manifest(self, target, lo, hi, col_stats, bitmap: int, spec) -> None:
         with open(f"{target}/{MANIFEST}", "w") as f:
             json.dump(
                 {
                     "key": self.key,
-                    "min": row.lo,
-                    "max": row.hi,
+                    "min": lo,
+                    "max": hi,
                     "bloom_bits": self._BLOOM_BITS,
                     "bloom": format(bitmap, "x"),
                     # spec this commit was written under (partition
                     # evolution: later commits may use a different one)
-                    "spec": self.partition_col,
+                    "spec": spec,
                     "columns": col_stats,
                 },
                 f,
             )
+
+    def _write_commit(self, df: DataFrame, target: str) -> int:
+        """Overwrite ``target`` with one commit's rows and write its
+        manifest; returns the commit's row count. Spark jobs: the write,
+        plus one per shuffle stage in ``df``'s lineage; no read-back.
+
+        The manifest is the Iceberg-manifest analog: key min/max,
+        per-column lower/upper bounds, and a key bloom filter
+        (puffin-blob analog) so point lookups also skip commits whose
+        [min,max] straddles a key they do not hold. Stats are advisory:
+        a missing manifest or bloom only disables skipping.
+
+        Every statistic is an aggregate of one Observation on the
+        written DataFrame; the bloom is one ``collect_set`` per hash
+        slice, each bounded at _BLOOM_BITS values. This is as safe as
+        reading the files back: an Observation never recomputes the
+        lineage, it sees exactly the rows handed to the writer in the
+        same execution, so a non-deterministic batch cannot yield
+        bounds that disagree with disk. A retried task can only add
+        rows to the observed set, so bounds can only widen and the
+        bloom only gain bits; pruning stays free of false negatives.
+
+        The read path re-infers a partition column's type from its
+        directory names ("2024-01-01" reads back as a date, "7" as an
+        int), so that column keeps its bounds only when the inferred
+        type holds the same JSON values as the written one.
+        """
+        spec = self.partition_col
+        stat_cols = self._stat_cols(df.schema)
+        obs = Observation()
+        observed = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min(self.key).alias("lo"),
+            F.max(self.key).alias("hi"),
+            *[F.min(c).alias(f"lo{i}") for i, c in enumerate(stat_cols)],
+            *[F.max(c).alias(f"hi{i}") for i, c in enumerate(stat_cols)],
+            *[
+                F.collect_set(pos).alias(f"bloom{j}")
+                for j, pos in enumerate(self._bloom_slices())
+            ],
+        )
+        self._writer(observed).mode("overwrite").parquet(target)
+        row = obs.get
+        bitmap = 0
+        for j in range(len(self._BLOOM_SLICES)):
+            for pos in row[f"bloom{j}"]:
+                bitmap |= 1 << int(pos)
+        col_stats = self._col_stats(row, stat_cols)
+        if spec in col_stats:
+            # a schema-only read lists the dirs to infer the partition
+            # column's type, without the footer-reading job
+            read = self.spark.read.schema(df.drop(spec).schema).parquet(target)
+            types = {x.schema[spec].dataType.typeName() for x in (df, read)}
+            if len(types) > 1 and not types <= {"byte", "short", "integer", "long"}:
+                del col_stats[spec]
+        self._dump_manifest(target, row["lo"], row["hi"], col_stats, bitmap, spec)
+        return row["n"]
 
     def _manifest_spec(self, target: str):
         """Partition spec a commit was written under (None if unknown —
@@ -1147,9 +1158,7 @@ class MorTable:
             raise ValueError(
                 f"branch {name!r} head is {head}; new batch id must advance"
             )
-        target = f"{self.branches_dir}/{name}/batch={batch_id}"
-        self._writer(batch_df).mode("overwrite").parquet(target)
-        self._write_manifest(target)
+        self._write_commit(batch_df, f"{self.branches_dir}/{name}/batch={batch_id}")
         if batch_id not in ref["batches"]:
             refs = self._read_refs()
             refs["branches"][name]["batches"].append(batch_id)
@@ -1438,9 +1447,7 @@ class MorTable:
         """Write a batch to staging — invisible to snapshot()/changes().
         Re-staging the same id overwrites (idempotent, like
         commit_batch)."""
-        target = f"{self.staging_dir}/batch={batch_id}"
-        self._writer(batch_df).mode("overwrite").parquet(target)
-        self._write_manifest(target)
+        self._write_commit(batch_df, f"{self.staging_dir}/batch={batch_id}")
 
     def audit_batch(self, batch_id: int, checks=None, expect_min_rows: int = 1):
         """Validate a staged batch; returns a list of violation strings
@@ -1562,12 +1569,12 @@ class MorTable:
         if s.lo is not None and int(s.lo) <= cur_max:
             shift = cur_max + 1 - int(s.lo)
             rebase = f"{src}.rebase"
-            self._writer(
-                staged.withColumn(OP_SEQ, (F.col(OP_SEQ) + F.lit(shift)).cast("long"))
-            ).mode("overwrite").parquet(rebase)
+            self._write_commit(
+                staged.withColumn(OP_SEQ, (F.col(OP_SEQ) + F.lit(shift)).cast("long")),
+                rebase,
+            )
             shutil.rmtree(src)
             os.rename(rebase, src)
-            self._write_manifest(src)
         shutil.rmtree(dst, ignore_errors=True)
         os.rename(src, dst)
 

@@ -1554,9 +1554,11 @@ _SSD_STRIDE = 10
     "appears in >= 2 distinct documents, and each document reports "
     "its duplicated-shingle share. Boilerplate, mirrored pages and "
     "licence blocks light up at rates exact paragraph dedup misses "
-    "(they shift by a few chars). Everything shuffles as 16-byte "
-    "md5 values — document text never crosses the wire; per-doc "
-    "shingle count is bounded by n_chars/stride, so the explode is "
+    "(they shift by a few chars). Every keyed shuffle carries 16-byte "
+    "md5 values, never text; raw documents cross the wire once, in "
+    "the round-robin spread() exchange before the shingle explode, "
+    "which buys the explode its parallelism; per-doc shingle count "
+    "is bounded by n_chars/stride, so the explode is "
     "linear with a 1/10 constant; the dup set rides a shingle-keyed "
     "aggregation (same shape as q_dedup_chunks) and joins back "
     "co-partitioned on the hash. Counts exact, one division per "

@@ -18,48 +18,56 @@ the streaming path oracle-testable (SURVEY.md §2 design rule).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import shutil
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .table_store import OP_SEQ, OP_TYPE, MorTable
+from .table_store import OP_SEQ, OP_TYPE, MorTable, sql_ident
 
 UPSERT_OPS = ("insert", "update", "replace")
 DELETE_OPS = ("delete",)
 INVALIDATE_OPS = ("drop", "rename", "invalidate")
 
+# Per-batch expressions are SQL text: one string is one Py4J call however
+# large it is, where a node-by-node Column tree costs several round trips
+# per node (PySpark wraps each Column call to record its call site).
+SEQ = "CAST(op_seq AS BIGINT)"
 
-def split_invalidations(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(normal_ops, invalidation_ops) — invalidations trigger
-    re-initial-sync in the engine (reference A23)."""
-    normal = events.filter(~F.col("op_type").isin(*INVALIDATE_OPS))
-    invalid = events.filter(F.col("op_type").isin(*INVALIDATE_OPS))
-    return normal, invalid
+
+def op_in(ops: tuple[str, ...]) -> str:
+    """SQL predicate: op_type is one of ``ops`` (NULL for a NULL op_type,
+    like ``Column.isin``)."""
+    return "op_type IN (" + ", ".join(f"'{o}'" for o in ops) + ")"
+
+
+IS_INVALID = op_in(INVALIDATE_OPS)
+IS_NORMAL = f"NOT ({IS_INVALID})"
 
 
 def batch_to_ops(events: DataFrame, key: str = "doc_id") -> DataFrame:
     """Normalize a raw event batch into MorTable rows:
     [key, payload(full_doc JSON), _op_seq, _op] with within-batch LWW
     already applied (one op per key — the max op_seq wins)."""
-    ops = events.select(
-        F.col(key),
-        F.col("full_doc"),
-        F.col("ts"),
-        F.col("op_seq").cast("long").alias(OP_SEQ),
-        F.when(F.col("op_type").isin(*DELETE_OPS), F.lit("delete"))
-        .otherwise(F.lit("upsert"))
-        .alias(OP_TYPE),
+    k = sql_ident(key)
+    ops = events.selectExpr(
+        k,
+        "full_doc",
+        "ts",
+        f"{SEQ} AS {OP_SEQ}",
+        f"CASE WHEN {op_in(DELETE_OPS)} THEN 'delete' ELSE 'upsert' END AS {OP_TYPE}",
     )
     # within-batch LWW: hash agg on key, max_by op_seq (no sort/window)
-    row = F.struct("full_doc", "ts", OP_SEQ, OP_TYPE)
+    row = f"struct(full_doc, ts, {OP_SEQ}, {OP_TYPE})"
     return (
         ops.groupBy(key)
-        .agg(F.max_by(row, F.col(OP_SEQ)).alias("_r"))
-        .select(
-            key,
-            F.col("_r.full_doc").alias("full_doc"),
-            F.col("_r.ts").alias("ts"),
-            F.col(f"_r.{OP_SEQ}").alias(OP_SEQ),
-            F.col(f"_r.{OP_TYPE}").alias(OP_TYPE),
+        .agg(F.expr(f"max_by({row}, {OP_SEQ}) AS _r"))
+        .selectExpr(
+            k,
+            "_r.full_doc AS full_doc",
+            "_r.ts AS ts",
+            f"_r.{OP_SEQ} AS {OP_SEQ}",
+            f"_r.{OP_TYPE} AS {OP_TYPE}",
         )
     )
 
@@ -79,64 +87,76 @@ def apply_batch(
     (sync/quarantine.py) instead of committing as null rows; the
     resume position still advances past them — quarantined events are
     consumed, not retried. This adds one write job per batch ONLY when
-    bad rows exist in it.
+    bad rows exist in it; the dead letters are written after the
+    commit, and both land before the engine writes its checkpoint.
 
-    Four Spark jobs per warm batch without invalidations (pinned by
-    tests/test_job_budget.py). Two run the single-pass aggregation over
-    the raw events (invalidation count, normal count, max seq): its map
-    stage and its scalar result each run as a job under adaptive
-    execution. Two run the commit: the LWW groupBy's map stage, then
-    the write, which observes the post-LWW op count and every manifest
-    statistic as it runs (MorTable._write_commit), so neither costs a
-    job of its own. At a 60s trigger interval job-count-per-batch is
+    Two Spark jobs per warm batch, with or without ``quarantine_dir``
+    (pinned by tests/test_job_budget.py): the LWW groupBy's map stage,
+    then the write. The write carries both Observations: the batch
+    statistics (invalidation count and first seq, normal-op count, max
+    seqs, quarantined count), observed on the raw events upstream of
+    the normal-op filter, and every manifest statistic plus the post-LWW
+    op count (MorTable._write_commit). No pass over the events runs
+    before the commit. At a 60s trigger interval job-count-per-batch is
     the fixed overhead that bounds how many tables one driver can sync
     (reference A32's pool sizing concern, docs/design.md:480-499).
-    """
-    from .quarantine import split_malformed, write_quarantine
 
-    is_invalid = F.col("op_type").isin(*INVALIDATE_OPS)
-    seq = F.col("op_seq").cast("long")
-    q_max_seq = None
+    The statistics are only known once the write has run, so two rare
+    batches are corrected after it:
+
+    - no normal op (an empty batch, or invalidations only): the
+      ``batch=N`` dir the write made is removed, leaving the table as
+      if nothing had committed;
+    - an invalidation: ``batch=N`` is re-committed with only the ops
+      ordered before the first invalidation (4 jobs in all). This is
+      the idempotent overwrite a replay performs. Between the two
+      writes ``batch=N`` briefly holds ops ordered after the
+      invalidation; a crash there has not advanced the checkpoint, so
+      the batch replays and converges, and the engine truncates the
+      table right after an invalidation anyway. commit_batch's
+      overwrite is not atomic to begin with (ROADMAP item 2).
+    """
+    ok = "TRUE"
     if quarantine_dir is not None:
-        events, bad = split_malformed(events, key=key)
-        qstat = bad.agg(
-            F.count("*").alias("n"), F.max(seq).alias("mx")
-        ).head()
-        n_quarantined = qstat.n
-        q_max_seq = qstat.mx
-        if n_quarantined:
-            write_quarantine(bad, quarantine_dir, batch_id)
-    else:
-        n_quarantined = 0
-    pre = events.agg(
-        F.count(F.when(is_invalid, 1)).alias("n_invalid"),
-        F.min(F.when(is_invalid, seq)).alias("first_invalid_seq"),
-        F.count(F.when(~is_invalid, 1)).alias("n_normal"),
-        F.max(F.when(~is_invalid, seq)).alias("max_seq"),
-        F.max(seq).alias("max_seen_seq"),
-    ).head()
-    n_ops = 0
-    if pre.n_normal:
-        normal, _ = split_invalidations(events)
-        if pre.first_invalid_seq is not None:
-            # An invalidation mid-batch clears the table: only ops
-            # ordered BEFORE it may commit; the engine re-initial-syncs
-            # and then replays the trailing ops (op_seq > invalidate) as
-            # their own batch — matching the sequential-replay oracle.
-            normal = normal.filter(seq < F.lit(pre.first_invalid_seq))
-        n_ops = table.commit_batch(batch_to_ops(normal, key=key), batch_id)
-    max_seen = pre.max_seen_seq
-    if q_max_seq is not None and (max_seen is None or q_max_seq > max_seen):
+        from .quarantine import REASON_COL, tag_malformed, write_quarantine
+
+        # tag once; the batch statistics cover well-formed rows only
+        events = tag_malformed(events, key=key)
+        ok = f"{REASON_COL} IS NULL"
+    invalid, normal = f"{ok} AND {IS_INVALID}", f"{ok} AND {IS_NORMAL}"
+    obs = Observation()
+    observed = events.observe(
+        obs,
+        F.expr(f"count(CASE WHEN {invalid} THEN 1 END) AS n_invalid"),
+        F.expr(f"min(CASE WHEN {invalid} THEN {SEQ} END) AS first_invalid_seq"),
+        F.expr(f"count(CASE WHEN {normal} THEN 1 END) AS n_normal"),
+        F.expr(f"max(CASE WHEN {normal} THEN {SEQ} END) AS max_seq"),
         # quarantined events are consumed: resume must advance past them
-        max_seen = q_max_seq
+        F.expr(f"max({SEQ}) AS max_seen_seq"),
+        F.expr(f"count(CASE WHEN NOT ({ok}) THEN 1 END) AS n_quarantined"),
+    )
+    n_ops = table.commit_batch(batch_to_ops(observed.filter(normal), key=key), batch_id)
+    pre = obs.get
+    if not pre["n_normal"]:
+        shutil.rmtree(f"{table.delta_dir}/batch={batch_id}", ignore_errors=True)
+        n_ops = 0
+    elif pre["first_invalid_seq"] is not None:
+        # An invalidation mid-batch clears the table: only ops ordered
+        # BEFORE it may commit; the engine re-initial-syncs and then
+        # replays the trailing ops (op_seq > invalidate) as their own
+        # batch — matching the sequential-replay oracle.
+        cut = f"{normal} AND {SEQ} < {pre['first_invalid_seq']}"
+        n_ops = table.commit_batch(batch_to_ops(events.filter(cut), key=key), batch_id)
+    if pre["n_quarantined"]:
+        write_quarantine(events.filter(f"NOT ({ok})"), quarantine_dir, batch_id)
     return {
         "batch_id": batch_id,
         "n_ops": n_ops,
-        "n_quarantined": n_quarantined,
-        "max_op_seq": pre.max_seq,
-        "max_seen_seq": max_seen,
-        "n_invalidations": pre.n_invalid,
-        "first_invalid_seq": pre.first_invalid_seq,
+        "n_quarantined": pre["n_quarantined"],
+        "max_op_seq": pre["max_seq"],
+        "max_seen_seq": pre["max_seen_seq"],
+        "n_invalidations": pre["n_invalid"],
+        "first_invalid_seq": pre["first_invalid_seq"],
     }
 
 
@@ -163,21 +183,30 @@ def apply_batch_wap(
     is an engine-level decision) — route streams that can carry them
     through apply_batch/SyncEngine instead; this guard raises so the
     mistake is loud.
+
+    The invalidation guard and the event count ride the staging write
+    as an Observation, so no pass over the events precedes it; a batch
+    that fails the guard, or is empty, is staged and then aborted.
+    Staging is invisible to readers, so none can tell the difference.
     """
-    stats = events.agg(
-        F.count(F.when(F.col("op_type").isin(*INVALIDATE_OPS), 1)).alias("n_invalid"),
-        F.count("*").alias("n"),
-        F.max(F.col("op_seq").cast("long")).alias("mx"),
-    ).head()
-    if stats.n_invalid:
+    obs = Observation()
+    observed = events.observe(
+        obs,
+        F.expr(f"count(CASE WHEN {IS_INVALID} THEN 1 END) AS n_invalid"),
+        F.expr("count(1) AS n"),
+        F.expr(f"max({SEQ}) AS mx"),
+    )
+    table.stage_batch(batch_to_ops(observed, key=key), batch_id)
+    stats = obs.get
+    if stats["n_invalid"]:
+        table.abort_batch(batch_id)
         raise ValueError(
             "apply_batch_wap cannot handle invalidation ops "
             "(drop/rename/invalidate) — use apply_batch/SyncEngine"
         )
-    if not stats.n:
+    if not stats["n"]:
+        table.abort_batch(batch_id)
         return {"published": True, "n_events": 0, "max_seq": None, "problems": []}
-    ops = batch_to_ops(events, key=key)
-    table.stage_batch(ops, batch_id)
     problems = table.audit_batch(batch_id, checks=checks, expect_min_rows=1)
     if problems:
         table.abort_batch(batch_id)
@@ -190,14 +219,14 @@ def apply_batch_wap(
             write_quarantine(bad, quarantine_dir, batch_id)
         return {
             "published": False,
-            "n_events": stats.n,
-            "max_seq": stats.mx,
+            "n_events": stats["n"],
+            "max_seq": stats["mx"],
             "problems": problems,
         }
     table.publish_batch(batch_id)
     return {
         "published": True,
-        "n_events": stats.n,
-        "max_seq": stats.mx,
+        "n_events": stats["n"],
+        "max_seq": stats["mx"],
         "problems": [],
     }

@@ -84,12 +84,10 @@ def observed_batch(df: DataFrame, ops: tuple[str, ...] = ("insert", "update", "r
     an action on observed_df has completed.
     """
     obs = Observation("cdc_batch")
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for op in ops:
-        metrics.append(
-            F.sum(F.when(F.col("op_type") == op, 1).otherwise(0)).alias(f"n_{op}")
-        )
-    return df.observe(obs, *metrics), obs
+    metrics = ["count(1) AS n_rows"] + [
+        f"sum(CASE WHEN op_type = '{op}' THEN 1 ELSE 0 END) AS n_{op}" for op in ops
+    ]
+    return df.observe(obs, *[F.expr(m) for m in metrics]), obs
 
 
 def apply_with_metrics(

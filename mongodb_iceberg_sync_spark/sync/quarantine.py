@@ -20,33 +20,41 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .apply import DELETE_OPS
+from .apply import DELETE_OPS, op_in
+from .table_store import sql_ident
 
 REASON_COL = "_dlq_reason"
 
 
-def _reason(key: str, doc_col: str) -> F.Column:
-    """NULL for well-formed rows, else the first matching reason.
+def _reason(key: str, doc_col: str) -> str:
+    """SQL: NULL for well-formed rows, else the first matching reason.
 
     Deletes legitimately carry no document (the tombstone is the key),
     so doc checks apply only to upsert-shaped ops.
     """
-    is_delete = F.col("op_type").isin(*DELETE_OPS)
-    parsed = F.from_json(F.col(doc_col), "map<string,string>")
+    not_delete, doc = f"NOT ({op_in(DELETE_OPS)})", sql_ident(doc_col)
     return (
-        F.when(F.col(key).isNull(), F.lit("missing_key"))
-        .when(~is_delete & F.col(doc_col).isNull(), F.lit("missing_document"))
-        .when(~is_delete & parsed.isNull(), F.lit("malformed_json"))
+        f"CASE WHEN {sql_ident(key)} IS NULL THEN 'missing_key' "
+        f"WHEN {not_delete} AND {doc} IS NULL THEN 'missing_document' "
+        f"WHEN {not_delete} AND from_json({doc}, 'map<string,string>') IS NULL "
+        "THEN 'malformed_json' END"
     )
+
+
+def tag_malformed(
+    events: DataFrame, key: str = "doc_id", doc_col: str = "full_doc"
+) -> DataFrame:
+    """``events`` plus REASON_COL: NULL for well-formed rows."""
+    return events.withColumn(REASON_COL, F.expr(_reason(key, doc_col)))
 
 
 def split_malformed(
     events: DataFrame, key: str = "doc_id", doc_col: str = "full_doc"
 ) -> tuple[DataFrame, DataFrame]:
     """(well_formed, quarantined) — quarantined rows carry REASON_COL."""
-    tagged = events.withColumn(REASON_COL, _reason(key, doc_col))
-    good = tagged.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
-    bad = tagged.filter(F.col(REASON_COL).isNotNull())
+    tagged = tag_malformed(events, key, doc_col)
+    good = tagged.filter(f"{REASON_COL} IS NULL").drop(REASON_COL)
+    bad = tagged.filter(f"{REASON_COL} IS NOT NULL")
     return good, bad
 
 

@@ -43,6 +43,11 @@ MANIFEST = "_manifest.json"  # per-commit key min/max stats (data skipping)
 COMPACTION_MARK = "_compaction.json"  # last batch id folded into base
 
 
+def sql_ident(name: str) -> str:
+    """``name`` quoted as a SQL identifier, for expressions built as text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 class SnapshotExpiredError(ValueError):
     """VERSION AS OF predates the last compaction — like Iceberg reading
     an expired snapshot, this FAILS instead of silently returning the
@@ -444,18 +449,14 @@ class MorTable:
         stats = {
             r["batch"]: r
             for r in df.groupBy("batch")
-            .agg(
-                F.min(self.key).alias("lo"),
-                F.max(self.key).alias("hi"),
-                *[F.min(c).alias(f"lo{i}") for i, c in enumerate(stat_cols)],
-                *[F.max(c).alias(f"hi{i}") for i, c in enumerate(stat_cols)],
-            )
+            .agg(*[F.expr(e) for e in self._stat_exprs(stat_cols)])
             .collect()
         }
         bitmaps: dict[int, int] = {}
+        slices = ", ".join(self._bloom_slices())
         for r in (
-            df.filter(F.col(self.key).isNotNull())
-            .select("batch", F.explode(F.array(*self._bloom_slices())).alias("pos"))
+            df.selectExpr("batch", f"explode(array({slices})) AS pos")
+            .filter("pos IS NOT NULL")
             .distinct()
             .collect()
         ):
@@ -506,14 +507,24 @@ class MorTable:
             for start, ln in cls._BLOOM_SLICES
         ]
 
-    def _bloom_slices(self) -> list:
-        """Spark-side bloom bit positions of the key, one column per
-        hash slice; NULL for a NULL key (null keys set no bits)."""
-        h = F.md5(F.col(self.key).cast("string"))
+    def _bloom_slices(self) -> list[str]:
+        """Spark-side bloom bit positions of the key as SQL text, one
+        expression per hash slice; NULL for a NULL key (null keys set
+        no bits)."""
+        h = f"md5(CAST({sql_ident(self.key)} AS STRING))"
         return [
-            F.conv(F.substring(h, start, ln), 16, 10).cast("long")
-            % self._BLOOM_BITS
+            f"CAST(conv(substring({h}, {start}, {ln}), 16, 10) AS BIGINT)"
+            f" % {self._BLOOM_BITS}"
             for start, ln in self._BLOOM_SLICES
+        ]
+
+    def _stat_exprs(self, stat_cols: list[str]) -> list[str]:
+        """SQL aggregates of a commit's key bounds (lo/hi) and column
+        bounds (lo{i}/hi{i} for ``stat_cols[i]``)."""
+        cols = [sql_ident(c) for c in (self.key, *stat_cols)]
+        names = ["", *range(len(stat_cols))]
+        return [f"min({c}) AS lo{n}" for c, n in zip(cols, names)] + [
+            f"max({c}) AS hi{n}" for c, n in zip(cols, names)
         ]
 
     def _stat_cols(self, schema, exclude=()) -> list[str]:
@@ -585,13 +596,10 @@ class MorTable:
         obs = Observation()
         observed = df.observe(
             obs,
-            F.count(F.lit(1)).alias("n"),
-            F.min(self.key).alias("lo"),
-            F.max(self.key).alias("hi"),
-            *[F.min(c).alias(f"lo{i}") for i, c in enumerate(stat_cols)],
-            *[F.max(c).alias(f"hi{i}") for i, c in enumerate(stat_cols)],
+            F.expr("count(1) AS n"),
+            *[F.expr(e) for e in self._stat_exprs(stat_cols)],
             *[
-                F.collect_set(pos).alias(f"bloom{j}")
+                F.expr(f"collect_set({pos}) AS bloom{j}")
                 for j, pos in enumerate(self._bloom_slices())
             ],
         )

@@ -1,13 +1,24 @@
 """Job budgets stated in docstrings are checked claims: a warm,
-unpartitioned ``apply_batch`` without invalidations runs at most four
-Spark jobs and ``MorTable.commit_batch`` at most two. Jobs are counted
+unpartitioned ``apply_batch`` without invalidations runs at most two
+Spark jobs, with or without a quarantine dir, ``MorTable.commit_batch``
+at most two and ``apply_batch_wap`` at most twelve. Jobs are counted
 with a job group and ``statusTracker``, the same attribution the
-benchmark's traced run uses."""
+benchmark's traced run uses.
+
+The driver-side cost of building a batch's plan is pinned too, in Py4J
+round trips: every Column call costs several (PySpark records its call
+site), so the per-batch expressions are SQL text."""
 
 from __future__ import annotations
 
+import py4j.clientserver
+
 from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df, make_events
-from mongodb_iceberg_sync_spark.sync.apply import apply_batch, batch_to_ops
+from mongodb_iceberg_sync_spark.sync.apply import (
+    apply_batch,
+    apply_batch_wap,
+    batch_to_ops,
+)
 from mongodb_iceberg_sync_spark.sync.table_store import MorTable
 
 
@@ -27,21 +38,61 @@ def _batch(spark, b):
     )
 
 
-def test_apply_batch_runs_at_most_four_jobs(spark, tmp_path):
+def test_apply_batch_runs_at_most_two_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "apply"), key="doc_id")
     for b in range(2):  # warm: first batches pay one-off planning jobs
         apply_batch(t, _batch(spark, b), b)
     stats, n = _jobs(spark, "budget-apply", lambda: apply_batch(t, _batch(spark, 2), 2))
     assert stats["n_ops"] == 40 and stats["n_invalidations"] == 0
-    assert n <= 4, f"apply_batch ran {n} Spark jobs"
+    assert n <= 2, f"apply_batch ran {n} Spark jobs"
 
 
-def test_commit_batch_runs_at_most_two_jobs(spark, tmp_path):
-    t = MorTable(spark, str(tmp_path / "commit"), key="doc_id")
+def test_quarantine_clean_batch_runs_at_most_two_jobs(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "apply"), key="doc_id")
+    qdir = str(tmp_path / "dlq")
     for b in range(2):
-        t.commit_batch(batch_to_ops(_batch(spark, b)), b)
-    # the LWW-folded ops apply_batch hands over: one shuffle, one write
-    ops = batch_to_ops(_batch(spark, 2))
-    n_rows, n = _jobs(spark, "budget-commit", lambda: t.commit_batch(ops, 2))
-    assert n_rows == 40
-    assert n <= 2, f"commit_batch ran {n} Spark jobs"
+        apply_batch(t, _batch(spark, b), b, quarantine_dir=qdir)
+    stats, n = _jobs(
+        spark,
+        "budget-quarantine",
+        lambda: apply_batch(t, _batch(spark, 2), 2, quarantine_dir=qdir),
+    )
+    assert stats["n_ops"] == 40 and stats["n_quarantined"] == 0
+    assert n <= 2, f"apply_batch with a quarantine dir ran {n} Spark jobs"
+
+
+def test_apply_batch_wap_runs_at_most_twelve_jobs(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
+    for b in range(2):
+        apply_batch_wap(t, _batch(spark, b), b)
+    # publish_batch scans the whole table for its max op_seq, so the
+    # count grows with the number of commits; this is the third batch
+    stats, n = _jobs(
+        spark, "budget-wap", lambda: apply_batch_wap(t, _batch(spark, 2), 2)
+    )
+    assert stats["published"] and stats["n_events"] == 120
+    assert n <= 12, f"apply_batch_wap ran {n} Spark jobs"
+
+
+def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):
+    t = MorTable(spark, str(tmp_path / "apply"), key="doc_id")
+    for b in range(2):
+        apply_batch(t, _batch(spark, b), b)
+    events = _batch(spark, 2)
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        # proxy releases ("m" commands) free objects of earlier batches
+        # whenever Python drops them; they are not this batch's plan
+        if not command.startswith("m\n"):
+            calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counted
+    )
+    stats = apply_batch(t, events, 2)
+    monkeypatch.undo()
+    assert stats["n_ops"] == 40
+    assert 0 < len(calls) <= 300, f"apply_batch made {len(calls)} Py4J round trips"

@@ -61,6 +61,17 @@ def test_quarantine_clean_batch_runs_at_most_two_jobs(spark, tmp_path):
     assert n <= 2, f"apply_batch with a quarantine dir ran {n} Spark jobs"
 
 
+def test_commit_batch_runs_at_most_two_jobs(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "commit"), key="doc_id")
+    for b in range(2):
+        t.commit_batch(batch_to_ops(_batch(spark, b)), b)
+    # the LWW-folded ops apply_batch hands over: one shuffle, one write
+    ops = batch_to_ops(_batch(spark, 2))
+    n_rows, n = _jobs(spark, "budget-commit", lambda: t.commit_batch(ops, 2))
+    assert n_rows == 40
+    assert n <= 2, f"commit_batch ran {n} Spark jobs"
+
+
 def test_apply_batch_wap_runs_at_most_twelve_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
     for b in range(2):

@@ -7,7 +7,7 @@ with IVM delta algebra (sync/ivm.py) — the aggregate is updated in
 O(batch) without rescanning the snapshot, and both states converge
 under batch replay:
 
-  - snapshot: MorTable's overwrite-own-delta-dir protocol (A21)
+  - snapshot: MorTable's replace-own-delta-dir protocol (A21)
   - aggregate: versioned `agg/batch=N` dirs; a replayed batch N
     recomputes FROM THE SAME INPUTS (agg/batch=N-1 + the batch) and
     overwrites its own dir — pure function of (prev state, batch), so

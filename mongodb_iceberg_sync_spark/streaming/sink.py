@@ -3,10 +3,11 @@
 
 This is the steady-state write path of the sync engine: each
 micro-batch of CDC events is LWW-deduped within the batch and committed
-keyed by batch_id — Spark may replay a batch after failure, and the
-replay overwrites the same delta directory, converging to the same
-state (the Spark-native equivalent of the reference's commit-ordering
-protocol, docs/design.md:339-348).
+keyed by batch_id: staged with its manifest, then published as the
+batch's delta directory by rename. Spark may replay a batch after
+failure, and the replay replaces that same directory, converging to the
+same state (the Spark-native equivalent of the reference's
+commit-ordering protocol, docs/design.md:339-348).
 """
 
 from __future__ import annotations
@@ -91,7 +92,7 @@ def foreach_batch_branch(
     micro-batch can see, at the cost of publishing later.
 
     The branch must exist; micro-batch N lands as branch commit
-    fork+1+N so replayed micro-batches overwrite their own commit dir
+    fork+1+N so replayed micro-batches replace their own commit dir
     (same idempotence contract as commit_batch). Invalidation ops are
     rejected per-batch (engine-level decision, same guard as
     apply_batch_wap)."""

@@ -109,12 +109,12 @@ def apply_batch(
       if nothing had committed;
     - an invalidation: ``batch=N`` is re-committed with only the ops
       ordered before the first invalidation (4 jobs in all). This is
-      the idempotent overwrite a replay performs. Between the two
-      writes ``batch=N`` briefly holds ops ordered after the
-      invalidation; a crash there has not advanced the checkpoint, so
-      the batch replays and converges, and the engine truncates the
-      table right after an invalidation anyway. commit_batch's
-      overwrite is not atomic to begin with (ROADMAP item 2).
+      the idempotent replacement a replay performs. Between the two
+      commits ``batch=N`` holds ops ordered after the invalidation; a
+      crash there has not advanced the checkpoint, so the batch
+      replays and converges, and the engine truncates the table right
+      after an invalidation anyway. Each commit is whole on its own:
+      commit_batch publishes a dir only once its manifest is written.
     """
     ok = "TRUE"
     if quarantine_dir is not None:

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .apply import DELETE_OPS, op_in
+from .apply import DELETE_OPS, IS_INVALID, op_in
 from .table_store import sql_ident
 
 REASON_COL = "_dlq_reason"
@@ -29,12 +29,15 @@ REASON_COL = "_dlq_reason"
 def _reason(key: str, doc_col: str) -> str:
     """SQL: NULL for well-formed rows, else the first matching reason.
 
-    Deletes legitimately carry no document (the tombstone is the key),
-    so doc checks apply only to upsert-shaped ops.
+    Invalidations carry no key or document and always pass: the engine
+    must see them to truncate. Deletes legitimately carry no document
+    (the tombstone is the key), so doc checks apply only to upsert-shaped
+    ops.
     """
     not_delete, doc = f"NOT ({op_in(DELETE_OPS)})", sql_ident(doc_col)
     return (
-        f"CASE WHEN {sql_ident(key)} IS NULL THEN 'missing_key' "
+        f"CASE WHEN {IS_INVALID} THEN NULL "
+        f"WHEN {sql_ident(key)} IS NULL THEN 'missing_key' "
         f"WHEN {not_delete} AND {doc} IS NULL THEN 'missing_document' "
         f"WHEN {not_delete} AND from_json({doc}, 'map<string,string>') IS NULL "
         "THEN 'malformed_json' END"

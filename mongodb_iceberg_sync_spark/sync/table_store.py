@@ -9,14 +9,17 @@ parquet, structured exactly like Iceberg would:
   {table}/base/            — compacted data files ("data files")
   {table}/deltas/batch=N/  — per-commit upsert+tombstone files
                              ("equality delete files" + appended rows)
+  {table}/staging/         — commits being written; never read
 
 - Read  = base ∪ deltas, last-writer-wins by (key, op_seq), tombstones
   dropped — i.e. the MoR merge an Iceberg reader performs.
-- Write = one delta directory per batch_id; replaying a batch
-  overwrites the same directory ⇒ idempotent commits (reference A21
-  at-least-once protocol, docs/design.md:339-348). Each commit dir
-  carries a manifest (key bounds, column bounds, key bloom) whose
-  statistics the write itself observes — no read-back job.
+- Write = one delta directory per batch_id, under one protocol: stage
+  the rows and their manifest (key bounds, column bounds, key bloom,
+  observed by the write itself — no read-back job) under staging/,
+  then publish the finished dir by rename. A reader sees a whole
+  commit with its manifest or none of it, and a replayed batch
+  replaces its own directory ⇒ idempotent commits (reference A21
+  at-least-once protocol, docs/design.md:339-348).
 - Compact = rewrite base from the merged view, clear deltas (reference
   A24 RewriteDataFiles, docs/design.md:394-400).
 
@@ -32,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +45,7 @@ OP_TYPE = "_op"  # upsert | delete
 TOMBSTONE = "delete"
 MANIFEST = "_manifest.json"  # per-commit key min/max stats (data skipping)
 COMPACTION_MARK = "_compaction.json"  # last batch id folded into base
+_BULK_COL = "__bulk_batch"  # commit_batches' staged partition column
 
 
 def sql_ident(name: str) -> str:
@@ -164,27 +169,24 @@ class MorTable:
     # delete handling (equality deletes); this adds the v2 positional
     # half of that spec.
 
-    def _pos_delete_ids(self) -> list[int]:
-        if not os.path.isdir(self.pos_delete_dir):
+    @staticmethod
+    def _ids(root: str, prefix: str) -> list[int]:
+        """Sorted ids of the ``<prefix><id>`` dirs under ``root``."""
+        if not os.path.isdir(root):
             return []
         return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.pos_delete_dir)
-            if d.startswith("delete=")
+            int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith(prefix)
         )
+
+    def _pos_delete_ids(self) -> list[int]:
+        return self._ids(self.pos_delete_dir, "delete=")
 
     @property
     def eq_delete_dir(self) -> str:
         return f"{self.path}/eq_deletes"
 
     def _eq_delete_ids(self) -> list[int]:
-        if not os.path.isdir(self.eq_delete_dir):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.eq_delete_dir)
-            if d.startswith("delete=")
-        )
+        return self._ids(self.eq_delete_dir, "delete=")
 
     def delete_equality(
         self, values_df: DataFrame, batch_id: int
@@ -362,15 +364,16 @@ class MorTable:
         """Apply one CDC micro-batch (upserts + deletes), idempotently;
         returns the number of rows committed.
 
-        batch_df must carry [key, OP_SEQ, OP_TYPE, payload...]. A
-        replayed batch_id overwrites its own delta directory — the
-        Spark-native version of the reference's commit-ordering
-        protocol (A21): state converges no matter how often the batch
-        replays. Spark jobs: the write, plus one per shuffle stage in
-        batch_df's lineage (two in all for apply_batch's LWW-folded
-        ops); the manifest statistics ride the write (_write_commit).
+        batch_df must carry [key, OP_SEQ, OP_TYPE, payload...]. It is
+        staged with its manifest, then published (_publish); a replayed
+        batch_id replaces its own delta directory — the Spark-native
+        version of the reference's commit-ordering protocol (A21): state
+        converges no matter how often the batch replays. Spark jobs: the write,
+        plus one per shuffle stage in batch_df's lineage (two in all for
+        apply_batch's LWW-folded ops); the manifest statistics ride the
+        write (_write_commit).
         """
-        return self._write_commit(batch_df, f"{self.delta_dir}/batch={batch_id}")
+        return self._commit(batch_df, f"{self.delta_dir}/batch={batch_id}")
 
     def commit_batches(self, batch_df: DataFrame, batch_col: str) -> list[int]:
         """Bulk commit: one micro-batch per distinct integer value of
@@ -379,24 +382,21 @@ class MorTable:
         Spark jobs instead of O(batches)·2.
 
         A loop pays one filtered write per batch, each re-scanning the
-        source. Here ONE partitioned write lands every batch dir
+        source. Here ONE partitioned write stages every batch dir
         (shuffled on the batch key, so batches build in parallel tasks,
-        not sequential jobs), then one grouped agg and one grouped bloom
-        collect produce every manifest. Returns the sorted batch ids
-        committed.
+        not sequential jobs), _write_manifests_bulk adds every manifest
+        while the dirs are still staged, and each dir is then published
+        by rename, so each batch is whole on its own, as in the loop.
+        Spark jobs: one per shuffle stage in batch_df's lineage, the
+        batch-key shuffle, the write, and five for the manifests.
+        Returns the sorted batch ids committed.
 
         Only rows with a non-NULL ``batch_col`` are committed (a NULL
         micro-batch id is meaningless). Falls back to the per-batch
         loop under a partition spec, where the nested
         ``partitionBy(batch, spec)`` layout would not match the loop's.
         """
-        payload_has_batch = "batch" in [
-            c for c in batch_df.columns if c != batch_col
-        ]
-        if self.partition_col is not None or payload_has_batch:
-            # partition spec: the nested partitionBy layout would differ
-            # from the loop's; payload column literally named "batch":
-            # it would collide with the read-back partition column
+        if self.partition_col is not None:
             ids = sorted(
                 r[0]
                 for r in batch_df.filter(F.col(batch_col).isNotNull())
@@ -407,64 +407,62 @@ class MorTable:
                     batch_df.filter(F.col(batch_col) == b).drop(batch_col), b
                 )
             return ids
-        staging = f"{self.path}/.bulk_staging"
-        shutil.rmtree(staging, ignore_errors=True)
+        staging = f"{self.staging_dir}/bulk"
         (
             batch_df.filter(F.col(batch_col).isNotNull())
-            .withColumnRenamed(batch_col, "__bulk_batch")
-            .repartition("__bulk_batch")
+            .withColumnRenamed(batch_col, _BULK_COL)
+            .repartition(_BULK_COL)
             .write.mode("overwrite")
-            .partitionBy("__bulk_batch")
+            .partitionBy(_BULK_COL)
             .parquet(staging)
         )
-        ids: list[int] = []
-        for d in os.listdir(staging):
-            if not d.startswith("__bulk_batch="):
-                continue  # _SUCCESS marker
-            b = int(d.split("=", 1)[1])
-            target = f"{self.delta_dir}/batch={b}"
-            shutil.rmtree(target, ignore_errors=True)
-            os.rename(f"{staging}/{d}", target)
-            ids.append(b)
+        ids = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(staging)
+            if d.startswith(f"{_BULK_COL}=")  # not the _SUCCESS marker
+        )
+        self._write_manifests_bulk(staging, ids)
+        for b in ids:
+            self._publish(f"{staging}/{_BULK_COL}={b}", f"{self.delta_dir}/batch={b}")
         shutil.rmtree(staging, ignore_errors=True)
-        ids.sort()
-        self._write_manifests_bulk(ids)
         return ids
 
-    def _write_manifests_bulk(self, batch_ids: list[int]) -> None:
-        """Manifests for many freshly-written commits in two jobs.
+    def _write_manifests_bulk(self, staging: str, batch_ids: list[int]) -> None:
+        """Manifests for many commits staged by one partitioned write.
 
         Field-identical to what ``_write_commit`` records per commit,
-        but the statistics come from reading back the written files,
-        grouped by the ``batch`` partition column: one grouped stats agg
-        and one grouped bloom collect. The bloom collect is bounded by
+        but the statistics come from reading back the staged files,
+        grouped by their partition column: a schema read, one grouped
+        stats agg and one grouped bloom collect (each a map stage and a
+        result job), five jobs in all. The bloom collect is bounded by
         _BLOOM_BITS rows per commit regardless of commit size.
         """
         if not batch_ids:
             return
-        df = self.spark.read.option("basePath", self.delta_dir).parquet(
-            *[f"{self.delta_dir}/batch={b}" for b in batch_ids]
+        df = self.spark.read.option("basePath", staging).parquet(
+            *[f"{staging}/{_BULK_COL}={b}" for b in batch_ids]
         )
-        stat_cols = self._stat_cols(df.schema, exclude=("batch",))
+        stat_cols = self._stat_cols(df.schema, exclude=(_BULK_COL,))
         stats = {
-            r["batch"]: r
-            for r in df.groupBy("batch")
+            r[_BULK_COL]: r
+            for r in df.groupBy(_BULK_COL)
             .agg(*[F.expr(e) for e in self._stat_exprs(stat_cols)])
             .collect()
         }
         bitmaps: dict[int, int] = {}
         slices = ", ".join(self._bloom_slices())
         for r in (
-            df.selectExpr("batch", f"explode(array({slices})) AS pos")
+            df.selectExpr(_BULK_COL, f"explode(array({slices})) AS pos")
             .filter("pos IS NOT NULL")
             .distinct()
             .collect()
         ):
-            bitmaps[r["batch"]] = bitmaps.get(r["batch"], 0) | (1 << int(r.pos))
+            b = r[_BULK_COL]
+            bitmaps[b] = bitmaps.get(b, 0) | (1 << int(r.pos))
         for b in batch_ids:
             row = stats[b]  # every dir the partitioned write made has rows
             self._dump_manifest(
-                f"{self.delta_dir}/batch={b}",
+                f"{staging}/{_BULK_COL}={b}",
                 row.lo,
                 row.hi,
                 self._col_stats(row, stat_cols),
@@ -565,9 +563,39 @@ class MorTable:
                 f,
             )
 
-    def _write_commit(self, df: DataFrame, target: str) -> int:
-        """Overwrite ``target`` with one commit's rows and write its
-        manifest; returns the commit's row count. Spark jobs: the write,
+    def _commit(self, df: DataFrame, dst: str) -> int:
+        """Stage a commit bound for ``dst``, then publish it; returns its
+        row count."""
+        staged = self._staged(dst)
+        n = self._write_commit(df, staged)
+        self._publish(staged, dst)
+        return n
+
+    def _staged(self, dst: str) -> str:
+        """Staging dir of a commit bound for ``dst``; fixed, so a retry
+        overwrites its crashed attempt."""
+        rel = os.path.relpath(dst, self.path).replace("/", "-")
+        return f"{self.staging_dir}/commit-{rel}"
+
+    def _publish(self, src: str, dst: str) -> None:
+        """Make the finished commit dir ``src`` (data and manifest) visible
+        as ``dst`` — the only code that moves a commit dir into deltas/
+        or branches/<name>/. A new id is one rename; a replaced id is
+        first moved aside into staging/, so it is missing only between
+        two renames (a crash there: the batch replays, its checkpoint
+        unwritten)."""
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        old = f"{self._staged(dst)}.old"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(dst):
+            os.rename(dst, old)
+        os.rename(src, dst)
+        shutil.rmtree(old, ignore_errors=True)
+
+    def _write_commit(self, df: DataFrame, staged: str) -> int:
+        """Write one commit's rows and its manifest to ``staged``, a dir
+        under staging/ that no reader opens (overwriting an earlier
+        attempt); returns the commit's row count. Spark jobs: the write,
         plus one per shuffle stage in ``df``'s lineage; no read-back.
 
         The manifest is the Iceberg-manifest analog: key min/max,
@@ -603,7 +631,7 @@ class MorTable:
                 for j, pos in enumerate(self._bloom_slices())
             ],
         )
-        self._writer(observed).mode("overwrite").parquet(target)
+        self._writer(observed).mode("overwrite").parquet(staged)
         row = obs.get
         bitmap = 0
         for j in range(len(self._BLOOM_SLICES)):
@@ -613,54 +641,37 @@ class MorTable:
         if spec in col_stats:
             # a schema-only read lists the dirs to infer the partition
             # column's type, without the footer-reading job
-            read = self.spark.read.schema(df.drop(spec).schema).parquet(target)
+            read = self.spark.read.schema(df.drop(spec).schema).parquet(staged)
             types = {x.schema[spec].dataType.typeName() for x in (df, read)}
             if len(types) > 1 and not types <= {"byte", "short", "integer", "long"}:
                 del col_stats[spec]
-        self._dump_manifest(target, row["lo"], row["hi"], col_stats, bitmap, spec)
+        self._dump_manifest(staged, row["lo"], row["hi"], col_stats, bitmap, spec)
         return row["n"]
 
-    def _manifest_spec(self, target: str):
-        """Partition spec a commit was written under (None if unknown —
-        pre-evolution manifests lack the field and were written under
-        whatever spec was current then; treated as unpartitioned for
-        layout purposes, which per-dir reads make irrelevant)."""
+    def _manifest(self, path: str) -> dict:
+        """The manifest of the commit dir ``path``; {} when it is missing
+        or unreadable. Stats are advisory: every use of a missing field
+        degrades to "keep" (no skipping)."""
         try:
-            with open(f"{target}/{MANIFEST}") as f:
-                return json.load(f).get("spec")
+            with open(f"{path}/{MANIFEST}") as f:
+                m = json.load(f)
         except (OSError, ValueError):
-            return None
+            return {}
+        return m if isinstance(m, dict) else {}
 
-    def _bloom_may_contain(self, target: str, key_value) -> bool:
+    def _bloom_may_contain(self, manifest: dict, key_value) -> bool:
         """False-negative-free membership: False ⇒ the commit definitely
         lacks the key; True on any doubt (missing/foreign manifest)."""
+        if manifest.get("bloom_bits") != self._BLOOM_BITS:
+            return True
         try:
-            with open(f"{target}/{MANIFEST}") as f:
-                m = json.load(f)
-            if m.get("bloom_bits") != self._BLOOM_BITS or "bloom" not in m:
-                return True
-            bitmap = int(m["bloom"], 16)
-        except (OSError, ValueError, KeyError):
+            bitmap = int(manifest["bloom"], 16)
+        except (KeyError, TypeError, ValueError):
             return True
         positions = self._bloom_positions(key_value)
         if positions is None:  # unhashable key type: never skip on bloom
             return True
         return all(bitmap >> p & 1 for p in positions)
-
-    def _manifest_bounds(self, target: str):
-        try:
-            with open(f"{target}/{MANIFEST}") as f:
-                m = json.load(f)
-            return m["min"], m["max"]
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _manifest_column_stats(self, target: str) -> dict:
-        try:
-            with open(f"{target}/{MANIFEST}") as f:
-                return json.load(f).get("columns") or {}
-        except (OSError, ValueError):
-            return {}
 
     @staticmethod
     def _bounds_disjoint(stat: dict, lo, hi) -> bool:
@@ -779,9 +790,9 @@ class MorTable:
             path = f"{root}/{d}"
             if not self._has_parquet(path):
                 continue
-            bounds = self._manifest_bounds(path)
-            if bounds is not None:
-                b_lo, b_hi = bounds
+            m = self._manifest(path)
+            if "min" in m and "max" in m:
+                b_lo, b_hi = m["min"], m["max"]
                 if b_lo is None:  # empty commit
                     continue
                 if lo is not None and b_hi < lo:
@@ -789,7 +800,7 @@ class MorTable:
                 if hi is not None and b_lo > hi:
                     continue
             if col_bounds:
-                stats = self._manifest_column_stats(path)
+                stats = m.get("columns") or {}
                 if any(
                     c in stats and self._bounds_disjoint(stats[c], c_lo, c_hi)
                     for c, (c_lo, c_hi) in col_bounds.items()
@@ -797,11 +808,7 @@ class MorTable:
                     continue
             # point lookup (lo == hi): the bloom can skip commits whose
             # [min,max] straddles the key without containing it
-            if (
-                lo is not None
-                and lo == hi
-                and not self._bloom_may_contain(path, lo)
-            ):
+            if lo is not None and lo == hi and not self._bloom_may_contain(m, lo):
                 continue
             out.append(path)
         return out
@@ -847,24 +854,20 @@ class MorTable:
             )
         else:
             delta_batches = self.prune_batches(lo, hi, as_of_batch)
-        if delta_batches:
-            # one read per commit dir, always: a combined multi-root read
-            # would try to unify `batch=N` roots with the partition dirs
-            # beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and with
-            # partition EVOLUTION different commits legitimately carry
-            # different layouts — per-dir reads make mixed specs coexist
-            delta_parts = [
-                self.spark.read.option("mergeSchema", "true").parquet(d)
-                for d in delta_batches
-            ]
-            for deltas in delta_parts:
-                # manifests prune whole commits; the residual filter
-                # makes the row-level predicate exact (pushes to scan)
-                if lo is not None:
-                    deltas = deltas.filter(F.col(self.key) >= lo)
-                if hi is not None:
-                    deltas = deltas.filter(F.col(self.key) <= hi)
-                parts.append(deltas)
+        # one read per commit dir, always: a combined multi-root read
+        # would try to unify `batch=N` roots with the partition dirs
+        # beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and with
+        # partition EVOLUTION different commits legitimately carry
+        # different layouts — per-dir reads make mixed specs coexist
+        for d in delta_batches:
+            deltas = self.spark.read.option("mergeSchema", "true").parquet(d)
+            # manifests prune whole commits; the residual filter makes
+            # the row-level predicate exact (pushes to scan)
+            if lo is not None:
+                deltas = deltas.filter(F.col(self.key) >= lo)
+            if hi is not None:
+                deltas = deltas.filter(F.col(self.key) <= hi)
+            parts.append(deltas)
         if not parts:
             return None
         df = parts[0]
@@ -1060,11 +1063,7 @@ class MorTable:
         )
 
     def _delta_batch_ids(self) -> list[int]:
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.delta_dir)
-            if d.startswith("batch=")
-        )
+        return self._ids(self.delta_dir, "batch=")
 
     def _mark_folded(self, batch_id: int | None) -> None:
         if batch_id is None:
@@ -1158,23 +1157,25 @@ class MorTable:
         return refs["branches"][name]
 
     def commit_to_branch(self, batch_df: DataFrame, batch_id: int, name: str) -> None:
-        """commit_batch onto a branch: same idempotent overwrite + key
-        manifest, but the commit dir is reachable only via the ref."""
+        """commit_batch onto a branch: the same stage → manifest →
+        publish commit and the same Spark jobs, but the commit dir is
+        reachable only via the ref."""
         ref = self._branch_ref(name)
         head = ref["batches"][-1] if ref["batches"] else ref["fork_batch"]
         if head is not None and batch_id <= head and batch_id not in ref["batches"]:
             raise ValueError(
                 f"branch {name!r} head is {head}; new batch id must advance"
             )
-        self._write_commit(batch_df, f"{self.branches_dir}/{name}/batch={batch_id}")
+        self._commit(batch_df, f"{self.branches_dir}/{name}/batch={batch_id}")
         if batch_id not in ref["batches"]:
             refs = self._read_refs()
             refs["branches"][name]["batches"].append(batch_id)
             self._write_refs(refs)
 
     def fast_forward(self, name: str) -> list[int]:
-        """Publish a branch: move its commit dirs into main's deltas and
-        drop the ref. Requires main to still be AT the fork point (a
+        """Publish a branch: move its commit dirs, manifests included,
+        into main's deltas (_publish, one rename each) and drop the ref.
+        Requires main to still be AT the fork point (a
         true fast-forward — Iceberg's fastForwardBranch contract);
         anything else would silently interleave diverged histories.
         Returns the published batch ids."""
@@ -1190,7 +1191,7 @@ class MorTable:
             dst = f"{self.delta_dir}/batch={b}"
             if os.path.exists(dst):
                 raise ValueError(f"batch {b} already exists on main")
-            os.replace(src, dst)
+            self._publish(src, dst)
         published = list(ref["batches"])
         self.drop_branch(name)
         return published
@@ -1385,7 +1386,7 @@ class MorTable:
         # guidance for spec changes is the same: old files keep the old
         # layout until rewritten)
         for b in self._delta_batch_ids():
-            spec = self._manifest_spec(f"{self.delta_dir}/batch={b}")
+            spec = self._manifest(f"{self.delta_dir}/batch={b}").get("spec")
             if spec != self.partition_col:
                 raise ValueError(
                     f"compact(where=...) needs all commits under spec "
@@ -1453,7 +1454,7 @@ class MorTable:
 
     def stage_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Write a batch to staging — invisible to snapshot()/changes().
-        Re-staging the same id overwrites (idempotent, like
+        Re-staging the same id replaces it (idempotent, like
         commit_batch)."""
         self._write_commit(batch_df, f"{self.staging_dir}/batch={batch_id}")
 
@@ -1546,45 +1547,49 @@ class MorTable:
         return {"published": self.fast_forward(name), "problems": []}
 
     def publish_batch(self, batch_id: int) -> None:
-        """Atomically promote a staged batch into deltas/ (one rename —
-        the snapshot-pointer swap). Fails if nothing is staged; replaces
-        any existing commit with the same id (idempotent replay).
+        """Atomically promote a staged batch into deltas/ (_publish: one
+        rename — the snapshot-pointer swap). Fails if nothing is staged;
+        replaces any existing commit with the same id (idempotent
+        replay).
 
         Optimistic-concurrency rebase (Iceberg's retry-on-commit
         analog): op_seq is assigned at STAGE time, so if another batch
         committed between stage and publish, the staged seqs can
         collide with already-committed ones and the LWW resolver
         (max_by on op_seq) would pick an arbitrary winner for
-        overlapping keys. Before the rename, compare the staged batch's
-        min op_seq against the table's current max; on conflict, SHIFT
-        every staged op_seq by a constant so the batch lands strictly
-        after the interloper, preserving intra-batch order. The check
-        reads only op_seq columns (map-combinable aggs). CDC feeds with
-        globally monotone resume-token seqs never trigger it; writers
-        are otherwise assumed single-publisher per table (no
-        cross-process commit lock here — the catalog provides that in a
-        real Iceberg deployment)."""
+        overlapping keys. Before publishing, compare the staged batch's
+        min op_seq against the max of every OTHER commit (a replay
+        replaces the one with this id; base rows carry op_seq 0); on
+        conflict, SHIFT every staged op_seq by a constant so the batch
+        lands strictly after the interloper, preserving intra-batch
+        order, and publish that rewrite instead. The check reads only
+        op_seq columns, in O(1) jobs. CDC feeds with globally monotone
+        resume-token seqs never trigger it; writers are otherwise
+        assumed single-publisher per table (no cross-process commit
+        lock here — the catalog provides that in a real Iceberg
+        deployment)."""
         src = f"{self.staging_dir}/batch={batch_id}"
         dst = f"{self.delta_dir}/batch={batch_id}"
         if not self._has_parquet(src):
             raise FileNotFoundError(f"no staged batch {batch_id} to publish")
         staged = self.spark.read.parquet(src)
-        s = staged.agg(F.min(OP_SEQ).alias("lo"), F.max(OP_SEQ).alias("hi")).head()
-        current = self._raw()
+        lo = staged.agg(F.min(OP_SEQ)).head()[0]
+        # a declared schema skips each dir's schema-inference job
+        others = [
+            self.spark.read.schema(f"{sql_ident(OP_SEQ)} BIGINT").parquet(d)
+            for d in self.prune_batches()
+            if d != dst
+        ]
         cur_max = 0
-        if current is not None:
-            cur_max = int(current.agg(F.max(OP_SEQ).alias("m")).head().m or 0)
-        if s.lo is not None and int(s.lo) <= cur_max:
-            shift = cur_max + 1 - int(s.lo)
-            rebase = f"{src}.rebase"
-            self._write_commit(
-                staged.withColumn(OP_SEQ, (F.col(OP_SEQ) + F.lit(shift)).cast("long")),
-                rebase,
-            )
+        if others:
+            cur_max = reduce(DataFrame.union, others).agg(F.max(OP_SEQ)).head()[0] or 0
+        if lo is None or lo > cur_max:
+            self._publish(src, dst)
+        else:
+            shift = F.lit(cur_max + 1 - lo)
+            shifted = (F.col(OP_SEQ) + shift).cast("long")
+            self._commit(staged.withColumn(OP_SEQ, shifted), dst)
             shutil.rmtree(src)
-            os.rename(rebase, src)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.rename(src, dst)
 
     def abort_batch(self, batch_id: int) -> None:
         """Drop a staged batch (audit failed). No effect on the table."""
@@ -1594,7 +1599,8 @@ class MorTable:
         """Iceberg remove_orphan_files analog: delete files under the
         table root that no reader path can reach — leftovers from
         crashed writes (`.compact_tmp`, `_temporary`, stray files
-        outside any commit dir) and abandoned staging batches. Only
+        outside any commit dir), abandoned staging batches, and the
+        staged dirs of commits that crashed before their publish. Only
         entries older than ``older_than_s`` are removed (Iceberg's
         3-day default) so in-flight writers are never raced. Live
         data — base/, deltas/batch=*/, archive/gen=*/ and fresh
@@ -1628,7 +1634,7 @@ class MorTable:
                 p = os.path.join(root, d)
                 if not d.startswith(prefix) and _old(p):
                     doomed.append(p)
-        # 3. abandoned staging commits
+        # 3. abandoned staged batches and crashed commits
         if os.path.isdir(self.staging_dir):
             for d in os.listdir(self.staging_dir):
                 p = os.path.join(self.staging_dir, d)
@@ -1715,14 +1721,10 @@ class MorTable:
         # an operator debugging a stuck audit needs to SEE them in
         # files() — but they are never part of the readable snapshot,
         # so snapshots()/partitions() (live-state views) exclude them
-        if include_staging and os.path.isdir(self.staging_dir):
-            for d in sorted(os.listdir(self.staging_dir)):
-                if d.startswith("batch="):
-                    b = int(d.split("=", 1)[1])
-                    rows += [
-                        self._file_row(p, "staged", b)
-                        for p in self._walk_parquet(f"{self.staging_dir}/{d}")
-                    ]
+        if include_staging:
+            for b in self._ids(self.staging_dir, "batch="):
+                d = f"{self.staging_dir}/batch={b}"
+                rows += [self._file_row(p, "staged", b) for p in self._walk_parquet(d)]
         if include_archive and os.path.isdir(self.archive_dir):
             rows += [
                 self._file_row(p, "archive", None)
@@ -1734,17 +1736,10 @@ class MorTable:
         """Iceberg `files` metadata-table analog: one row per data file
         with section (base/delta/staged/archive), owning commit,
         partition value, footer record count and on-disk size."""
-        import pandas as pd
-
-        rows = self._file_rows(include_archive, include_staging=True)
-        schema = (
+        return self._meta_frame(
+            self._file_rows(include_archive, include_staging=True),
             "file_path string, section string, batch_id long, partition string,"
-            " record_count long, file_size_bytes long, num_row_groups long"
-        )
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(
-            pd.DataFrame(rows, dtype=object), schema
+            " record_count long, file_size_bytes long, num_row_groups long",
         )
 
     def snapshots(self) -> DataFrame:
@@ -1752,8 +1747,6 @@ class MorTable:
         plus one for the compacted base, with manifest key bounds,
         file/record counts, and whether VERSION AS OF can still reach
         versions before it (expired = folded by compact())."""
-        import pandas as pd
-
         folded = self._last_folded_batch()
         by_commit: dict[tuple, dict] = {}
         for r in self._file_rows():
@@ -1768,36 +1761,33 @@ class MorTable:
         for (section, batch_id), agg in sorted(
             by_commit.items(), key=lambda kv: (kv[0][1] is not None, kv[0][1])
         ):
-            bounds = (
-                self._manifest_bounds(f"{self.delta_dir}/batch={batch_id}")
+            m = (
+                self._manifest(f"{self.delta_dir}/batch={batch_id}")
                 if section == "delta"
-                else None
+                else {}
             )
+            bounded = "min" in m and "max" in m
             rows.append(
                 {
                     "version": batch_id if section == "delta" else folded,
                     "section": section,
-                    "key_min": None if bounds is None else str(bounds[0]),
-                    "key_max": None if bounds is None else str(bounds[1]),
+                    "key_min": str(m["min"]) if bounded else None,
+                    "key_max": str(m["max"]) if bounded else None,
                     "history_expired_before": folded if section == "base" else None,
                     **agg,
                 }
             )
-        schema = (
+        return self._meta_frame(
+            rows,
             "version long, section string, key_min string, key_max string,"
             " history_expired_before long, n_files long, record_count long,"
-            " file_size_bytes long"
+            " file_size_bytes long",
         )
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
 
     def partitions(self) -> DataFrame:
         """Iceberg `partitions` analog: per-partition live file/record
         totals (base + deltas) — the input to cold-partition compaction
         targeting."""
-        import pandas as pd
-
         agg: dict[str, dict] = {}
         for r in self._file_rows():
             p = agg.setdefault(
@@ -1810,19 +1800,13 @@ class MorTable:
             {"partition": k, **v}
             for k, v in sorted(agg.items(), key=lambda kv: (kv[0] is None, kv[0]))
         ]
-        schema = (
-            "partition string, n_files long, record_count long, file_size_bytes long"
-        )
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
+        schema = "partition string, n_files long, record_count long, file_size_bytes long"
+        return self._meta_frame(rows, schema)
 
     def history(self) -> DataFrame:
         """Iceberg `history` analog: the compaction lineage — archived
         base generations (oldest first), the live base, and the
         last-folded-batch watermark that bounds time travel."""
-        import pandas as pd
-
         folded = self._last_folded_batch()
         rows = [
             {
@@ -1839,10 +1823,15 @@ class MorTable:
                 "folded_through": folded,
             }
         )
-        return self.spark.createDataFrame(
-            pd.DataFrame(rows, dtype=object),
-            "generation long, status string, folded_through long",
-        )
+        schema = "generation long, status string, folded_through long"
+        return self._meta_frame(rows, schema)
+
+    def _meta_frame(self, rows: list[dict], schema: str) -> DataFrame:
+        import pandas as pd
+
+        if not rows:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
 
     def truncate(self) -> None:
         """Drop all data (used by re-initial-sync, reference A23)."""

@@ -55,7 +55,8 @@ def _oracle_batch_to_ops(events, key):
 def _oracle_split_malformed(events, key):
     is_delete = F.col("op_type").isin("delete")
     reason = (
-        F.when(F.col(key).isNull(), F.lit("missing_key"))
+        F.when(F.col("op_type").isin(*INVALIDATE_OPS), F.lit(None))
+        .when(F.col(key).isNull(), F.lit("missing_key"))
         .when(~is_delete & F.col("full_doc").isNull(), F.lit("missing_document"))
         .when(
             ~is_delete & F.from_json("full_doc", "map<string,string>").isNull(),

@@ -1,9 +1,11 @@
 """Job budgets stated in docstrings are checked claims: a warm,
 unpartitioned ``apply_batch`` without invalidations runs at most two
 Spark jobs, with or without a quarantine dir, ``MorTable.commit_batch``
-at most two and ``apply_batch_wap`` at most twelve. Jobs are counted
-with a job group and ``statusTracker``, the same attribution the
-benchmark's traced run uses.
+at most two, ``commit_to_branch`` at most two (the same commit onto a
+branch), a bulk ``commit_batches`` of LWW-folded ops at most eight, and
+``apply_batch_wap`` at most twelve, however many commits the table
+holds. Jobs are counted with a job group and ``statusTracker``, the
+same attribution the benchmark's traced run uses.
 
 The driver-side cost of building a batch's plan is pinned too, in Py4J
 round trips: every Column call costs several (PySpark records its call
@@ -72,17 +74,51 @@ def test_commit_batch_runs_at_most_two_jobs(spark, tmp_path):
     assert n <= 2, f"commit_batch ran {n} Spark jobs"
 
 
+def test_commit_to_branch_runs_at_most_two_jobs(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "branch"), key="doc_id")
+    t.create_branch("audit")
+    for b in range(2):
+        t.commit_to_branch(batch_to_ops(_batch(spark, b)), b, "audit")
+    ops = batch_to_ops(_batch(spark, 2))
+    _, n = _jobs(spark, "budget-branch", lambda: t.commit_to_branch(ops, 2, "audit"))
+    assert t._branch_ref("audit")["batches"] == [0, 1, 2]
+    assert n <= 2, f"commit_to_branch ran {n} Spark jobs"
+
+
+def test_bulk_commit_batches_runs_at_most_eight_jobs(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "bulk"), key="doc_id")
+    events = events_df(spark, make_events(n_docs=40, n_ops=240, start_seq=1))
+    ops = batch_to_ops(events).selectExpr("*", "_op_seq % 4 AS b")
+    t.commit_batches(ops, "b")  # warm
+    # the write: the LWW map stage, the batch-key shuffle and the write;
+    # the manifests: a schema read and two grouped aggregations of two
+    ids, n = _jobs(spark, "budget-bulk", lambda: t.commit_batches(ops, "b"))
+    assert ids == [0, 1, 2, 3]
+    assert n <= 8, f"commit_batches ran {n} Spark jobs"
+
+
 def test_apply_batch_wap_runs_at_most_twelve_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
     for b in range(2):
         apply_batch_wap(t, _batch(spark, b), b)
-    # publish_batch scans the whole table for its max op_seq, so the
-    # count grows with the number of commits; this is the third batch
+    # this is the third batch
     stats, n = _jobs(
         spark, "budget-wap", lambda: apply_batch_wap(t, _batch(spark, 2), 2)
     )
     assert stats["published"] and stats["n_events"] == 120
     assert n <= 12, f"apply_batch_wap ran {n} Spark jobs"
+
+
+def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
+    # publish_batch's op_seq conflict check reads every commit's op_seq
+    # with a declared schema: no per-commit schema-inference job
+    t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
+    apply_batch_wap(t, _batch(spark, 0), 0)
+    counts = [
+        _jobs(spark, f"budget-wap-{b}", lambda: apply_batch_wap(t, _batch(spark, b), b))[1]
+        for b in range(1, 5)
+    ]
+    assert len(set(counts)) == 1, f"apply_batch_wap jobs per batch: {counts}"
 
 
 def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):

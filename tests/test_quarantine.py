@@ -152,3 +152,52 @@ def test_metrics_count_quarantined(spark, tmp_path):
     )
     snap = metrics.snapshot()
     assert snap["quarantined"] == 3
+
+
+def test_invalidations_pass_quarantine_and_engine_truncates(spark, tmp_path):
+    """Drop/rename/invalidate events carry no key and no document; the
+    quarantine must let them through to the engine, which truncates and
+    re-syncs, instead of dead-lettering them as missing_key."""
+    import json
+
+    from mongodb_iceberg_sync_spark.sync.checkpoint import CheckpointStore
+    from mongodb_iceberg_sync_spark.sync.engine import CollectionSync, SyncState
+
+    rows = [
+        (1, "insert", "d1", None, json.dumps({"_id": "d1", "v": 1})),
+        (2, "insert", None, None, '{"v": 2}'),  # missing_key
+        (3, "drop", None, None, None),
+        (4, "insert", "d2", None, json.dumps({"_id": "d2", "v": 4})),
+    ]
+    qdir = str(tmp_path / "dlq")
+    stats = apply_batch(
+        MorTable(spark, str(tmp_path / "t"), key="doc_id"),
+        spark.createDataFrame(rows, SCHEMA),
+        batch_id=1,
+        quarantine_dir=qdir,
+    )
+    assert stats["n_invalidations"] == 1 and stats["first_invalid_seq"] == 3
+    assert stats["n_quarantined"] == 1 and stats["n_ops"] == 1
+    assert [r["op_seq"] for r in spark.read.parquet(qdir).collect()] == [2]
+
+    table = MorTable(spark, str(tmp_path / "engine"), key="doc_id")
+    store = CheckpointStore(str(tmp_path / "cp.jsonl"))
+    snap = spark.createDataFrame(
+        [("s1", json.dumps({"_id": "s1", "v": "resynced"}))],
+        "doc_id string, full_doc string",
+    )
+
+    def batches(resume_from):
+        if resume_from is None or resume_from < 4:
+            yield (1, spark.createDataFrame(rows, SCHEMA))
+
+    sync = CollectionSync(
+        spark, "lake.q", lambda: snap, batches, table, store,
+        quarantine_dir=str(tmp_path / "engine_dlq"),
+    )
+    sync.run_once()
+    # d1 was wiped by the drop; d2 (after it) was re-applied post-resync
+    got = {r.doc_id: json.loads(r.full_doc) for r in table.snapshot().collect()}
+    assert got == {"s1": {"_id": "s1", "v": "resynced"}, "d2": {"_id": "d2", "v": 4}}
+    assert SyncState.INITIAL_SYNC in sync.history[2:]
+    assert int(store.read("lake.q").resume_token) == 4

@@ -854,20 +854,24 @@ class MorTable:
             )
         else:
             delta_batches = self.prune_batches(lo, hi, as_of_batch)
-        # one read per commit dir, always: a combined multi-root read
-        # would try to unify `batch=N` roots with the partition dirs
-        # beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and with
-        # partition EVOLUTION different commits legitimately carry
-        # different layouts — per-dir reads make mixed specs coexist
-        for d in delta_batches:
-            deltas = self.spark.read.option("mergeSchema", "true").parquet(d)
-            # manifests prune whole commits; the residual filter makes
-            # the row-level predicate exact (pushes to scan)
-            if lo is not None:
-                deltas = deltas.filter(F.col(self.key) >= lo)
-            if hi is not None:
-                deltas = deltas.filter(F.col(self.key) <= hi)
-            parts.append(deltas)
+        if delta_batches:
+            # one read per commit dir, always: a combined multi-root read
+            # would try to unify `batch=N` roots with the partition dirs
+            # beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and with
+            # partition EVOLUTION different commits legitimately carry
+            # different layouts — per-dir reads make mixed specs coexist
+            delta_parts = [
+                self.spark.read.option("mergeSchema", "true").parquet(d)
+                for d in delta_batches
+            ]
+            for deltas in delta_parts:
+                # manifests prune whole commits; the residual filter
+                # makes the row-level predicate exact (pushes to scan)
+                if lo is not None:
+                    deltas = deltas.filter(F.col(self.key) >= lo)
+                if hi is not None:
+                    deltas = deltas.filter(F.col(self.key) <= hi)
+                parts.append(deltas)
         if not parts:
             return None
         df = parts[0]
@@ -1574,9 +1578,11 @@ class MorTable:
             raise FileNotFoundError(f"no staged batch {batch_id} to publish")
         staged = self.spark.read.parquet(src)
         lo = staged.agg(F.min(OP_SEQ)).head()[0]
-        # a declared schema skips each dir's schema-inference job
+        # a declared schema skips each dir's schema-inference job; the
+        # select drops the partition columns a read still infers from
+        # dir names, so flat and partitioned commits union
         others = [
-            self.spark.read.schema(f"{sql_ident(OP_SEQ)} BIGINT").parquet(d)
+            self.spark.read.schema(f"{sql_ident(OP_SEQ)} BIGINT").parquet(d).select(OP_SEQ)
             for d in self.prune_batches()
             if d != dst
         ]

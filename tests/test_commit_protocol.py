@@ -218,3 +218,21 @@ def test_publish_replay_is_not_a_concurrent_commit(spark, tmp_path):
     apply_batch(t, _events(spark, [(31, "update", "a")]), 2)
     got = {r.doc_id: json.loads(r.full_doc)["v"] for r in t.snapshot().collect()}
     assert got == {"a": 31, "b": 30}
+
+
+def test_publish_rebase_over_mixed_partition_layouts(spark, tmp_path):
+    """After partition evolution, deltas/ holds flat and ``day=`` commit
+    dirs side by side; the op_seq conflict check must read both."""
+    t = MorTable(spark, str(tmp_path / "t"), key="doc_id")
+    day = "doc_id string, _op_seq long, _op string, full_doc string, day string"
+    mk = lambda rows: spark.createDataFrame(rows, day)  # noqa: E731
+    t.commit_batch(mk([("a", 1, "upsert", "{}", "d1")]), 0)
+    t.evolve_partition_spec("day")
+    t.commit_batch(mk([("b", 2, "upsert", "{}", "d2")]), 1)
+    # staged at seq 1, colliding with batch 0: the rebase path runs
+    t.stage_batch(mk([("a", 1, "upsert", '{"v": 2}', "d1")]), 2)
+    t.publish_batch(2)
+    published = spark.read.parquet(f"{t.delta_dir}/batch=2").select("_op_seq")
+    assert [r[0] for r in published.collect()] == [3]
+    got = {r.doc_id: r.full_doc for r in t.snapshot().collect()}
+    assert got == {"a": '{"v": 2}', "b": "{}"}

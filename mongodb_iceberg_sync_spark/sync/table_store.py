@@ -9,7 +9,9 @@ parquet, structured exactly like Iceberg would:
   {table}/base/            — compacted data files ("data files")
   {table}/deltas/batch=N/  — per-commit upsert+tombstone files
                              ("equality delete files" + appended rows)
-  {table}/staging/         — commits being written; never read
+  {table}/staging/         — commits and base rewrites in flight; never read
+  {table}/archive/gen=N/   — base dirs (and delete files) a fold replaced,
+                             kept until expire_snapshots()
 
 - Read  = base ∪ deltas, last-writer-wins by (key, op_seq), tombstones
   dropped — i.e. the MoR merge an Iceberg reader performs.
@@ -20,8 +22,10 @@ parquet, structured exactly like Iceberg would:
   commit with its manifest or none of it, and a replayed batch
   replaces its own directory ⇒ idempotent commits (reference A21
   at-least-once protocol, docs/design.md:339-348).
-- Compact = rewrite base from the merged view, clear deltas (reference
-  A24 RewriteDataFiles, docs/design.md:394-400).
+- Compact = one fold step (_fold) behind compact(), compact(where=...)
+  and truncate(): stage the new base under staging/, archive the base
+  dirs it replaces, rename it in, retire the deltas and delete files it
+  absorbed (reference A24 RewriteDataFiles, docs/design.md:394-400).
 
 Scale: the merged view is one shuffle on the key (max_by aggregation,
 partial-aggregatable map-side). With Iceberg jars on a real cluster,
@@ -1059,12 +1063,8 @@ class MorTable:
 
     # -- maintenance --------------------------------------------------
 
-    def _generations(self) -> list[str]:
-        if not os.path.isdir(self.archive_dir):
-            return []
-        return sorted(
-            d for d in os.listdir(self.archive_dir) if d.startswith("gen=")
-        )
+    def _generations(self) -> list[int]:
+        return self._ids(self.archive_dir, "gen=")
 
     def _delta_batch_ids(self) -> list[int]:
         return self._ids(self.delta_dir, "batch=")
@@ -1283,7 +1283,9 @@ class MorTable:
         zorder_by: tuple[str, str] | None = None,
     ) -> None:
         """Rewrite base from the merged snapshot; fold deltas (reference
-        A24 RewriteDataFiles, docs/design.md:394-400).
+        A24 RewriteDataFiles, docs/design.md:394-400). Spark jobs: a
+        schema read of base and of each delta dir, the merged view's
+        shuffle stage and the write; six over a base plus three deltas.
 
         ``max_records_per_file`` bounds output file size (Iceberg's
         rewrite target-file-size, record-count proxy) via Spark's
@@ -1309,137 +1311,130 @@ class MorTable:
         only the matching COLD partitions are rewritten — hot
         partitions' base and delta files are left physically untouched,
         the shape docs/design.md:396-400 specifies for a hot 100 TB
-        table where full rewrites are unaffordable.
+        table where full rewrites are unaffordable. Batch manifests keep
+        their original key bounds — possibly wider than the remaining
+        files, so skipping stays safe. It needs every live commit under
+        the current spec and no live equality-delete file; run a full
+        compact() first otherwise.
 
-        The superseded base generation is ARCHIVED, not deleted —
-        Iceberg keeps old snapshots' files reachable until
-        ExpireSnapshots runs; expire_snapshots() is that step here.
-        Either form advances the last-folded-batch mark, so VERSION AS
-        OF an earlier batch raises SnapshotExpiredError (conservative
-        for partial compaction: hot-partition history still exists but
+        Both forms go through _fold, which ARCHIVES the superseded base
+        (Iceberg keeps old snapshots' files until ExpireSnapshots;
+        expire_snapshots() is that step here) and advances the
+        last-folded-batch mark, so VERSION AS OF an earlier batch
+        raises SnapshotExpiredError (conservative for partial
+        compaction: hot-partition history still exists but
         cold-partition history does not, and a half-historical snapshot
         would be silently wrong).
         """
-        if where is not None:
+        if where is None:
+            rows, parts = self.snapshot(), None
+            if rows is None:
+                return
+            if zorder_by is not None:
+                from ..functions.zorder import morton_code
+
+                z = morton_code(F.col(zorder_by[0]), F.col(zorder_by[1]))
+                keys = ([F.col(self.partition_col)] if self.partition_col else []) + [z]
+                rows = rows.repartitionByRange(*keys).sortWithinPartitions(*keys)
+        else:
             if zorder_by is not None:
                 raise ValueError(
                     "zorder_by requires a full rewrite (where=None): a "
                     "partial rewrite would interleave clustered and "
                     "unclustered files in one layout"
                 )
-            self._compact_partitions(where, max_records_per_file)
-            return
-        snap = self.snapshot()
-        tmp = f"{self.path}/.compact_tmp"
-        if snap is None:
-            return
-        if zorder_by is not None:
-            from ..functions.zorder import morton_code
+            pc = self.partition_col
+            if pc is None:
+                raise ValueError("compact(where=...) requires partition_col")
+            # partition-targeted rewrite moves partition DIRS by name, which
+            # is only sound when every live commit shares the current spec;
+            # after an evolution, run a full compact() first (Iceberg's
+            # guidance for spec changes is the same: old files keep the old
+            # layout until rewritten)
+            for b in self._delta_batch_ids():
+                spec = self._manifest(f"{self.delta_dir}/batch={b}").get("spec")
+                if spec != pc:
+                    raise ValueError(
+                        f"compact(where=...) needs all commits under spec "
+                        f"{pc!r}, but batch {b} was written "
+                        f"under {spec!r}; run full compact() first"
+                    )
+            raw = self._raw()
+            if raw is None:
+                return
+            cold_vals = [
+                r[0] for r in raw.select(pc).distinct().filter(where).collect()
+            ]
+            if not cold_vals:
+                return
+            rows = self.snapshot().filter(F.col(pc).isin(cold_vals))
+            # partitionBy renders simple values (int/str/date) as
+            # str(value); exotic values needing Spark's %-escaping aren't
+            # used as partition keys here
+            parts = [f"{pc}={v}" for v in cold_vals]
+        self._fold(rows, parts, max_records_per_file)
 
-            z = morton_code(F.col(zorder_by[0]), F.col(zorder_by[1]))
-            keys = ([F.col(self.partition_col)] if self.partition_col else []) + [z]
-            snap = snap.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        batch_ids = self._delta_batch_ids()
-        w = self._writer(
-            snap.withColumn(OP_SEQ, F.lit(0).cast("long")).withColumn(
-                OP_TYPE, F.lit("upsert")
+    def _fold(
+        self,
+        rows: DataFrame | None,
+        parts: list[str] | None = None,
+        max_records_per_file: int | None = None,
+    ) -> None:
+        """Replace the base's ``col=value`` dirs ``parts`` (None: the
+        whole base) with ``rows`` (None: no rows) — the only code that
+        swaps base files and retires what they absorbed. The new base is
+        staged under staging/; each replaced dir moves into one new
+        archive/gen=N and the new ones move in. Then the folded deltas
+        go (whole batch=N dirs, or their ``parts`` subdirs), a whole fold
+        archives the delete files with the base they struck, and the
+        fold mark advances past every commit it covered, deletes too. A
+        partial fold refuses while equality deletes are live: its rows
+        restart at op_seq 0, under their sequence cut."""
+        if parts is not None and self._eq_delete_ids():
+            raise ValueError(
+                "compact(where=...) while equality-delete files are live "
+                "would let them strike the rewritten rows; run full "
+                "compact() first"
             )
-        )
-        if max_records_per_file is not None:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.mode("overwrite").parquet(tmp)
-        gens = self._generations()
-        next_gen = int(gens[-1].split("=")[1]) + 1 if gens else 0
-        os.makedirs(self.archive_dir, exist_ok=True)
-        gen_dir = f"{self.archive_dir}/gen={next_gen:06d}"
-        os.rename(self.base_dir, gen_dir)
-        os.rename(tmp, self.base_dir)
-        # positional deletes were applied by the snapshot() read above,
-        # so they are folded into the rewritten base; archive them with
-        # the generation whose files they reference (an expired delete
-        # file against a live base would silently match nothing — fine —
-        # but keeping them beside their data files preserves the
-        # audit trail exactly like Iceberg's snapshot-reachable delete
-        # files)
-        if os.path.isdir(self.pos_delete_dir):
-            os.rename(self.pos_delete_dir, f"{gen_dir}/pos_deletes")
-        if os.path.isdir(self.eq_delete_dir):
-            os.rename(self.eq_delete_dir, f"{gen_dir}/eq_deletes")
-        shutil.rmtree(self.delta_dir, ignore_errors=True)
-        os.makedirs(self.delta_dir, exist_ok=True)
-        self._mark_folded(batch_ids[-1] if batch_ids else None)
-
-    def _partition_dirname(self, value) -> str:
-        # partitionBy renders simple values (int/str/date) as str(value);
-        # exotic values needing Spark's %-escaping aren't used as
-        # partition keys here
-        return f"{self.partition_col}={value}"
-
-    def _compact_partitions(self, where, max_records_per_file=None) -> None:
-        """Partition-targeted rewrite: fold the matching partitions'
-        merged state into base and drop those partitions' delta files;
-        every other partition's files are untouched (verified by mtime
-        in tests). Batch manifests keep their original key bounds —
-        conservative (possibly wider than the remaining files), so
-        skipping stays safe, never lossy."""
-        if self.partition_col is None:
-            raise ValueError("compact(where=...) requires partition_col")
-        # partition-targeted rewrite moves partition DIRS by name, which
-        # is only sound when every live commit shares the current spec;
-        # after an evolution, run a full compact() first (Iceberg's
-        # guidance for spec changes is the same: old files keep the old
-        # layout until rewritten)
-        for b in self._delta_batch_ids():
-            spec = self._manifest(f"{self.delta_dir}/batch={b}").get("spec")
-            if spec != self.partition_col:
-                raise ValueError(
-                    f"compact(where=...) needs all commits under spec "
-                    f"{self.partition_col!r}, but batch {b} was written "
-                    f"under {spec!r}; run full compact() first"
+        folded = self._delta_batch_ids()
+        last = max(folded + self._pos_delete_ids() + self._eq_delete_ids(), default=None)
+        staged = self._staged(self.base_dir)
+        if rows is None:
+            shutil.rmtree(staged, ignore_errors=True)
+            os.makedirs(staged)
+        else:
+            w = self._writer(
+                rows.withColumn(OP_SEQ, F.lit(0).cast("long")).withColumn(
+                    OP_TYPE, F.lit("upsert")
                 )
-        raw = self._raw()
-        if raw is None:
-            return
-        cold_vals = [
-            r[0]
-            for r in raw.select(self.partition_col)
-            .distinct()
-            .filter(where)
-            .collect()
-        ]
-        if not cold_vals:
-            return
-        batch_ids = self._delta_batch_ids()
-        pc = self.partition_col
-        snap = self.snapshot()
-        cold_snap = snap.filter(F.col(pc).isin(cold_vals))
-        tmp = f"{self.path}/.compact_tmp"
-        w = self._writer(
-            cold_snap.withColumn(OP_SEQ, F.lit(0).cast("long")).withColumn(
-                OP_TYPE, F.lit("upsert")
             )
-        )
-        if max_records_per_file is not None:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.mode("overwrite").parquet(tmp)
+            if max_records_per_file is not None:
+                w = w.option("maxRecordsPerFile", max_records_per_file)
+            w.mode("overwrite").parquet(staged)
         gens = self._generations()
-        next_gen = int(gens[-1].split("=")[1]) + 1 if gens else 0
-        gen_dir = f"{self.archive_dir}/gen={next_gen:06d}"
-        os.makedirs(gen_dir, exist_ok=True)
-        for val in cold_vals:
-            d = self._partition_dirname(val)
-            old = f"{self.base_dir}/{d}"
-            if os.path.isdir(old):
-                os.rename(old, f"{gen_dir}/{d}")
-            new = f"{tmp}/{d}"
-            if os.path.isdir(new):  # absent if every key was deleted
-                os.rename(new, f"{self.base_dir}/{d}")
-            for b in batch_ids:
-                shutil.rmtree(
-                    f"{self.delta_dir}/batch={b}/{d}", ignore_errors=True
-                )
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._mark_folded(batch_ids[-1] if batch_ids else None)
+        gen_dir = f"{self.archive_dir}/gen={gens[-1] + 1 if gens else 0:06d}"
+        if parts is None:
+            os.makedirs(self.archive_dir, exist_ok=True)
+            moves = [(self.base_dir, gen_dir), (staged, self.base_dir)] + [
+                (d, f"{gen_dir}/{os.path.basename(d)}")
+                for d in (self.pos_delete_dir, self.eq_delete_dir)
+            ]
+            retired = [f"{self.delta_dir}/batch={b}" for b in folded]
+        else:
+            os.makedirs(gen_dir)
+            moves = [
+                (f"{src}/{d}", f"{dst}/{d}")
+                for d in parts
+                for src, dst in ((self.base_dir, gen_dir), (staged, self.base_dir))
+            ]
+            retired = [f"{self.delta_dir}/batch={b}/{d}" for b in folded for d in parts]
+        for src, dst in moves:
+            if os.path.isdir(src):  # absent: no base or delete files yet, or no live rows
+                os.rename(src, dst)
+        for d in retired:
+            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
+        self._mark_folded(last)
 
     # -- write-audit-publish (staged commits) -------------------------
     # Iceberg's WAP pattern (spark.wap.id / branch commits): a batch is
@@ -1604,11 +1599,11 @@ class MorTable:
     def remove_orphan_files(self, older_than_s: float = 3 * 24 * 3600) -> list[str]:
         """Iceberg remove_orphan_files analog: delete files under the
         table root that no reader path can reach — leftovers from
-        crashed writes (`.compact_tmp`, `_temporary`, stray files
-        outside any commit dir), abandoned staging batches, and the
-        staged dirs of commits that crashed before their publish. Only
-        entries older than ``older_than_s`` are removed (Iceberg's
-        3-day default) so in-flight writers are never raced. Live
+        crashed writes (`_temporary`, stray files outside any commit
+        dir), abandoned staging batches, and the staged dirs of commits
+        and of compact()/truncate() base rewrites that crashed before
+        their swap. Only entries older than ``older_than_s`` are removed
+        (Iceberg's 3-day default) so in-flight writers are never raced. Live
         data — base/, deltas/batch=*/, archive/gen=*/ and fresh
         staging — is structurally excluded, not timestamp-excluded:
         the walk starts from the unreachable roots, so a clock skew
@@ -1628,7 +1623,7 @@ class MorTable:
         # 1. crashed-write leftovers anywhere under the root
         for base, dirs, files in os.walk(self.path):
             for d in list(dirs):
-                if d in ("_temporary", ".compact_tmp") and _old(os.path.join(base, d)):
+                if d == "_temporary" and _old(os.path.join(base, d)):
                     doomed.append(os.path.join(base, d))
                     dirs.remove(d)
         # 2. stray entries directly under deltas/ (not batch=N) and
@@ -1640,7 +1635,7 @@ class MorTable:
                 p = os.path.join(root, d)
                 if not d.startswith(prefix) and _old(p):
                     doomed.append(p)
-        # 3. abandoned staged batches and crashed commits
+        # 3. abandoned staged batches, crashed commits and folds
         if os.path.isdir(self.staging_dir):
             for d in os.listdir(self.staging_dir):
                 p = os.path.join(self.staging_dir, d)
@@ -1665,7 +1660,7 @@ class MorTable:
         gens = self._generations()
         doomed = gens[: max(0, len(gens) - keep_last)] if keep_last > 0 else gens
         for d in doomed:
-            shutil.rmtree(f"{self.archive_dir}/{d}", ignore_errors=True)
+            shutil.rmtree(f"{self.archive_dir}/gen={d:06d}", ignore_errors=True)
         return len(doomed)
 
     # -- metadata inspection ------------------------------------------
@@ -1816,7 +1811,7 @@ class MorTable:
         folded = self._last_folded_batch()
         rows = [
             {
-                "generation": int(g.split("=")[1]),
+                "generation": g,
                 "status": "archived",
                 "folded_through": None,
             }
@@ -1840,9 +1835,7 @@ class MorTable:
         return self.spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
 
     def truncate(self) -> None:
-        """Drop all data (used by re-initial-sync, reference A23)."""
-        shutil.rmtree(self.base_dir, ignore_errors=True)
-        shutil.rmtree(self.delta_dir, ignore_errors=True)
-        shutil.rmtree(self.archive_dir, ignore_errors=True)
-        os.makedirs(self.base_dir, exist_ok=True)
-        os.makedirs(self.delta_dir, exist_ok=True)
+        """Drop all data for a re-initial-sync (reference A23): _fold to
+        an empty base, so VERSION AS OF an earlier commit raises
+        SnapshotExpiredError and no old delete file strikes new rows."""
+        self._fold(None)

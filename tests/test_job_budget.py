@@ -4,7 +4,8 @@ Spark jobs, with or without a quarantine dir, ``MorTable.commit_batch``
 at most two, ``commit_to_branch`` at most two (the same commit onto a
 branch), a bulk ``commit_batches`` of LWW-folded ops at most eight, and
 ``apply_batch_wap`` at most twelve, however many commits the table
-holds. Jobs are counted with a job group and ``statusTracker``, the
+holds, and ``MorTable.compact`` of a base plus three deltas at most six.
+Jobs are counted with a job group and ``statusTracker``, the
 same attribution the benchmark's traced run uses.
 
 The driver-side cost of building a batch's plan is pinned too, in Py4J
@@ -119,6 +120,19 @@ def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
         for b in range(1, 5)
     ]
     assert len(set(counts)) == 1, f"apply_batch_wap jobs per batch: {counts}"
+
+
+def test_compact_runs_at_most_six_jobs(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "compact"), key="doc_id")
+    t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
+    for b in range(1, 4):
+        t.commit_batch(batch_to_ops(_batch(spark, b)), b)
+    n_rows = t.snapshot().count()
+    # a schema read of base and of each delta dir, the merged view's
+    # shuffle stage and the write
+    _, n = _jobs(spark, "budget-compact", t.compact)
+    assert t._delta_batch_ids() == [] and t.snapshot().count() == n_rows
+    assert n <= 6, f"compact ran {n} Spark jobs"
 
 
 def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):

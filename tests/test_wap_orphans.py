@@ -92,9 +92,9 @@ def _age(path, seconds=10 * 24 * 3600):
 
 
 def test_orphan_cleanup_removes_leftovers_not_live_data(spark, table):
-    # plant: crashed compact tmp, _temporary dir, stray file in deltas/,
-    # abandoned staging batch — all backdated past the age guard
-    tmp = f"{table.path}/.compact_tmp"
+    # plant: crashed compaction's staged base, _temporary dir, stray file
+    # in deltas/, abandoned staging batch — all backdated past the age guard
+    tmp = f"{table.staging_dir}/commit-base"
     os.makedirs(tmp)
     _age(tmp)
     temp = f"{table.base_dir}/_temporary"
@@ -109,7 +109,7 @@ def test_orphan_cleanup_removes_leftovers_not_live_data(spark, table):
     before = _state(table)
     removed = set(table.remove_orphan_files())
     assert removed == {
-        ".compact_tmp",
+        "staging/commit-base",
         "base/_temporary",
         "deltas/leftover.parquet",
         "staging/batch=9",
@@ -121,7 +121,7 @@ def test_orphan_cleanup_removes_leftovers_not_live_data(spark, table):
 def test_orphan_cleanup_age_guard_spares_fresh_files(spark, table):
     # a fresh staging batch (in-flight WAP) must survive cleanup
     table.stage_batch(_mk_batch(spark, [("r", 9, "upsert", 1)]), 10)
-    fresh_tmp = f"{table.path}/.compact_tmp"
+    fresh_tmp = f"{table.staging_dir}/commit-base"
     os.makedirs(fresh_tmp)
     assert table.remove_orphan_files() == []
     assert os.path.isdir(f"{table.staging_dir}/batch=10")

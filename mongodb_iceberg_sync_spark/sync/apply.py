@@ -18,8 +18,6 @@ the streaming path oracle-testable (SURVEY.md §2 design rule).
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -105,8 +103,8 @@ def apply_batch(
     batches are corrected after it:
 
     - no normal op (an empty batch, or invalidations only): the
-      ``batch=N`` dir the write made is removed, leaving the table as
-      if nothing had committed;
+      write's ``batch=N`` commit is unpublished (one rename), leaving
+      the table as if nothing had committed;
     - an invalidation: ``batch=N`` is re-committed with only the ops
       ordered before the first invalidation (4 jobs in all). This is
       the idempotent replacement a replay performs. Between the two
@@ -138,7 +136,7 @@ def apply_batch(
     n_ops = table.commit_batch(batch_to_ops(observed.filter(normal), key=key), batch_id)
     pre = obs.get
     if not pre["n_normal"]:
-        shutil.rmtree(f"{table.delta_dir}/batch={batch_id}", ignore_errors=True)
+        table.unpublish_batch(batch_id)
         n_ops = 0
     elif pre["first_invalid_seq"] is not None:
         # An invalidation mid-batch clears the table: only ops ordered

@@ -10,8 +10,8 @@ promoted to string-as-JSON (schema_infer._merge).
 
 Spark-first shape: evolution is a pure function over schemas — the
 diff of two inferred union schemas — so it is unit-testable without a
-table, and applying it to the parquet-MoR store is `mergeSchema` on
-read plus casting new columns nullable. With Iceberg jars it becomes
+table, and applying it to the parquet-MoR store is a by-name union of
+commits, each read with the schema its manifest records. With Iceberg jars it becomes
 ``ALTER TABLE ... ADD COLUMN`` (metadata-only), same decision logic.
 """
 

@@ -13,8 +13,8 @@ parquet, structured exactly like Iceberg would:
   {table}/archive/gen=N/   — base dirs (and delete files) a fold replaced,
                              kept until expire_snapshots()
 
-- Read  = base ∪ deltas, last-writer-wins by (key, op_seq), tombstones
-  dropped — i.e. the MoR merge an Iceberg reader performs.
+- Read  = base ∪ deltas, each commit read with its manifest's schema;
+  last-writer-wins by (key, op_seq), tombstones dropped (Iceberg's MoR).
 - Write = one delta directory per batch_id, under one protocol: stage
   the rows and their manifest (key bounds, column bounds, key bloom,
   observed by the write itself — no read-back job) under staging/,
@@ -43,6 +43,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 OP_SEQ = "_op_seq"  # total order of applied ops (resume-token position)
 OP_TYPE = "_op"  # upsert | delete
@@ -55,6 +56,17 @@ _BULK_COL = "__bulk_batch"  # commit_batches' staged partition column
 def sql_ident(name: str) -> str:
     """``name`` quoted as a SQL identifier, for expressions built as text."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _as_read(t):
+    """A schema's JSON as a parquet read returns it: every field, array
+    element and map value nullable."""
+    if isinstance(t, list):
+        return [_as_read(x) for x in t]
+    if isinstance(t, dict):
+        nullable = ("nullable", "containsNull", "valueContainsNull")
+        return {k: True if k in nullable else _as_read(v) for k, v in t.items()}
+    return t
 
 
 class SnapshotExpiredError(ValueError):
@@ -128,7 +140,8 @@ class MorTable:
         """Change the partition spec for FUTURE commits without touching
         existing data — Iceberg partition evolution (metadata-only).
         Old commits stay in their old layout; the merge-on-read path
-        reads every commit dir independently so mixed layouts coexist;
+        reads every commit dir on its own (_read_commit, with the
+        schema its manifest records) so mixed layouts coexist;
         the next full compact() rewrites the whole table under the new
         spec. Returns the new spec id."""
         spec = self._read_spec()
@@ -236,21 +249,19 @@ class MorTable:
         ).parquet(target)
         return obs.get["n"]
 
+    def _delete_dirs(self, root: str, as_of_batch) -> list[str]:
+        """The delete commits under ``root`` visible AS OF ``as_of_batch``."""
+        last = float("inf") if as_of_batch is None else as_of_batch
+        dirs = [f"{root}/delete={i}" for i in self._ids(root, "delete=") if i <= last]
+        return [d for d in dirs if self._has_parquet(d)]
+
     def _apply_eq_deletes(self, df: DataFrame, as_of_batch) -> DataFrame:
         """Anti-join the (base ∪ deltas) rows against every visible
         equality-delete file: a row dies when its equality-id columns
         match a delete row AND its op_seq <= that file's sequence cut.
         Broadcast: delete files hold VALUES, not data."""
-        ids = [
-            i
-            for i in self._eq_delete_ids()
-            if (as_of_batch is None or i <= as_of_batch)
-            and self._has_parquet(f"{self.eq_delete_dir}/delete={i}")
-        ]
-        for i in ids:
-            dels = self.spark.read.parquet(
-                f"{self.eq_delete_dir}/delete={i}"
-            )
+        for d in self._delete_dirs(self.eq_delete_dir, as_of_batch):
+            dels = self.spark.read.parquet(d)
             eq_cols = [c for c in dels.columns if c != "_seq_cut"]
             if any(c not in df.columns for c in eq_cols):
                 # a schema rollback removed an equality-id column: no
@@ -295,17 +306,10 @@ class MorTable:
         (they hold two columns of deleted-row positions, not data);
         at 100 TB the per-task build is the same bounded delete-index
         Iceberg readers carry."""
-        ids = [
-            i
-            for i in self._pos_delete_ids()
-            if (as_of_batch is None or i <= as_of_batch)
-            and self._has_parquet(f"{self.pos_delete_dir}/delete={i}")
-        ]
-        if not ids:
+        dirs = self._delete_dirs(self.pos_delete_dir, as_of_batch)
+        if not dirs:
             return base
-        dels = self.spark.read.parquet(
-            *[f"{self.pos_delete_dir}/delete={i}" for i in ids]
-        ).select("file_path", "row_index")
+        dels = self.spark.read.parquet(*dirs).select("file_path", "row_index")
         tagged = base.withColumns(
             {
                 "_pd_file": F.col("_metadata.file_path"),
@@ -471,7 +475,7 @@ class MorTable:
                 row.hi,
                 self._col_stats(row, stat_cols),
                 bitmaps.get(b, 0),
-                self.partition_col,
+                df.drop(_BULK_COL).schema,
             )
 
     # Bloom sizing: 4096 bits / 3 hashes ≈ 1.5% false-positive rate at
@@ -550,7 +554,7 @@ class MorTable:
                 col_stats[c] = {"min": lo_v, "max": hi_v}
         return col_stats
 
-    def _dump_manifest(self, target, lo, hi, col_stats, bitmap: int, spec) -> None:
+    def _dump_manifest(self, target, lo, hi, col_stats, bitmap: int, schema) -> None:
         with open(f"{target}/{MANIFEST}", "w") as f:
             json.dump(
                 {
@@ -561,8 +565,12 @@ class MorTable:
                     "bloom": format(bitmap, "x"),
                     # spec this commit was written under (partition
                     # evolution: later commits may use a different one)
-                    "spec": spec,
+                    "spec": self.partition_col,
                     "columns": col_stats,
+                    # what a read of the dir returns, less the partition
+                    # column it infers from the dir names: _read_commit
+                    # declares it, so no schema-inference job runs
+                    "schema": _as_read(schema.jsonValue()),
                 },
                 f,
             )
@@ -581,20 +589,29 @@ class MorTable:
         rel = os.path.relpath(dst, self.path).replace("/", "-")
         return f"{self.staging_dir}/commit-{rel}"
 
-    def _publish(self, src: str, dst: str) -> None:
+    def _publish(self, src: str | None, dst: str) -> None:
         """Make the finished commit dir ``src`` (data and manifest) visible
-        as ``dst`` — the only code that moves a commit dir into deltas/
-        or branches/<name>/. A new id is one rename; a replaced id is
+        as ``dst``, or with ``src`` None take ``dst`` out — the only code
+        that moves a commit dir into or out of deltas/ or
+        branches/<name>/. A new id is one rename; a replaced id is
         first moved aside into staging/, so it is missing only between
         two renames (a crash there: the batch replays, its checkpoint
         unwritten)."""
         os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.makedirs(self.staging_dir, exist_ok=True)
         old = f"{self._staged(dst)}.old"
         shutil.rmtree(old, ignore_errors=True)
         if os.path.exists(dst):
             os.rename(dst, old)
-        os.rename(src, dst)
+        if src is not None:
+            os.rename(src, dst)
         shutil.rmtree(old, ignore_errors=True)
+
+    def unpublish_batch(self, batch_id: int) -> None:
+        """Take the published commit ``batch_id`` out of deltas/, the
+        reverse of _publish: one rename into staging/, then the delete,
+        so a reader sees the whole commit or none of it."""
+        self._publish(None, f"{self.delta_dir}/batch={batch_id}")
 
     def _write_commit(self, df: DataFrame, staged: str) -> int:
         """Write one commit's rows and its manifest to ``staged``, a dir
@@ -624,6 +641,7 @@ class MorTable:
         type holds the same JSON values as the written one.
         """
         spec = self.partition_col
+        schema = df.drop(spec).schema if spec else df.schema
         stat_cols = self._stat_cols(df.schema)
         obs = Observation()
         observed = df.observe(
@@ -645,11 +663,11 @@ class MorTable:
         if spec in col_stats:
             # a schema-only read lists the dirs to infer the partition
             # column's type, without the footer-reading job
-            read = self.spark.read.schema(df.drop(spec).schema).parquet(staged)
+            read = self.spark.read.schema(schema).parquet(staged)
             types = {x.schema[spec].dataType.typeName() for x in (df, read)}
             if len(types) > 1 and not types <= {"byte", "short", "integer", "long"}:
                 del col_stats[spec]
-        self._dump_manifest(staged, row["lo"], row["hi"], col_stats, bitmap, spec)
+        self._dump_manifest(staged, row["lo"], row["hi"], col_stats, bitmap, schema)
         return row["n"]
 
     def _manifest(self, path: str) -> dict:
@@ -662,6 +680,16 @@ class MorTable:
         except (OSError, ValueError):
             return {}
         return m if isinstance(m, dict) else {}
+
+    def _read_commit(self, path: str) -> DataFrame:
+        """The commit dir ``path`` read with the schema its manifest
+        records: no schema-inference job. Without one (no manifest, or an
+        older one) the read infers it, one job."""
+        schema = self._manifest(path).get("schema")
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(path)
 
     def _bloom_may_contain(self, manifest: dict, key_value) -> bool:
         """False-negative-free membership: False ⇒ the commit definitely
@@ -722,25 +750,8 @@ class MorTable:
                 "delete folding and would resurrect deleted rows — use "
                 "scan() (MoR fold) instead"
             )
-        where_bounds = where_bounds or {}
-        parts = []
-        if self._has_parquet(self.base_dir):
-            parts.append(self.spark.read.parquet(self.base_dir))
-        for d in self.prune_batches(col_bounds=where_bounds):
-            parts.append(
-                self.spark.read.option("mergeSchema", "true").parquet(d)
-            )
-        if not parts:
-            return None
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        for c, (lo, hi) in where_bounds.items():
-            if lo is not None:
-                df = df.filter(F.col(c) >= lo)
-            if hi is not None:
-                df = df.filter(F.col(c) <= hi)
-        return df.drop(OP_SEQ, OP_TYPE)
+        df = self._raw(col_bounds=where_bounds)
+        return None if df is None else df.drop(OP_SEQ, OP_TYPE)
 
     def _last_folded_batch(self) -> int | None:
         """Highest batch id folded into base by compact() — versions at
@@ -832,55 +843,46 @@ class MorTable:
         hi=None,
         as_of_batch: int | None = None,
         branch: str | None = None,
+        col_bounds: dict | None = None,
     ) -> DataFrame | None:
+        """Base ∪ live commits with key in [lo, hi], before the LWW fold.
+        Each commit is read with its manifest's schema, so building this
+        runs no job per commit: only the base's schema read (and each
+        delete file's) runs one. ``col_bounds`` ({column: (lo, hi)}) also
+        prunes commits on column stats and filters rows: only sound
+        without the fold (scan_append)."""
         self._check_not_expired(as_of_batch)
         parts = []
         if self._has_parquet(self.base_dir):
-            base = self.spark.read.parquet(self.base_dir)
             # positional deletes strike physical base rows before any
             # logical (LWW) merge — the Iceberg v2 read contract
-            base = self._apply_pos_deletes(base, as_of_batch)
-            if lo is not None:
-                base = base.filter(F.col(self.key) >= lo)
-            if hi is not None:
-                base = base.filter(F.col(self.key) <= hi)
-            parts.append(base)
+            base = self.spark.read.parquet(self.base_dir)
+            parts.append(self._apply_pos_deletes(base, as_of_batch))
         if branch is not None:
             # branch view = main AS OF the fork + the branch's commits;
             # as_of_batch (if given) bounds the BRANCH-side commit ids
-            ref = self._branch_ref(branch)
-            main_as_of = ref["fork_batch"]
-            delta_batches = (
-                [] if main_as_of is None else self.prune_batches(lo, hi, main_as_of)
-            )
-            delta_batches += self.prune_batches(
+            main_as_of = self._branch_ref(branch)["fork_batch"]
+            dirs = [] if main_as_of is None else self.prune_batches(lo, hi, main_as_of)
+            dirs += self.prune_batches(
                 lo, hi, as_of_batch, root=f"{self.branches_dir}/{branch}"
             )
         else:
-            delta_batches = self.prune_batches(lo, hi, as_of_batch)
-        if delta_batches:
-            # one read per commit dir, always: a combined multi-root read
-            # would try to unify `batch=N` roots with the partition dirs
-            # beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and with
-            # partition EVOLUTION different commits legitimately carry
-            # different layouts — per-dir reads make mixed specs coexist
-            delta_parts = [
-                self.spark.read.option("mergeSchema", "true").parquet(d)
-                for d in delta_batches
-            ]
-            for deltas in delta_parts:
-                # manifests prune whole commits; the residual filter
-                # makes the row-level predicate exact (pushes to scan)
-                if lo is not None:
-                    deltas = deltas.filter(F.col(self.key) >= lo)
-                if hi is not None:
-                    deltas = deltas.filter(F.col(self.key) <= hi)
-                parts.append(deltas)
+            dirs = self.prune_batches(lo, hi, as_of_batch, col_bounds=col_bounds)
+        # one read per commit dir, with its manifest's schema: a combined
+        # multi-root read would unify `batch=N` roots with the partition
+        # dirs beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and under
+        # partition EVOLUTION per-dir reads let mixed layouts coexist
+        parts += [self._read_commit(d) for d in dirs]
         if not parts:
             return None
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        # manifests prune whole commits; the residual filter makes the
+        # row-level predicate exact (pushes to every scan)
+        for c, (c_lo, c_hi) in {self.key: (lo, hi), **(col_bounds or {})}.items():
+            if c_lo is not None:
+                df = df.filter(F.col(c) >= c_lo)
+            if c_hi is not None:
+                df = df.filter(F.col(c) <= c_hi)
         # equality deletes strike rows in ANY file (base or delta) with
         # op_seq at or below the delete's sequence cut — applied after
         # the union, before the LWW fold (the Iceberg v2 read order)
@@ -1283,9 +1285,9 @@ class MorTable:
         zorder_by: tuple[str, str] | None = None,
     ) -> None:
         """Rewrite base from the merged snapshot; fold deltas (reference
-        A24 RewriteDataFiles, docs/design.md:394-400). Spark jobs: a
-        schema read of base and of each delta dir, the merged view's
-        shuffle stage and the write; six over a base plus three deltas.
+        A24 RewriteDataFiles, docs/design.md:394-400). Spark jobs: the
+        base's schema read, the merged view's shuffle stage and the
+        write; three, as each delta is read with its manifest's schema.
 
         ``max_records_per_file`` bounds output file size (Iceberg's
         rewrite target-file-size, record-count proxy) via Spark's
@@ -1470,7 +1472,7 @@ class MorTable:
         target = f"{self.staging_dir}/batch={batch_id}"
         if not self._has_parquet(target):
             return [f"batch {batch_id}: nothing staged"]
-        return self._audit_df(self.spark.read.parquet(target), expect_min_rows, checks)
+        return self._audit_df(self._read_commit(target), expect_min_rows, checks)
 
     def _audit_df(self, df, expect_min_rows: int, checks) -> list:
         """The audit core shared by staged-batch and branch audits:
@@ -1523,7 +1525,7 @@ class MorTable:
             problems += [
                 f"branch commit {b}: {p}"
                 for p in self._audit_df(
-                    self.spark.read.parquet(target), expect_min_rows, None
+                    self._read_commit(target), expect_min_rows, None
                 )
             ]
         if not problems:
@@ -1562,7 +1564,8 @@ class MorTable:
         conflict, SHIFT every staged op_seq by a constant so the batch
         lands strictly after the interloper, preserving intra-batch
         order, and publish that rewrite instead. The check reads only
-        op_seq columns, in O(1) jobs. CDC feeds with globally monotone
+        op_seq columns, with each commit's manifest schema: no job per
+        commit. CDC feeds with globally monotone
         resume-token seqs never trigger it; writers are otherwise
         assumed single-publisher per table (no cross-process commit
         lock here — the catalog provides that in a real Iceberg
@@ -1571,15 +1574,12 @@ class MorTable:
         dst = f"{self.delta_dir}/batch={batch_id}"
         if not self._has_parquet(src):
             raise FileNotFoundError(f"no staged batch {batch_id} to publish")
-        staged = self.spark.read.parquet(src)
+        staged = self._read_commit(src)
         lo = staged.agg(F.min(OP_SEQ)).head()[0]
-        # a declared schema skips each dir's schema-inference job; the
-        # select drops the partition columns a read still infers from
-        # dir names, so flat and partitioned commits union
+        # the select drops the partition columns a read infers from dir
+        # names, so flat and partitioned commits union
         others = [
-            self.spark.read.schema(f"{sql_ident(OP_SEQ)} BIGINT").parquet(d).select(OP_SEQ)
-            for d in self.prune_batches()
-            if d != dst
+            self._read_commit(d).select(OP_SEQ) for d in self.prune_batches() if d != dst
         ]
         cur_max = 0
         if others:

@@ -4,7 +4,11 @@ Spark jobs, with or without a quarantine dir, ``MorTable.commit_batch``
 at most two, ``commit_to_branch`` at most two (the same commit onto a
 branch), a bulk ``commit_batches`` of LWW-folded ops at most eight, and
 ``apply_batch_wap`` at most twelve, however many commits the table
-holds, and ``MorTable.compact`` of a base plus three deltas at most six.
+holds, ``MorTable.compact`` of a base plus three deltas at most three,
+and building ``MorTable._raw`` (the read path under ``snapshot``,
+``lookup``, ``changes`` and ``scan_append``) exactly one, however many
+commits are live: each commit dir is read with the schema its manifest
+records, so only the base's schema read runs a job.
 Jobs are counted with a job group and ``statusTracker``, the
 same attribution the benchmark's traced run uses.
 
@@ -122,17 +126,27 @@ def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
     assert len(set(counts)) == 1, f"apply_batch_wap jobs per batch: {counts}"
 
 
-def test_compact_runs_at_most_six_jobs(spark, tmp_path):
+def test_raw_runs_one_job_however_many_commits(spark, tmp_path):
+    t = MorTable(spark, str(tmp_path / "raw"), key="doc_id")
+    t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
+    counts = []
+    for b in range(1, 7):
+        t.commit_batch(batch_to_ops(_batch(spark, b)), b)
+        counts.append(_jobs(spark, f"budget-raw-{b}", t._raw)[1])
+    assert counts == [1] * 6, f"_raw() jobs over a base plus 1..6 commits: {counts}"
+
+
+def test_compact_runs_at_most_three_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "compact"), key="doc_id")
     t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
     for b in range(1, 4):
         t.commit_batch(batch_to_ops(_batch(spark, b)), b)
     n_rows = t.snapshot().count()
-    # a schema read of base and of each delta dir, the merged view's
-    # shuffle stage and the write
+    # the base's schema read (each delta dir is read with its manifest's
+    # schema), the merged view's shuffle stage and the write
     _, n = _jobs(spark, "budget-compact", t.compact)
     assert t._delta_batch_ids() == [] and t.snapshot().count() == n_rows
-    assert n <= 6, f"compact ran {n} Spark jobs"
+    assert n <= 3, f"compact ran {n} Spark jobs"
 
 
 def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):

@@ -2,10 +2,13 @@
 field-identical to manifests built by reading the committed files back
 (the former implementation, kept below as the oracle) on every commit
 path: commit_batch, commit_to_branch, stage_batch, and publish_batch's
-op_seq rebase. Under a partition spec the read path re-infers the
-partition column's type from directory names; where that type holds
-different JSON values than the written one the observed manifest omits
-the column's bounds, and pruning keeps every commit it kept before."""
+op_seq rebase (tests/test_bulk_commit.py holds the bulk path to the
+loop's manifests). The recorded schema is the one a read of the files
+infers, minus the partition column. Under a partition spec the read
+path re-infers the partition column's type from directory names; where
+that type holds different JSON values than the written one the observed
+manifest omits the column's bounds, and pruning keeps every commit it
+kept before."""
 
 from __future__ import annotations
 
@@ -13,6 +16,7 @@ import json
 import shutil
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mongodb_iceberg_sync_spark.sync.table_store import (
     MANIFEST,
@@ -71,6 +75,9 @@ def _read_back_manifest(t: MorTable, target: str) -> dict:
         "bloom": format(bitmap, "x"),
         "spec": t.partition_col,
         "columns": columns,
+        "schema": StructType(
+            [f for f in df.schema.fields if f.name != t.partition_col]
+        ).jsonValue(),
     }
 
 
@@ -133,7 +140,9 @@ def test_empty_commit(spark, tmp_path):
     # back; the observed manifest still lands
     tp = MorTable(spark, str(tmp_path / "ep"), key="doc_id", partition_col="day")
     assert tp.commit_batch(_batch(spark, ["a"], 0).filter(F.lit(False)), 0) == 0
-    assert _on_disk(f"{tp.delta_dir}/batch=0") == dict(m, spec="day")
+    schema = dict(m["schema"])
+    schema["fields"] = [f for f in schema["fields"] if f["name"] != "day"]
+    assert _on_disk(f"{tp.delta_dir}/batch=0") == dict(m, spec="day", schema=schema)
 
 
 def test_commit_to_branch(spark, tmp_path):

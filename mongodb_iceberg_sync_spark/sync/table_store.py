@@ -9,19 +9,23 @@ parquet, structured exactly like Iceberg would:
   {table}/base/            — compacted data files ("data files")
   {table}/deltas/batch=N/  — per-commit upsert+tombstone files
                              ("equality delete files" + appended rows)
+  {table}/pos_deletes/delete=N/, {table}/eq_deletes/delete=N/
+                           — positional and equality delete files
   {table}/staging/         — commits and base rewrites in flight; never read
   {table}/archive/gen=N/   — base dirs (and delete files) a fold replaced,
                              kept until expire_snapshots()
 
-- Read  = base ∪ deltas, each commit read with its manifest's schema;
-  last-writer-wins by (key, op_seq), tombstones dropped (Iceberg's MoR).
-- Write = one delta directory per batch_id, under one protocol: stage
-  the rows and their manifest (key bounds, column bounds, key bloom,
-  observed by the write itself — no read-back job) under staging/,
-  then publish the finished dir by rename. A reader sees a whole
-  commit with its manifest or none of it, and a replayed batch
-  replaces its own directory ⇒ idempotent commits (reference A21
-  at-least-once protocol, docs/design.md:339-348).
+- Read  = base ∪ deltas less the rows delete files strike, each commit
+  and delete file read with its manifest's schema; last-writer-wins by
+  (key, op_seq), tombstones dropped (Iceberg's MoR).
+- Write = one delta or delete directory per batch_id, under one
+  protocol: stage the rows and their manifest (the schema; for a delta
+  also key bounds, column bounds and key bloom, observed by the write
+  itself — no read-back job) under staging/, then publish the
+  finished dir by rename. A reader sees a whole commit
+  with its manifest or none of it, and a replayed batch replaces its
+  own directory ⇒ idempotent commits (reference A21 at-least-once
+  protocol, docs/design.md:339-348).
 - Compact = one fold step (_fold) behind compact(), compact(where=...)
   and truncate(): stage the new base under staging/, archive the base
   dirs it replaces, rename it in, retire the deltas and delete files it
@@ -169,22 +173,19 @@ class MorTable:
     def pos_delete_dir(self) -> str:
         return f"{self.path}/pos_deletes"
 
-    # -- positional deletes (Iceberg v2 merge-on-read delete files) ---
+    # -- delete files (Iceberg v2 merge-on-read) -----------------------
     #
-    # The key-tombstone path (commit_batch with op=delete) is the
-    # EQUALITY-delete analog: it kills a KEY, whatever row currently
-    # carries it. Positional deletes are the other Iceberg v2 delete
-    # shape: a delete FILE of (file_path, row_index) pairs that kills
-    # specific physical rows of specific data files — DELETE WHERE
-    # without rewriting a single data file, and without any key
-    # semantics (a later upsert of the same key resurrects it, exactly
-    # Iceberg's row-level contract). Spark-first: positions come from
-    # the parquet reader's hidden `_metadata.file_path` /
-    # `_metadata.row_index` columns, and the read path applies delete
-    # files as one broadcast anti-join — the same per-task delete-index
-    # shape Iceberg readers use. Reference hook: docs/design.md's MoR
-    # delete handling (equality deletes); this adds the v2 positional
-    # half of that spec.
+    # A key tombstone (commit_batch with op=delete) kills a KEY, whatever
+    # row carries it. Delete files are Iceberg v2's other two shapes,
+    # each a commit under its own root in the batch-id space: a
+    # positional delete (delete_where) kills physical base rows by the
+    # (file_path, row_index) the parquet reader's hidden `_metadata`
+    # columns report, without key semantics (a later upsert of the key
+    # resurrects it — Iceberg's row-level contract); an equality delete
+    # (delete_equality) kills rows by value up to a sequence cut. The
+    # read path applies each as a broadcast anti-join, the per-task
+    # delete-index shape Iceberg readers use (reference: docs/design.md's
+    # MoR delete handling).
 
     @staticmethod
     def _ids(root: str, prefix: str) -> list[int]:
@@ -211,43 +212,38 @@ class MorTable:
         """Iceberg v2 EQUALITY delete file: ``values_df``'s columns are
         the equality ids, its rows the values to delete. Strikes every
         data row (base OR delta, any file) matching a value row whose
-        op_seq is <= the table's max op_seq at delete time (the
-        sequence-number cut) — later upserts of the same values
-        survive, exactly Iceberg's older-sequence-only contract. The
-        third delete shape beside key tombstones (commit_batch
-        op=delete) and positional deletes (delete_where): no scan of
-        the data is needed AT ALL to commit one — the delete file is
-        just the value rows — which is why CDC engines emit equality
-        deletes when they know values but not positions. Shares the
-        commit id-space (time travel to before ``batch_id`` does not
-        see it; rollback drops it). Returns the delete-row count."""
-        latest = self._latest()
-        seq_cut = (
-            None
-            if latest is None
-            else latest.agg(F.max(OP_SEQ)).head()[0]
-        )
-        if seq_cut is None:
+        op_seq is <= the sequence-number cut: the commits' max op_seq,
+        read before any delete file applies (_max_op_seq), so a replay
+        keeps its cut. Later upserts of the same values survive,
+        exactly Iceberg's older-sequence-only contract. The third delete
+        shape beside key tombstones (commit_batch op=delete) and
+        positional deletes (delete_where): committing one scans for no
+        matching row — the file is just the value rows — which is why
+        CDC engines emit equality deletes when they know values but not
+        positions. Shares the commit id-space (time travel to before
+        ``batch_id`` does not see it; rollback drops it); a replay
+        replaces its own file (_commit). Spark jobs: the base's schema
+        read, then two each for the op_seq max and the distinct write;
+        five however many delete files are live. Returns the delete-row
+        count."""
+        raw = self._raw()
+        if raw is None:
             return 0
         # Iceberg contract: equality ids must be schema columns — a
         # delete on a column no data row carries could never match and
         # would break the read-path join
-        known = set(latest.columns)
-        unknown = [c for c in values_df.columns if c not in known]
+        unknown = [c for c in values_df.columns if c not in raw.columns]
         if unknown:
             raise ValueError(
                 f"equality-delete columns {unknown} not in table schema "
-                f"{sorted(known)}"
+                f"{sorted(raw.columns)}"
             )
-        target = f"{self.eq_delete_dir}/delete={batch_id}"
         out = values_df.distinct().withColumn(
-            "_seq_cut", F.lit(seq_cut).cast("long")
+            "_seq_cut", F.lit(self._max_op_seq() or 0).cast("long")
         )
-        obs = Observation()
-        out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(target)
-        return obs.get["n"]
+        return self._commit(
+            out, f"{self.eq_delete_dir}/delete={batch_id}", self._write_delete
+        )
 
     def _delete_dirs(self, root: str, as_of_batch) -> list[str]:
         """The delete commits under ``root`` visible AS OF ``as_of_batch``."""
@@ -261,7 +257,7 @@ class MorTable:
         match a delete row AND its op_seq <= that file's sequence cut.
         Broadcast: delete files hold VALUES, not data."""
         for d in self._delete_dirs(self.eq_delete_dir, as_of_batch):
-            dels = self.spark.read.parquet(d)
+            dels = self._read_commit(d)
             eq_cols = [c for c in dels.columns if c != "_seq_cut"]
             if any(c not in df.columns for c in eq_cols):
                 # a schema rollback removed an equality-id column: no
@@ -281,11 +277,12 @@ class MorTable:
         rows into pos_deletes/delete=<batch_id>, touch no data file.
         Shares the commit id-space with delta batches so VERSION AS OF
         an earlier batch does not see the delete and rollback drops it.
-        Returns the number of delete records written. Rows living in
-        un-compacted DELTA commits are not covered — run compact()
-        first (Iceberg positional deletes likewise only target already-
-        written data files; the engine's DELETE falls back to equality
-        deletes for hot rows)."""
+        A replay replaces its own file (_commit). Returns the number
+        of delete records written. Rows living in un-compacted DELTA
+        commits are not covered — run compact() first (Iceberg
+        positional deletes likewise only target already-written data
+        files; the engine's DELETE falls back to equality deletes for
+        hot rows)."""
         if not self._has_parquet(self.base_dir):
             return 0
         base = self.spark.read.parquet(self.base_dir)
@@ -293,12 +290,9 @@ class MorTable:
             F.col("_metadata.file_path").alias("file_path"),
             F.col("_metadata.row_index").alias("row_index"),
         )
-        target = f"{self.pos_delete_dir}/delete={batch_id}"
-        obs = Observation()
-        dels.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(target)
-        return obs.get["n"]
+        return self._commit(
+            dels, f"{self.pos_delete_dir}/delete={batch_id}", self._write_delete
+        )
 
     def _apply_pos_deletes(self, base: DataFrame, as_of_batch) -> DataFrame:
         """Anti-join the base scan against every visible delete file.
@@ -309,7 +303,7 @@ class MorTable:
         dirs = self._delete_dirs(self.pos_delete_dir, as_of_batch)
         if not dirs:
             return base
-        dels = self.spark.read.parquet(*dirs).select("file_path", "row_index")
+        dels = reduce(DataFrame.union, [self._read_commit(d) for d in dirs])
         tagged = base.withColumns(
             {
                 "_pd_file": F.col("_metadata.file_path"),
@@ -471,11 +465,11 @@ class MorTable:
             row = stats[b]  # every dir the partitioned write made has rows
             self._dump_manifest(
                 f"{staging}/{_BULK_COL}={b}",
+                df.drop(_BULK_COL).schema,
                 row.lo,
                 row.hi,
                 self._col_stats(row, stat_cols),
                 bitmaps.get(b, 0),
-                df.drop(_BULK_COL).schema,
             )
 
     # Bloom sizing: 4096 bits / 3 hashes ≈ 1.5% false-positive rate at
@@ -554,32 +548,36 @@ class MorTable:
                 col_stats[c] = {"min": lo_v, "max": hi_v}
         return col_stats
 
-    def _dump_manifest(self, target, lo, hi, col_stats, bitmap: int, schema) -> None:
+    def _dump_manifest(
+        self, target, schema, lo=None, hi=None, col_stats=None, bitmap=None
+    ) -> None:
+        """Every manifest records ``schema``; a data commit's (``bitmap``
+        given) also its key bounds, key bloom, spec and column bounds."""
+        m = {}
+        if bitmap is not None:
+            m = {
+                "key": self.key,
+                "min": lo,
+                "max": hi,
+                "bloom_bits": self._BLOOM_BITS,
+                "bloom": format(bitmap, "x"),
+                # spec this commit was written under (partition
+                # evolution: later commits may use a different one)
+                "spec": self.partition_col,
+                "columns": col_stats,
+            }
+        # what a read of the dir returns, less the partition column it
+        # infers from the dir names: _read_commit declares it, so no
+        # schema-inference job runs
+        m["schema"] = _as_read(schema.jsonValue())
         with open(f"{target}/{MANIFEST}", "w") as f:
-            json.dump(
-                {
-                    "key": self.key,
-                    "min": lo,
-                    "max": hi,
-                    "bloom_bits": self._BLOOM_BITS,
-                    "bloom": format(bitmap, "x"),
-                    # spec this commit was written under (partition
-                    # evolution: later commits may use a different one)
-                    "spec": self.partition_col,
-                    "columns": col_stats,
-                    # what a read of the dir returns, less the partition
-                    # column it infers from the dir names: _read_commit
-                    # declares it, so no schema-inference job runs
-                    "schema": _as_read(schema.jsonValue()),
-                },
-                f,
-            )
+            json.dump(m, f)
 
-    def _commit(self, df: DataFrame, dst: str) -> int:
-        """Stage a commit bound for ``dst``, then publish it; returns its
-        row count."""
+    def _commit(self, df: DataFrame, dst: str, write=None) -> int:
+        """Stage a commit bound for ``dst`` with ``write`` (default
+        _write_commit), then publish it; returns its row count."""
         staged = self._staged(dst)
-        n = self._write_commit(df, staged)
+        n = (write or self._write_commit)(df, staged)
         self._publish(staged, dst)
         return n
 
@@ -592,11 +590,12 @@ class MorTable:
     def _publish(self, src: str | None, dst: str) -> None:
         """Make the finished commit dir ``src`` (data and manifest) visible
         as ``dst``, or with ``src`` None take ``dst`` out — the only code
-        that moves a commit dir into or out of deltas/ or
-        branches/<name>/. A new id is one rename; a replaced id is
-        first moved aside into staging/, so it is missing only between
-        two renames (a crash there: the batch replays, its checkpoint
-        unwritten)."""
+        that moves a commit dir into or out of deltas/,
+        branches/<name>/, pos_deletes/ or eq_deletes/, apart from what
+        a fold absorbs and drop_branch discards. A new id is one
+        rename; a replaced id is first moved aside into staging/, so it
+        is missing only between two renames (a crash there: the batch
+        replays, its checkpoint unwritten)."""
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.makedirs(self.staging_dir, exist_ok=True)
         old = f"{self._staged(dst)}.old"
@@ -667,8 +666,16 @@ class MorTable:
             types = {x.schema[spec].dataType.typeName() for x in (df, read)}
             if len(types) > 1 and not types <= {"byte", "short", "integer", "long"}:
                 del col_stats[spec]
-        self._dump_manifest(staged, row["lo"], row["hi"], col_stats, bitmap, schema)
+        self._dump_manifest(staged, schema, row["lo"], row["hi"], col_stats, bitmap)
         return row["n"]
+
+    def _write_delete(self, df: DataFrame, staged: str) -> int:
+        """_write_commit for a delete file, which has no key column: its
+        manifest records its schema alone."""
+        obs = Observation()
+        df.observe(obs, F.expr("count(1) AS n")).write.mode("overwrite").parquet(staged)
+        self._dump_manifest(staged, df.schema)
+        return obs.get["n"]
 
     def _manifest(self, path: str) -> dict:
         """The manifest of the commit dir ``path``; {} when it is missing
@@ -690,6 +697,20 @@ class MorTable:
         if schema is not None:
             reader = reader.schema(StructType.fromJson(schema))
         return reader.parquet(path)
+
+    def _max_op_seq(self, exclude: str | None = None) -> int | None:
+        """Max op_seq over main's live commit dirs other than ``exclude``,
+        each read with its manifest's schema, before any delete file
+        applies (a delete must not lower its own replay's cut); None
+        when no commit holds one. Base rows carry op_seq 0."""
+        # the select drops the partition columns a read infers from dir
+        # names, so flat and partitioned commits union
+        seqs = [
+            self._read_commit(d).select(OP_SEQ) for d in self.prune_batches() if d != exclude
+        ]
+        if not seqs:
+            return None
+        return reduce(DataFrame.union, seqs).agg(F.max(OP_SEQ)).head()[0]
 
     def _bloom_may_contain(self, manifest: dict, key_value) -> bool:
         """False-negative-free membership: False ⇒ the commit definitely
@@ -794,15 +815,11 @@ class MorTable:
         lower/upper-bounds evaluator; callers must only use it for
         append-only reads (see scan_append)."""
         root = root or self.delta_dir
-        if not os.path.isdir(root):
-            return []
         out = []
-        for d in sorted(os.listdir(root)):
-            if not d.startswith("batch="):
+        for b in self._ids(root, "batch="):
+            if as_of_batch is not None and b > as_of_batch:
                 continue
-            if as_of_batch is not None and int(d.split("=", 1)[1]) > as_of_batch:
-                continue
-            path = f"{root}/{d}"
+            path = f"{root}/batch={b}"
             if not self._has_parquet(path):
                 continue
             m = self._manifest(path)
@@ -846,9 +863,9 @@ class MorTable:
         col_bounds: dict | None = None,
     ) -> DataFrame | None:
         """Base ∪ live commits with key in [lo, hi], before the LWW fold.
-        Each commit is read with its manifest's schema, so building this
-        runs no job per commit: only the base's schema read (and each
-        delete file's) runs one. ``col_bounds`` ({column: (lo, hi)}) also
+        Each commit and delete file is read with its manifest's schema,
+        so building this runs one job however many are live: the base's
+        schema read. ``col_bounds`` ({column: (lo, hi)}) also
         prunes commits on column stats and filters rows: only sound
         without the fold (scan_append)."""
         self._check_not_expired(as_of_batch)
@@ -1008,8 +1025,8 @@ class MorTable:
 
         Scale: ONE key-equi left join of source against the merged
         snapshot (both sides shuffle on the key; AQE broadcasts a
-        small source), plus one O(1)-row aggregate for the op_seq
-        base — no per-row driver work. With Iceberg jars this maps
+        small source), plus the commits' max op_seq (_max_op_seq) for
+        the op_seq base — no per-row driver work. With Iceberg jars this maps
         1:1 onto ``MERGE INTO t USING s ON ... WHEN ...``.
         """
         latest = self._latest()
@@ -1026,12 +1043,12 @@ class MorTable:
             )
             j = source.join(tgt, source[self.key] == tgt["_tkey"], "left")
             matched = F.col("_tkey").isNotNull()
-            seq_row = latest.agg(F.max(OP_SEQ).alias("m")).head()
-            seq0 = int(seq_row.m or 0) + 1
         else:
             j = source.select("*", F.lit(None).alias("_tkey"), F.lit(None).alias("_target"))
             matched = F.lit(False)
-            seq0 = 1
+        # above every committed op_seq, struck rows' too, so no equality
+        # delete's cut reaches a re-inserted row
+        seq0 = (self._max_op_seq() or 0) + 1
 
         def _cond(c):
             if c is None:
@@ -1071,6 +1088,14 @@ class MorTable:
     def _delta_batch_ids(self) -> list[int]:
         return self._ids(self.delta_dir, "batch=")
 
+    def _commit_roots(self) -> list[tuple[str, str, str]]:
+        """(files() section, root, dir prefix) of main's commit roots."""
+        return [
+            ("delta", self.delta_dir, "batch="),
+            ("pos_delete", self.pos_delete_dir, "delete="),
+            ("eq_delete", self.eq_delete_dir, "delete="),
+        ]
+
     def _mark_folded(self, batch_id: int | None) -> None:
         if batch_id is None:
             return
@@ -1088,18 +1113,13 @@ class MorTable:
         last compaction (those versions are expired — same contract as
         snapshot(as_of_batch=...)). Returns the dropped batch ids."""
         self._check_not_expired(batch_id)
-        dropped = [b for b in self._delta_batch_ids() if b > batch_id]
-        for b in dropped:
-            shutil.rmtree(f"{self.delta_dir}/batch={b}", ignore_errors=True)
-        # positional/equality-delete commits share the id-space: roll
-        # them back too
-        for root, id_fn in (
-            (self.pos_delete_dir, self._pos_delete_ids),
-            (self.eq_delete_dir, self._eq_delete_ids),
-        ):
-            for i in id_fn():
+        dropped = []
+        # delete commits share the id-space: they roll back too, each
+        # taken out whole by _publish
+        for _, root, prefix in self._commit_roots():
+            for i in self._ids(root, prefix):
                 if i > batch_id:
-                    shutil.rmtree(f"{root}/delete={i}", ignore_errors=True)
+                    self._publish(None, f"{root}/{prefix}{i}")
                     dropped.append(i)
         shutil.rmtree(self.staging_dir, ignore_errors=True)
         return dropped
@@ -1287,7 +1307,8 @@ class MorTable:
         """Rewrite base from the merged snapshot; fold deltas (reference
         A24 RewriteDataFiles, docs/design.md:394-400). Spark jobs: the
         base's schema read, the merged view's shuffle stage and the
-        write; three, as each delta is read with its manifest's schema.
+        write, as each commit is read with its manifest's schema; plus
+        one broadcast per live delete file (the positional ones as one).
 
         ``max_records_per_file`` bounds output file size (Iceberg's
         rewrite target-file-size, record-count proxy) via Spark's
@@ -1563,9 +1584,10 @@ class MorTable:
         replaces the one with this id; base rows carry op_seq 0); on
         conflict, SHIFT every staged op_seq by a constant so the batch
         lands strictly after the interloper, preserving intra-batch
-        order, and publish that rewrite instead. The check reads only
-        op_seq columns, with each commit's manifest schema: no job per
-        commit. CDC feeds with globally monotone
+        order, and publish that rewrite instead. The check is
+        _max_op_seq, delete_equality's sequence cut too: it reads only
+        op_seq columns, with each commit's manifest schema, so no job
+        per commit. CDC feeds with globally monotone
         resume-token seqs never trigger it; writers are otherwise
         assumed single-publisher per table (no cross-process commit
         lock here — the catalog provides that in a real Iceberg
@@ -1576,14 +1598,7 @@ class MorTable:
             raise FileNotFoundError(f"no staged batch {batch_id} to publish")
         staged = self._read_commit(src)
         lo = staged.agg(F.min(OP_SEQ)).head()[0]
-        # the select drops the partition columns a read infers from dir
-        # names, so flat and partitioned commits union
-        others = [
-            self._read_commit(d).select(OP_SEQ) for d in self.prune_batches() if d != dst
-        ]
-        cur_max = 0
-        if others:
-            cur_max = reduce(DataFrame.union, others).agg(F.max(OP_SEQ)).head()[0] or 0
+        cur_max = self._max_op_seq(exclude=dst) or 0
         if lo is None or lo > cur_max:
             self._publish(src, dst)
         else:
@@ -1699,38 +1714,22 @@ class MorTable:
     def _file_rows(
         self, include_archive: bool = False, include_staging: bool = False
     ) -> list[dict]:
-        rows = [
-            self._file_row(p, "base", None) for p in self._walk_parquet(self.base_dir)
-        ]
-        for b in self._delta_batch_ids():
-            d = f"{self.delta_dir}/batch={b}"
-            rows += [self._file_row(p, "delta", b) for p in self._walk_parquet(d)]
-        # Iceberg's files metadata lists delete files alongside data
-        # files (content=POSITION_DELETES); same here, as their own
-        # section keyed by the delete commit id
-        for i in self._pos_delete_ids():
-            d = f"{self.pos_delete_dir}/delete={i}"
-            rows += [
-                self._file_row(p, "pos_delete", i) for p in self._walk_parquet(d)
-            ]
-        for i in self._eq_delete_ids():
-            d = f"{self.eq_delete_dir}/delete={i}"
-            rows += [
-                self._file_row(p, "eq_delete", i) for p in self._walk_parquet(d)
-            ]
-        # staged (WAP) commits are part of the operational picture —
-        # an operator debugging a stuck audit needs to SEE them in
-        # files() — but they are never part of the readable snapshot,
-        # so snapshots()/partitions() (live-state views) exclude them
+        # Iceberg's files metadata lists delete files beside data files
+        # (content=POSITION_DELETES); same here, a section each, keyed by
+        # the delete commit id. Staged (WAP) commits show in files() for
+        # an operator debugging a stuck audit, never in the live-state
+        # views snapshots()/partitions(). A root without a dir prefix is
+        # one section with no commit id.
+        roots = [("base", self.base_dir, None), *self._commit_roots()]
         if include_staging:
-            for b in self._ids(self.staging_dir, "batch="):
-                d = f"{self.staging_dir}/batch={b}"
-                rows += [self._file_row(p, "staged", b) for p in self._walk_parquet(d)]
-        if include_archive and os.path.isdir(self.archive_dir):
-            rows += [
-                self._file_row(p, "archive", None)
-                for p in self._walk_parquet(self.archive_dir)
-            ]
+            roots.append(("staged", self.staging_dir, "batch="))
+        if include_archive:
+            roots.append(("archive", self.archive_dir, None))
+        rows = []
+        for section, root, prefix in roots:
+            for i in [None] if prefix is None else self._ids(root, prefix):
+                d = root if i is None else f"{root}/{prefix}{i}"
+                rows += [self._file_row(p, section, i) for p in self._walk_parquet(d)]
         return rows
 
     def files(self, include_archive: bool = False) -> DataFrame:

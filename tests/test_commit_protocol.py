@@ -1,6 +1,7 @@
 """MorTable has one commit protocol: a commit's rows and manifest are
 staged under ``staging/``, and ``_publish`` makes the finished dir
-visible under ``deltas/`` or ``branches/<name>/`` by rename.
+visible under ``deltas/``, ``branches/<name>/``, ``pos_deletes/`` or
+``eq_deletes/`` by rename.
 
 Crash injection: for each write path, the manifest dump or the publish
 raises. Then the readable state must equal the state before the
@@ -29,8 +30,12 @@ def _mk_batch(spark, rows):
 
 
 def _setup(spark, t):
+    # a base for delete_where to strike, and an equality delete to replay
+    base = _mk_batch(spark, [("y", 0, "upsert", -1), ("z", 0, "upsert", -2)])
+    t.append_base(base.drop("_op_seq", "_op"))
     t.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1), ("b", 2, "upsert", 2)]), 0)
     t.commit_batch(_mk_batch(spark, [("c", 3, "upsert", 3)]), 1)
+    _delete_equality_replay(spark, t)
     t.create_branch("audit")
     t.commit_to_branch(_mk_batch(spark, [("d", 4, "upsert", 4)]), 2, "audit")
 
@@ -69,12 +74,32 @@ def _publish_batch(spark, t):
     t.publish_batch(5)
 
 
+def _full_doc(spark, v):
+    return spark.createDataFrame([(json.dumps({"v": v}),)], "full_doc string")
+
+
+def _delete_equality_new(spark, t):
+    t.delete_equality(_full_doc(spark, 3), batch_id=7)
+
+
+def _delete_equality_replay(spark, t):
+    # replaces delete 6: until the new file is published the old one stays
+    t.delete_equality(_full_doc(spark, 2), batch_id=6)
+
+
+def _delete_where(spark, t):
+    t.delete_where(F.col("doc_id") == "z", batch_id=8)
+
+
 COMMITS = {
     "commit_batch": _commit_batch_new,
     "commit_batch_replay": _commit_batch_replay,
     "commit_to_branch": _commit_to_branch,
     "commit_batches": _commit_batches,
     "publish_batch": _publish_batch,
+    "delete_equality": _delete_equality_new,
+    "delete_equality_replay": _delete_equality_replay,
+    "delete_where": _delete_where,
 }
 
 
@@ -82,9 +107,9 @@ def _commit_dirs(t):
     """{commit dir relative to the table root: its manifest, or None}
     for every commit dir a reader can reach."""
     out = {}
-    for root in (t.delta_dir, t.branches_dir):
+    for root in (t.delta_dir, t.branches_dir, t.pos_delete_dir, t.eq_delete_dir):
         for parent, dirs, _ in os.walk(root):
-            for d in [d for d in dirs if d.startswith("batch=")]:
+            for d in [d for d in dirs if d.startswith(("batch=", "delete="))]:
                 path = os.path.join(parent, d)
                 try:
                     with open(f"{path}/{MANIFEST}") as f:

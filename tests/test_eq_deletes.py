@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from mongodb_iceberg_sync_spark.sync.table_store import MorTable
+from mongodb_iceberg_sync_spark.sync.table_store import MANIFEST, MorTable
 
 
 def _mk_batch(spark, rows):
@@ -118,3 +118,47 @@ def test_unknown_equality_column_rejected(spark, table):
         table.delete_equality(
             spark.createDataFrame([("x",)], "no_such_col string"), batch_id=1
         )
+
+
+def _seq_cuts(spark, t, batch_id):
+    d = f"{t.eq_delete_dir}/delete={batch_id}"
+    return [r._seq_cut for r in spark.read.parquet(d).collect()]
+
+
+def test_replayed_delete_keeps_its_cut(spark, tmp_path):
+    # the cut is read before any delete file applies: were the delete's
+    # own first copy applied, b (seq 2) would drop out of the max, the
+    # replay's cut would fall to 1, and b would come back
+    t = MorTable(spark, str(tmp_path / "replay"), key="doc_id")
+    t.commit_batch(
+        _mk_batch(spark, [("a", 1, "upsert", 10, "blue"), ("b", 2, "upsert", 20, "red")]),
+        0,
+    )
+    assert t.delete_equality(_vals(spark, [("red",)]), batch_id=1) == 1
+    assert _seq_cuts(spark, t, 1) == [2] and _keys(t) == ["a"]
+    assert t.delete_equality(_vals(spark, [("red",)]), batch_id=1) == 1
+    assert _seq_cuts(spark, t, 1) == [2] and _keys(t) == ["a"]
+
+
+def test_delete_file_without_manifest_still_applies(spark, table):
+    table.delete_equality(_vals(spark, [("red",)]), batch_id=1)
+    os.remove(f"{table.eq_delete_dir}/delete=1/{MANIFEST}")
+    assert _keys(table) == ["b"]
+
+
+def test_merge_reinserts_a_struck_row(spark, tmp_path):
+    # merge_into stamps its rows above every committed op_seq, the
+    # struck row's too, so the delete's cut cannot reach the new row
+    t = MorTable(spark, str(tmp_path / "merge"), key="doc_id")
+    t.commit_batch(
+        _mk_batch(spark, [("a", 1, "upsert", 10, "blue"), ("b", 5, "upsert", 20, "red")]),
+        0,
+    )
+    t.delete_equality(_vals(spark, [("red",)]), batch_id=1)
+    assert _keys(t) == ["a"]
+    src = spark.createDataFrame(
+        [("b", '{"v": 30}', 30, "red")],
+        "doc_id string, full_doc string, v long, cat string",
+    )
+    t.merge_into(src, batch_id=2)
+    assert _keys(t) == ["a", "b"]

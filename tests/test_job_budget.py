@@ -7,8 +7,11 @@ branch), a bulk ``commit_batches`` of LWW-folded ops at most eight, and
 holds, ``MorTable.compact`` of a base plus three deltas at most three,
 and building ``MorTable._raw`` (the read path under ``snapshot``,
 ``lookup``, ``changes`` and ``scan_append``) exactly one, however many
-commits are live: each commit dir is read with the schema its manifest
-records, so only the base's schema read runs a job.
+commits and delete files are live: each commit and delete dir is read
+with the schema its manifest records, so only the base's schema read
+runs a job. ``delete_equality`` runs exactly five, however many
+equality deletes are live, and ``compact`` over a base, deltas,
+positional deletes and three equality deletes at most seven.
 Jobs are counted with a job group and ``statusTracker``, the
 same attribution the benchmark's traced run uses.
 
@@ -19,6 +22,7 @@ site), so the per-batch expressions are SQL text."""
 from __future__ import annotations
 
 import py4j.clientserver
+from pyspark.sql import functions as F
 
 from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df, make_events
 from mongodb_iceberg_sync_spark.sync.apply import (
@@ -171,3 +175,54 @@ def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert stats["n_ops"] == 40
     assert 0 < len(calls) <= 300, f"apply_batch made {len(calls)} Py4J round trips"
+
+
+def _with_pos_deletes(spark, tmp_path, name):
+    """A base plus one delta and three live positional deletes."""
+    t = MorTable(spark, str(tmp_path / name), key="doc_id")
+    t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
+    t.commit_batch(batch_to_ops(_batch(spark, 1)), 1)
+    for i in range(3):
+        t.delete_where(F.col("doc_id") == f"doc{i}", 2 + i)
+    return t
+
+
+def _delete_equality(spark, t, i):
+    """The i-th equality delete, commit id 5 + i."""
+    vals = spark.createDataFrame([(f"doc{10 + i}",)], "doc_id string")
+    return t.delete_equality(vals, 5 + i)
+
+
+def test_raw_runs_one_job_however_many_delete_files(spark, tmp_path):
+    # every delete file is read with the schema its manifest records
+    t = _with_pos_deletes(spark, tmp_path, "raw-deletes")
+    counts = []
+    for i in range(3):
+        _delete_equality(spark, t, i)
+        counts.append(_jobs(spark, f"budget-raw-deletes-{i}", t._raw)[1])
+    assert counts == [1] * 3, f"_raw() jobs with 1..3 equality deletes: {counts}"
+
+
+def test_delete_equality_jobs_do_not_grow_with_deletes(spark, tmp_path):
+    # the base's schema read, the op_seq max over the commits (a map
+    # stage and a result) and the distinct write (the same two)
+    t = _with_pos_deletes(spark, tmp_path, "eq-deletes")
+    counts = [
+        _jobs(spark, f"budget-eq-{i}", lambda: _delete_equality(spark, t, i))[1]
+        for i in range(4)
+    ]
+    assert counts == [5] * 4, f"delete_equality jobs with 0..3 live: {counts}"
+
+
+def test_compact_with_delete_files_runs_at_most_seven_jobs(spark, tmp_path):
+    t = _with_pos_deletes(spark, tmp_path, "compact-deletes")
+    for b in (8, 9):
+        t.commit_batch(batch_to_ops(_batch(spark, b)), b)
+    for i in range(3):
+        _delete_equality(spark, t, i)
+    n_rows = t.snapshot().count()
+    # compact()'s three jobs plus one broadcast per delete file read:
+    # three equality deletes and the positional deletes' union
+    _, n = _jobs(spark, "budget-compact-deletes", t.compact)
+    assert t._eq_delete_ids() == [] and t.snapshot().count() == n_rows
+    assert n <= 7, f"compact with live delete files ran {n} Spark jobs"

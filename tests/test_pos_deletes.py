@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from mongodb_iceberg_sync_spark.sync.table_store import MorTable
+from mongodb_iceberg_sync_spark.sync.table_store import MANIFEST, MorTable
 
 
 def _mk_batch(spark, rows):
@@ -125,3 +125,17 @@ def test_delete_nothing_is_noop(table):
     n = table.delete_where(F.col("v") > 1000, batch_id=1)
     assert n == 0
     assert _keys(table) == ["a", "b", "c"]
+
+
+def test_replayed_delete_where_converges(table):
+    table.delete_where(F.col("v") >= 20, batch_id=1)
+    assert _keys(table) == ["a"]
+    assert table.delete_where(F.col("v") >= 20, batch_id=1) == 2
+    assert _keys(table) == ["a"]
+    assert os.listdir(table.staging_dir) == []
+
+
+def test_delete_file_without_manifest_still_applies(table):
+    table.delete_where(F.col("v") == 20, batch_id=1)
+    os.remove(f"{table.pos_delete_dir}/delete=1/{MANIFEST}")
+    assert _keys(table) == ["a", "c"]

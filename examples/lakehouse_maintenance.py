@@ -94,7 +94,8 @@ def main() -> int:
 
     print("4. bloom point lookup")
     dirs = t.prune_batches("e", "e")
-    print(f"  lookup('e') opens {len(dirs)} of {len(t._delta_batch_ids())} commits")
+    n_commits = t.refs().filter("ref = 'main'").head().n_commits
+    print(f"  lookup('e') opens {len(dirs)} of {n_commits} commits")
     print(f"  row: {t.lookup('e').collect()}")
 
     print("5. time travel + change data feed")
@@ -106,7 +107,7 @@ def main() -> int:
     print("6. partition evolution (unpartitioned -> day) + full compact")
     t.evolve_partition_spec("day")
     t.compact()
-    print(f"  base layout: {sorted(d for d in os.listdir(t.base_dir) if d.startswith('day='))}")
+    print(f"  base layout: {sorted(r.partition for r in t.partitions().collect())}")
     show("compacted", t)
 
     print("7. targeted compaction (cold partition d1)")

@@ -233,14 +233,14 @@ def _run_stream_demo(cfg, demo_dir: str) -> int:
 
     got = {r.doc_id for r in table.snapshot().collect()}
     want = set(expected_final_state(clean))
-    published = table._delta_batch_ids()
+    published = table.refs().filter("ref = 'main'").head().n_commits
     quarantined = spark.read.parquet(qdir)
     n_quarantined = quarantined.count()
     reasons = {r.reason.split(":")[0] for r in quarantined.select("reason").collect()}
-    staging_left = os.listdir(table.staging_dir) if os.path.isdir(table.staging_dir) else []
+    staging_left = [r.file_path for r in table.files().filter("section = 'staged'").collect()]
     ok = (
         got == want
-        and len(published) == 3
+        and published == 3
         and n_quarantined == n_poison
         and reasons == {"audit_failed"}
         and not staging_left
@@ -250,7 +250,7 @@ def _run_stream_demo(cfg, demo_dir: str) -> int:
             {
                 "stream_demo_ok": ok,
                 "final_docs": len(got),
-                "published_batches": len(published),
+                "published_batches": published,
                 "quarantined_rows": n_quarantined,
                 "quarantine_reasons": sorted(reasons),
                 "staging_leftovers": staging_left,

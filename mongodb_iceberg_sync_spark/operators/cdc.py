@@ -847,7 +847,7 @@ def q_cdc_branch_diff(spark, sf_dir):
     mn_snap = tbl.snapshot()
     br_snap = (
         tbl.snapshot(branch="audit")
-        if "audit" in tbl._read_refs()["branches"]
+        if tbl.refs().filter("ref = 'audit'").count()
         else None
     )
     if mn_snap is None or br_snap is None:  # empty source
@@ -1071,13 +1071,14 @@ def q_cdc_merge_into(spark, sf_dir):
     "(an empty slice) is staged, FAILS its min-rows audit, and is "
     "aborted. The table state the query reads must therefore be "
     "base + A only — WAP isolation (staged rows invisible), the "
-    "audit gate, the atomic publish rename, and the abort path are "
+    "audit gate, the atomic publish, and the abort path are "
     "all inside the oracle hash, which recomputes the same state "
     "from the raw log with a visibility predicate. "
-    "(sync/table_store.py:1098-1135; Iceberg's spark.wap.id staged-"
+    "(MorTable.stage_batch/audit_batch/publish_batch; Iceberg's spark.wap.id staged-"
     "commit pattern.) Scale: stage is one keyed write, audit one "
     "aggregation over the STAGED FILES, publish one directory "
-    "rename — cost independent of table size.",
+    "rename and one table-version write — cost independent of table "
+    "size.",
 )
 def q_cdc_wap_publish(spark, sf_dir):
     from ..sync.table_store import OP_SEQ, OP_TYPE, MorTable

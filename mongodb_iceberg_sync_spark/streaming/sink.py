@@ -3,10 +3,10 @@
 
 This is the steady-state write path of the sync engine: each
 micro-batch of CDC events is LWW-deduped within the batch and committed
-keyed by batch_id: staged with its manifest, then published as the
-batch's delta directory by rename. Spark may replay a batch after
-failure, and the replay replaces that same directory, converging to the
-same state (the Spark-native equivalent of the reference's
+keyed by batch_id: written with its manifest to a fresh dir, then
+published by one table-version write that lists it. Spark may replay a
+batch after failure, and the replay replaces that batch's commit,
+converging to the same state (the Spark-native equivalent of the reference's
 commit-ordering protocol, docs/design.md:339-348).
 """
 
@@ -85,7 +85,7 @@ def foreach_batch_branch(
     invisible to main readers for the whole run — and the caller
     publishes with ``table.publish_branch(branch, checks=...)`` after
     the stream drains: one audit over the full accumulated state, one
-    rename-only fast-forward. Compare foreach_batch_merge(audit_checks=
+    fast-forward (a single table version). Compare foreach_batch_merge(audit_checks=
     ...), which audits and publishes per micro-batch: per-batch WAP
     bounds blast radius at one batch; branch WAP validates cross-batch
     invariants (referential counts, aggregate drift) that no single
@@ -98,8 +98,10 @@ def foreach_batch_branch(
     apply_batch_wap)."""
     from ..sync.apply import INVALIDATE_OPS, batch_to_ops
 
-    ref = table._branch_ref(branch)
-    base = ref["fork_batch"] if ref["fork_batch"] is not None else -1
+    refs = table.refs().filter(F.col("ref") == branch).collect()
+    if not refs:
+        raise ValueError(f"no such branch {branch!r}")
+    base = refs[0].fork_batch if refs[0].fork_batch is not None else -1
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         n_invalid = batch_df.filter(

@@ -103,7 +103,7 @@ def apply_batch(
     batches are corrected after it:
 
     - no normal op (an empty batch, or invalidations only): the
-      write's ``batch=N`` commit is unpublished (one rename), leaving
+      write's ``batch=N`` commit is unpublished (one version), leaving
       the table as if nothing had committed;
     - an invalidation: ``batch=N`` is re-committed with only the ops
       ordered before the first invalidation (4 jobs in all). This is

@@ -123,6 +123,7 @@ def run_backfill(
         hwm = hi
         cp.high_water_mark_id = str(hwm)
         cp.documents_processed += n
+        cp.last_snapshot_id = table.version  # the version holding the chunk
         store.upsert(cp)  # HWM checkpoint per chunk (A10)
         chunks_done += 1
         if fail_after_chunks is not None and chunks_done >= fail_after_chunks:

@@ -193,6 +193,7 @@ class CollectionSync:
                 cp = self.store.read(self.sync_id)
                 cp.resume_token = str(pos)
                 cp.documents_processed += stats["n_ops"]
+                cp.last_snapshot_id = self.table.version  # the version holding the batch
                 cp.state = STATE_STEADY_STATE
                 self.store.upsert(cp)  # commit-then-checkpoint order (A21)
 

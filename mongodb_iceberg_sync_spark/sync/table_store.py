@@ -4,32 +4,44 @@ The reference targets Iceberg merge-on-read: upsert = equality-delete
 old row + append new; delete = equality-delete (reference
 docs/design.md:291-300). No Iceberg runtime jar ships in this
 environment, so this module re-creates the same semantics on bare
-parquet, structured exactly like Iceberg would:
+parquet, structured the way Iceberg is: a log of table versions over
+write-once data dirs.
 
-  {table}/base/            — compacted data files ("data files")
-  {table}/deltas/batch=N/  — per-commit upsert+tombstone files
-                             ("equality delete files" + appended rows)
-  {table}/pos_deletes/delete=N/, {table}/eq_deletes/delete=N/
-                           — positional and equality delete files
-  {table}/staging/         — commits and base rewrites in flight; never read
-  {table}/archive/gen=N/   — base dirs (and delete files) a fold replaced,
-                             kept until expire_snapshots()
+  {table}/metadata/v<N>.json — table version N; the newest is current
+  {table}/base/v<N>/         — a base dir (compacted or backfilled rows)
+  {table}/deltas/batch=<id>/ — a data commit (upserts and tombstones)
+  {table}/pos_deletes/delete=<id>/, {table}/eq_deletes/delete=<id>/
+                             — positional and equality delete files
+  {table}/branches/<name>/batch=<id>/ — a commit on a branch
+  {table}/staging/batch=<id>/ — a write-audit-publish batch; not table
+                               state until publish_batch
 
-- Read  = base ∪ deltas less the rows delete files strike, each commit
-  and delete file read with its manifest's schema; last-writer-wins by
-  (key, op_seq), tombstones dropped (Iceberg's MoR).
-- Write = one delta or delete directory per batch_id, under one
-  protocol: stage the rows and their manifest (the schema; for a delta
-  also key bounds, column bounds and key bloom, observed by the write
-  itself — no read-back job) under staging/, then publish the
-  finished dir by rename. A reader sees a whole commit
-  with its manifest or none of it, and a replayed batch replaces its
-  own directory ⇒ idempotent commits (reference A21 at-least-once
-  protocol, docs/design.md:339-348).
+Every data dir holds its rows and a ``_manifest.json`` (schema and spec;
+for a data commit also key, op_seq and column bounds and a key bloom)
+and is never written again once a version lists it: a replay writes a
+fresh ``<dir>.v<N>``. A version lists, by path, the live base dirs, main's
+commits and delete files (id → dir), the partition-spec history,
+branches and tags, the batch compaction folded through (which bounds
+time travel), the partitions a partial compaction masked, and the
+archived base generations. It stays about 100 bytes per live commit.
+
+- Read  = the current version's base ∪ commits less the rows delete
+  files strike, each dir read with its manifest's schema, so building
+  the read runs no Spark job; last-writer-wins by (key, op_seq),
+  tombstones dropped (Iceberg's MoR).
+- Write = write a fresh dir (a commit: the write and its shuffle
+  stages, statistics observed on the write), then publish the next
+  version (_publish): a temp file hard-linked to v<N+1>, which fails if
+  that version exists. That link is the one commit point of every
+  state change, so a reader sees the whole change or none of it, and a
+  crash anywhere before it leaves the previous version (reference A21
+  at-least-once protocol, docs/design.md:339-348).
 - Compact = one fold step (_fold) behind compact(), compact(where=...)
-  and truncate(): stage the new base under staging/, archive the base
-  dirs it replaces, rename it in, retire the deltas and delete files it
-  absorbed (reference A24 RewriteDataFiles, docs/design.md:394-400).
+  and truncate(): write a new base dir and publish a version that lists
+  it in place of what it absorbed (reference A24 RewriteDataFiles,
+  docs/design.md:394-400) — two Spark jobs, the merged view's shuffle
+  stage and the write. Nothing is renamed or deleted; the replaced dirs
+  stay on disk until expire_snapshots().
 
 Scale: the merged view is one shuffle on the key (max_by aggregation,
 partial-aggregatable map-side). With Iceberg jars on a real cluster,
@@ -40,9 +52,11 @@ contract, so swapping backends is a constructor change.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
+import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -52,9 +66,9 @@ from pyspark.sql.types import StructType
 OP_SEQ = "_op_seq"  # total order of applied ops (resume-token position)
 OP_TYPE = "_op"  # upsert | delete
 TOMBSTONE = "delete"
-MANIFEST = "_manifest.json"  # per-commit key min/max stats (data skipping)
-COMPACTION_MARK = "_compaction.json"  # last batch id folded into base
-_BULK_COL = "__bulk_batch"  # commit_batches' staged partition column
+MANIFEST = "_manifest.json"  # per-dir schema and stats (data skipping)
+_BULK_COL = "__bulk_batch"  # commit_batches' partition column
+_COMMITS = ("deltas", "pos_deletes", "eq_deletes")  # main's commit kinds
 
 
 def sql_ident(name: str) -> str:
@@ -99,16 +113,22 @@ class MorTable:
         self.spark = spark
         self.path = path.rstrip("/")
         self.key = key
-        os.makedirs(self.base_dir, exist_ok=True)
-        os.makedirs(self.delta_dir, exist_ok=True)
-        # Partition spec lives in table metadata (_spec.json), not the
-        # constructor: like Iceberg, the spec can EVOLVE without
-        # rewriting data, so reopening a table must recover the current
-        # spec from disk, and a constructor arg only seeds a NEW table.
-        if not os.path.exists(self._spec_path):
-            self._write_spec(
-                {"current": partition_col, "history": [{"spec_id": 0, "col": partition_col}]}
-            )
+        self._v: dict | None = None  # the newest version read
+        # Partition spec lives in the version, not the constructor: like
+        # Iceberg, the spec can EVOLVE without rewriting data, so
+        # reopening a table must recover the current spec from its
+        # metadata, and a constructor arg only seeds a NEW table.
+        os.makedirs(self._meta, exist_ok=True)
+        if not self._versions():
+            col = partition_col
+            spec = {"current": col, "history": [{"spec_id": 0, "col": col}]}
+            try:
+                self._publish(
+                    {"version": -1, "spec": spec, "gen": 0, "folded": None, "base": [],
+                     "archive": [], **{k: {} for k in ("drop", "branches", "tags", *_COMMITS)}}
+                )
+            except FileExistsError:
+                pass  # another handle created it first
         elif partition_col is not None and self.partition_col != partition_col:
             raise ValueError(
                 f"table at {self.path} has partition spec "
@@ -116,62 +136,143 @@ class MorTable:
                 "or evolve_partition_spec() to change it"
             )
 
-    # -- partition spec (evolvable, Iceberg partition-evolution analog) --
+    # -- the version log (Iceberg table-metadata analog) ----------------
 
     @property
-    def _spec_path(self) -> str:
-        return f"{self.path}/_spec.json"
+    def _meta(self) -> str:
+        return f"{self.path}/metadata"
 
-    def _read_spec(self) -> dict:
+    def _vpath(self, n: int) -> str:
+        return f"{self._meta}/v{n}.json"
+
+    def _versions(self) -> list[int]:
+        """Numbers of the versions on disk, oldest first."""
+        return sorted(
+            int(f[1:-5]) for f in os.listdir(self._meta) if f[0] == "v" and f[-5:] == ".json"
+        )
+
+    def _load(self, n: int) -> dict:
+        with open(self._vpath(n)) as f:
+            return json.load(f)
+
+    def _current(self) -> dict:
+        """The current (newest) version; one stat per call once loaded."""
+        n = self._v["version"] if self._v else self._versions()[-1]
+        while os.path.exists(self._vpath(n + 1)):
+            n += 1
+        if self._v is None or self._v["version"] != n:
+            self._v = self._load(n)
+        return self._v
+
+    def _state(self) -> dict:
+        """A copy of the current version to build the next one from."""
+        return copy.deepcopy(self._current())
+
+    def _publish(self, s: dict) -> None:
+        """Write ``s`` as the version after the one it was built from: the
+        one commit point of every state change. A temp file is
+        hard-linked to v<N+1>; the link fails if that version exists, so
+        a version is never overwritten (FileExistsError: another writer
+        committed first). Masks of dirs no longer live are dropped."""
+        live = self._live(s)
+        s["drop"] = {d: m for d, m in s["drop"].items() if d in live}
+        s["version"] += 1
+        tmp = f"{self._meta}/.v{s['version']}-{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(s, f)
         try:
-            with open(self._spec_path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {"current": None, "history": [{"spec_id": 0, "col": None}]}
+            os.link(tmp, self._vpath(s["version"]))
+        finally:
+            os.unlink(tmp)
+        self._v = s
 
-    def _write_spec(self, spec: dict) -> None:
-        with open(self._spec_path, "w") as f:
-            json.dump(spec, f)
+    @property
+    def version(self) -> int:
+        """The current table version: the N of metadata/v<N>.json, which
+        every state change advances by one (Checkpoint.last_snapshot_id)."""
+        return self._current()["version"]
+
+    @staticmethod
+    def _slot(s: dict, kind: str) -> dict:
+        """The id → dir map commits of ``kind`` land in: one of _COMMITS,
+        or ``branches/<name>``."""
+        if kind.startswith("branches/"):
+            return s["branches"][kind.split("/", 1)[1]]["batches"]
+        return s[kind]
+
+    @staticmethod
+    def _live(s: dict) -> set[str]:
+        """Every dir version ``s`` reads: base, commits, branch commits."""
+        dirs = set(s["base"]).union(*(s[k].values() for k in _COMMITS))
+        return dirs.union(*(b["batches"].values() for b in s["branches"].values()))
+
+    @classmethod
+    def _listed(cls, s: dict) -> set[str]:
+        """Every dir version ``s`` retains: the live ones and the archive."""
+        return cls._live(s).union(*(g["dirs"] for g in s["archive"]))
+
+    def _abs(self, rel: str) -> str:
+        return f"{self.path}/{rel}"
+
+    def _fresh(self, rel: str, s: dict) -> str:
+        """Where a dir bound for ``rel`` in the version after ``s`` is
+        written: ``rel`` if nothing is there, else ``rel.v<N>`` — never a
+        dir a version lists (an unlisted leftover of a crashed attempt
+        at the same version is overwritten)."""
+        return rel if not os.path.exists(self._abs(rel)) else f"{rel}.v{s['version'] + 1}"
+
+    def _ids(self, kind: str, s: dict | None = None) -> list[int]:
+        """Sorted ids of the live commits of ``kind``."""
+        return sorted(int(i) for i in self._slot(s or self._current(), kind))
+
+    def _dirs(self, kind: str, as_of_batch: int | None = None) -> list[tuple[int, str]]:
+        """(id, dir) of the live commits of ``kind`` at or before
+        ``as_of_batch``, in id order."""
+        s = self._current()
+        last = float("inf") if as_of_batch is None else as_of_batch
+        slot = self._slot(s, kind)
+        return [(i, self._abs(slot[str(i)])) for i in self._ids(kind, s) if i <= last]
+
+    def _base_dirs(self) -> list[str]:
+        return [self._abs(d) for d in self._current()["base"]]
+
+    # -- partition spec (evolvable, Iceberg partition-evolution analog) --
 
     @property
     def partition_col(self) -> str | None:
         """The CURRENT partition spec — new commits and compactions use
         it; already-written commits keep the spec they were written
         under (recorded in their manifest)."""
-        return self._read_spec()["current"]
+        return self._current()["spec"]["current"]
 
     def evolve_partition_spec(self, new_col: str | None) -> int:
         """Change the partition spec for FUTURE commits without touching
-        existing data — Iceberg partition evolution (metadata-only).
-        Old commits stay in their old layout; the merge-on-read path
-        reads every commit dir on its own (_read_commit, with the
+        existing data — Iceberg partition evolution (metadata-only: one
+        version). Old commits stay in their old layout; the merge-on-read
+        path reads every dir on its own (_read_commit, with the
         schema its manifest records) so mixed layouts coexist;
         the next full compact() rewrites the whole table under the new
         spec. Returns the new spec id."""
-        spec = self._read_spec()
+        s = self._state()
+        spec = s["spec"]
         if new_col == spec["current"]:
             return spec["history"][-1]["spec_id"]
         sid = spec["history"][-1]["spec_id"] + 1
         spec["current"] = new_col
         spec["history"].append({"spec_id": sid, "col": new_col})
-        self._write_spec(spec)
+        self._publish(s)
         return sid
 
     @property
     def base_dir(self) -> str:
-        return f"{self.path}/base"
+        """The newest live base dir (the last fold's or append's), or the
+        base root while the table has none."""
+        base = self._base_dirs()
+        return base[-1] if base else f"{self.path}/base"
 
     @property
     def delta_dir(self) -> str:
         return f"{self.path}/deltas"
-
-    @property
-    def archive_dir(self) -> str:
-        return f"{self.path}/archive"
-
-    @property
-    def pos_delete_dir(self) -> str:
-        return f"{self.path}/pos_deletes"
 
     # -- delete files (Iceberg v2 merge-on-read) -----------------------
     #
@@ -187,25 +288,6 @@ class MorTable:
     # delete-index shape Iceberg readers use (reference: docs/design.md's
     # MoR delete handling).
 
-    @staticmethod
-    def _ids(root: str, prefix: str) -> list[int]:
-        """Sorted ids of the ``<prefix><id>`` dirs under ``root``."""
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith(prefix)
-        )
-
-    def _pos_delete_ids(self) -> list[int]:
-        return self._ids(self.pos_delete_dir, "delete=")
-
-    @property
-    def eq_delete_dir(self) -> str:
-        return f"{self.path}/eq_deletes"
-
-    def _eq_delete_ids(self) -> list[int]:
-        return self._ids(self.eq_delete_dir, "delete=")
-
     def delete_equality(
         self, values_df: DataFrame, batch_id: int
     ) -> int:
@@ -213,19 +295,19 @@ class MorTable:
         the equality ids, its rows the values to delete. Strikes every
         data row (base OR delta, any file) matching a value row whose
         op_seq is <= the sequence-number cut: the commits' max op_seq,
-        read before any delete file applies (_max_op_seq), so a replay
-        keeps its cut. Later upserts of the same values survive,
-        exactly Iceberg's older-sequence-only contract. The third delete
-        shape beside key tombstones (commit_batch op=delete) and
-        positional deletes (delete_where): committing one scans for no
-        matching row — the file is just the value rows — which is why
-        CDC engines emit equality deletes when they know values but not
-        positions. Shares the commit id-space (time travel to before
-        ``batch_id`` does not see it; rollback drops it); a replay
-        replaces its own file (_commit). Spark jobs: the base's schema
-        read, then two each for the op_seq max and the distinct write;
-        five however many delete files are live. Returns the delete-row
-        count."""
+        read from their manifests before any delete file applies
+        (_max_op_seq), so a replay keeps its cut. Later upserts of the
+        same values survive, exactly Iceberg's older-sequence-only
+        contract. The third delete shape beside key tombstones
+        (commit_batch op=delete) and positional deletes (delete_where):
+        committing one scans for no matching row — the file is just the
+        value rows — which is why CDC engines emit equality deletes when
+        they know values but not positions. Shares the commit id-space
+        (time travel to before ``batch_id`` does not see it; rollback
+        drops it); a replay replaces its own file (_commit). Spark jobs:
+        the distinct write's two, however many delete files are live
+        (the columns and the cut come from metadata). Returns the
+        delete-row count."""
         raw = self._raw()
         if raw is None:
             return 0
@@ -241,22 +323,14 @@ class MorTable:
         out = values_df.distinct().withColumn(
             "_seq_cut", F.lit(self._max_op_seq() or 0).cast("long")
         )
-        return self._commit(
-            out, f"{self.eq_delete_dir}/delete={batch_id}", self._write_delete
-        )
-
-    def _delete_dirs(self, root: str, as_of_batch) -> list[str]:
-        """The delete commits under ``root`` visible AS OF ``as_of_batch``."""
-        last = float("inf") if as_of_batch is None else as_of_batch
-        dirs = [f"{root}/delete={i}" for i in self._ids(root, "delete=") if i <= last]
-        return [d for d in dirs if self._has_parquet(d)]
+        return self._commit(out, "eq_deletes", batch_id, self._write_rows)
 
     def _apply_eq_deletes(self, df: DataFrame, as_of_batch) -> DataFrame:
         """Anti-join the (base ∪ deltas) rows against every visible
         equality-delete file: a row dies when its equality-id columns
         match a delete row AND its op_seq <= that file's sequence cut.
         Broadcast: delete files hold VALUES, not data."""
-        for d in self._delete_dirs(self.eq_delete_dir, as_of_batch):
+        for _, d in self._dirs("eq_deletes", as_of_batch):
             dels = self._read_commit(d)
             eq_cols = [c for c in dels.columns if c != "_seq_cut"]
             if any(c not in df.columns for c in eq_cols):
@@ -283,27 +357,31 @@ class MorTable:
         positional deletes likewise only target already-written data
         files; the engine's DELETE falls back to equality deletes for
         hot rows)."""
-        if not self._has_parquet(self.base_dir):
+        base = self._base_dirs()
+        if not base:
             return 0
-        base = self.spark.read.parquet(self.base_dir)
-        dels = base.filter(cond).select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.row_index").alias("row_index"),
+        dels = reduce(
+            DataFrame.union,
+            [
+                self._read_commit(d).filter(cond).select(
+                    F.col("_metadata.file_path").alias("file_path"),
+                    F.col("_metadata.row_index").alias("row_index"),
+                )
+                for d in base
+            ],
         )
-        return self._commit(
-            dels, f"{self.pos_delete_dir}/delete={batch_id}", self._write_delete
-        )
+        return self._commit(dels, "pos_deletes", batch_id, self._write_rows)
 
     def _apply_pos_deletes(self, base: DataFrame, as_of_batch) -> DataFrame:
-        """Anti-join the base scan against every visible delete file.
+        """Anti-join a base dir's scan against every visible delete file.
         Broadcast: delete files are the small side by construction
         (they hold two columns of deleted-row positions, not data);
         at 100 TB the per-task build is the same bounded delete-index
         Iceberg readers carry."""
-        dirs = self._delete_dirs(self.pos_delete_dir, as_of_batch)
+        dirs = self._dirs("pos_deletes", as_of_batch)
         if not dirs:
             return base
-        dels = reduce(DataFrame.union, [self._read_commit(d) for d in dirs])
+        dels = reduce(DataFrame.union, [self._read_commit(d) for _, d in dirs])
         tagged = base.withColumns(
             {
                 "_pd_file": F.col("_metadata.file_path"),
@@ -325,30 +403,17 @@ class MorTable:
             w = w.partitionBy(self.partition_col)
         return w
 
-    def _base_layout_spec(self):
-        """Spec the CURRENT base files are laid out under: None when
-        base is empty or flat; the partition column when base holds
-        `col=value` dirs. Derived from the directory shape, so it is
-        always true of the files on disk."""
-        if not os.path.isdir(self.base_dir):
-            return None
-        for d in os.listdir(self.base_dir):
-            if "=" in d and os.path.isdir(f"{self.base_dir}/{d}"):
-                return d.split("=", 1)[0]
-        return None
-
     def append_base(self, df: DataFrame) -> None:
-        """Backfill append (reference A15): rows land in base directly,
-        stamped as op_seq=0 upserts.
+        """Backfill append (reference A15): rows land in a fresh base dir,
+        stamped as op_seq=0 upserts, which the next version lists.
 
-        Guarded against MIXED base layouts: appending under a spec that
-        differs from the existing base files' layout would put flat
-        files and `col=value` dirs in one directory, which parquet
-        directory discovery rejects (CONFLICTING_DIRECTORY_STRUCTURES)
-        — run a full compact() after evolve_partition_spec() before
-        appending more backfill."""
-        if self._has_parquet(self.base_dir):
-            on_disk = self._base_layout_spec()
+        Guarded against MIXED base layouts: a base written under another
+        spec than the current one (its manifest records which) means a
+        partition evolution is pending its full rewrite — run compact()
+        after evolve_partition_spec() before appending more backfill."""
+        s = self._state()
+        for d in s["base"]:
+            on_disk = self._manifest(self._abs(d)).get("spec")
             if on_disk != self.partition_col:
                 raise ValueError(
                     f"append_base under spec {self.partition_col!r} would mix "
@@ -356,94 +421,80 @@ class MorTable:
                     f"{on_disk!r}); run compact() first to rewrite base "
                     "under the current spec"
                 )
-        self._writer(
-            df.withColumn(OP_SEQ, F.lit(0).cast("long")).withColumn(
-                OP_TYPE, F.lit("upsert")
-            )
-        ).mode("append").parquet(self.base_dir)
+        d = f"base/v{s['version'] + 1}"  # named for its version: no version lists it yet
+        df = df.withColumns({OP_SEQ: F.lit(0).cast("long"), OP_TYPE: F.lit("upsert")})
+        self._write_rows(df, self._abs(d), self.partition_col)
+        s["base"].append(d)
+        self._publish(s)
 
     def commit_batch(self, batch_df: DataFrame, batch_id: int) -> int:
         """Apply one CDC micro-batch (upserts + deletes), idempotently;
         returns the number of rows committed.
 
         batch_df must carry [key, OP_SEQ, OP_TYPE, payload...]. It is
-        staged with its manifest, then published (_publish); a replayed
-        batch_id replaces its own delta directory — the Spark-native
-        version of the reference's commit-ordering protocol (A21): state
-        converges no matter how often the batch replays. Spark jobs: the write,
-        plus one per shuffle stage in batch_df's lineage (two in all for
+        written with its manifest to a fresh dir, then published
+        (_commit); a replayed batch_id replaces its own commit in the
+        next version — the Spark-native version of the reference's
+        commit-ordering protocol (A21): state converges no matter how
+        often the batch replays. Spark jobs: the write, plus one per
+        shuffle stage in batch_df's lineage (two in all for
         apply_batch's LWW-folded ops); the manifest statistics ride the
         write (_write_commit).
         """
-        return self._commit(batch_df, f"{self.delta_dir}/batch={batch_id}")
+        return self._commit(batch_df, "deltas", batch_id)
 
     def commit_batches(self, batch_df: DataFrame, batch_col: str) -> list[int]:
         """Bulk commit: one micro-batch per distinct integer value of
-        ``batch_col``, byte-equivalent on disk to a ``commit_batch``
-        loop (same ``batch=<id>`` dirs, same manifest JSON) at O(1)
-        Spark jobs instead of O(batches)·2.
+        ``batch_col``, the same commits and manifests as a
+        ``commit_batch`` loop at O(1) Spark jobs instead of O(batches)·2.
 
         A loop pays one filtered write per batch, each re-scanning the
-        source. Here ONE partitioned write stages every batch dir
-        (shuffled on the batch key, so batches build in parallel tasks,
-        not sequential jobs), _write_manifests_bulk adds every manifest
-        while the dirs are still staged, and each dir is then published
-        by rename, so each batch is whole on its own, as in the loop.
+        source. Here ONE partitioned write lays every batch's dir out
+        under a fresh ``deltas/bulk-v<N>/`` (shuffled on the batch key,
+        so batches build in parallel tasks, not sequential jobs),
+        _write_manifests_bulk adds every manifest, and ONE version
+        publishes them all: the batches land together or not at all.
         Spark jobs: one per shuffle stage in batch_df's lineage, the
-        batch-key shuffle, the write, and five for the manifests.
+        batch-key shuffle, the write, and four for the manifests.
         Returns the sorted batch ids committed.
 
         Only rows with a non-NULL ``batch_col`` are committed (a NULL
-        micro-batch id is meaningless). Falls back to the per-batch
-        loop under a partition spec, where the nested
-        ``partitionBy(batch, spec)`` layout would not match the loop's.
+        micro-batch id is meaningless). Under a partition spec, where a
+        nested ``partitionBy(batch, spec)`` layout would not match the
+        loop's, each batch is written on its own, still in one version.
         """
+        s = self._state()
+        rows = batch_df.filter(F.col(batch_col).isNotNull())
         if self.partition_col is not None:
-            ids = sorted(
-                r[0]
-                for r in batch_df.filter(F.col(batch_col).isNotNull())
-                .select(batch_col).distinct().collect()
-            )
+            ids = sorted(r[0] for r in rows.select(batch_col).distinct().collect())
             for b in ids:
-                self.commit_batch(
-                    batch_df.filter(F.col(batch_col) == b).drop(batch_col), b
-                )
-            return ids
-        staging = f"{self.staging_dir}/bulk"
-        (
-            batch_df.filter(F.col(batch_col).isNotNull())
-            .withColumnRenamed(batch_col, _BULK_COL)
-            .repartition(_BULK_COL)
-            .write.mode("overwrite")
-            .partitionBy(_BULK_COL)
-            .parquet(staging)
-        )
-        ids = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith(f"{_BULK_COL}=")  # not the _SUCCESS marker
-        )
-        self._write_manifests_bulk(staging, ids)
-        for b in ids:
-            self._publish(f"{staging}/{_BULK_COL}={b}", f"{self.delta_dir}/batch={b}")
-        shutil.rmtree(staging, ignore_errors=True)
+                d = self._fresh(f"deltas/batch={b}", s)
+                one = rows.filter(F.col(batch_col) == b).drop(batch_col)
+                self._write_commit(one, self._abs(d))
+                s["deltas"][str(b)] = d
+        else:
+            root = f"deltas/bulk-v{s['version'] + 1}"
+            rows = rows.withColumnRenamed(batch_col, _BULK_COL)
+            w = rows.repartition(_BULK_COL).write.mode("overwrite").partitionBy(_BULK_COL)
+            w.parquet(self._abs(root))
+            ids = self._write_manifests_bulk(self._abs(root), rows.schema)
+            s["deltas"].update({str(b): f"{root}/{_BULK_COL}={b}" for b in ids})
+        if ids:
+            self._publish(s)
         return ids
 
-    def _write_manifests_bulk(self, staging: str, batch_ids: list[int]) -> None:
-        """Manifests for many commits staged by one partitioned write.
+    def _write_manifests_bulk(self, root: str, schema) -> list[int]:
+        """Manifests for the commits one partitioned write made under
+        ``root`` (its rows' ``schema``); returns their sorted ids.
 
         Field-identical to what ``_write_commit`` records per commit,
-        but the statistics come from reading back the staged files,
-        grouped by their partition column: a schema read, one grouped
-        stats agg and one grouped bloom collect (each a map stage and a
-        result job), five jobs in all. The bloom collect is bounded by
-        _BLOOM_BITS rows per commit regardless of commit size.
+        but the statistics come from reading back the written files
+        with their declared schema, grouped by their partition column:
+        one grouped stats agg and one grouped bloom collect (each a map
+        stage and a result job), four jobs in all. The bloom collect is
+        bounded by _BLOOM_BITS rows per commit regardless of commit size.
         """
-        if not batch_ids:
-            return
-        df = self.spark.read.option("basePath", staging).parquet(
-            *[f"{staging}/{_BULK_COL}={b}" for b in batch_ids]
-        )
+        df = self.spark.read.schema(schema).parquet(root)
         stat_cols = self._stat_cols(df.schema, exclude=(_BULK_COL,))
         stats = {
             r[_BULK_COL]: r
@@ -461,16 +512,16 @@ class MorTable:
         ):
             b = r[_BULK_COL]
             bitmaps[b] = bitmaps.get(b, 0) | (1 << int(r.pos))
-        for b in batch_ids:
-            row = stats[b]  # every dir the partitioned write made has rows
+        for b, row in stats.items():
             self._dump_manifest(
-                f"{staging}/{_BULK_COL}={b}",
+                f"{root}/{_BULK_COL}={b}",
                 df.drop(_BULK_COL).schema,
-                row.lo,
-                row.hi,
+                None,  # the bulk write runs without a partition spec
+                row,
                 self._col_stats(row, stat_cols),
                 bitmaps.get(b, 0),
             )
+        return sorted(stats)
 
     # Bloom sizing: 4096 bits / 3 hashes ≈ 1.5% false-positive rate at
     # 500 distinct keys per commit; the bitmap is 512 bytes of manifest
@@ -519,13 +570,13 @@ class MorTable:
         ]
 
     def _stat_exprs(self, stat_cols: list[str]) -> list[str]:
-        """SQL aggregates of a commit's key bounds (lo/hi) and column
-        bounds (lo{i}/hi{i} for ``stat_cols[i]``)."""
+        """SQL aggregates of a commit's key bounds (lo/hi), op_seq bounds
+        (slo/shi) and column bounds (lo{i}/hi{i} for ``stat_cols[i]``)."""
         cols = [sql_ident(c) for c in (self.key, *stat_cols)]
         names = ["", *range(len(stat_cols))]
         return [f"min({c}) AS lo{n}" for c, n in zip(cols, names)] + [
             f"max({c}) AS hi{n}" for c, n in zip(cols, names)
-        ]
+        ] + [f"min({OP_SEQ}) AS slo", f"max({OP_SEQ}) AS shi"]
 
     def _stat_cols(self, schema, exclude=()) -> list[str]:
         return [
@@ -549,23 +600,24 @@ class MorTable:
         return col_stats
 
     def _dump_manifest(
-        self, target, schema, lo=None, hi=None, col_stats=None, bitmap=None
+        self, target, schema, spec, row=None, col_stats=None, bitmap=None
     ) -> None:
-        """Every manifest records ``schema``; a data commit's (``bitmap``
-        given) also its key bounds, key bloom, spec and column bounds."""
-        m = {}
-        if bitmap is not None:
-            m = {
-                "key": self.key,
-                "min": lo,
-                "max": hi,
-                "bloom_bits": self._BLOOM_BITS,
-                "bloom": format(bitmap, "x"),
-                # spec this commit was written under (partition
-                # evolution: later commits may use a different one)
-                "spec": self.partition_col,
-                "columns": col_stats,
-            }
+        """Every manifest records ``schema`` and the ``spec`` the dir was
+        written under (partition evolution: later dirs may use another);
+        a data commit's (a stats ``row`` given) also its key and op_seq
+        bounds, key bloom and column bounds."""
+        m = {"spec": spec}
+        if row is not None:
+            m.update(
+                key=self.key,
+                min=row["lo"],
+                max=row["hi"],
+                seq_min=row["slo"],
+                seq_max=row["shi"],
+                bloom_bits=self._BLOOM_BITS,
+                bloom=format(bitmap, "x"),
+                columns=col_stats,
+            )
         # what a read of the dir returns, less the partition column it
         # infers from the dir names: _read_commit declares it, so no
         # schema-inference job runs
@@ -573,53 +625,34 @@ class MorTable:
         with open(f"{target}/{MANIFEST}", "w") as f:
             json.dump(m, f)
 
-    def _commit(self, df: DataFrame, dst: str, write=None) -> int:
-        """Stage a commit bound for ``dst`` with ``write`` (default
-        _write_commit), then publish it; returns its row count."""
-        staged = self._staged(dst)
-        n = (write or self._write_commit)(df, staged)
-        self._publish(staged, dst)
+    def _commit(self, df: DataFrame, kind: str, cid: int, write=None) -> int:
+        """Write commit ``cid`` of ``kind`` (a _COMMITS root or
+        ``branches/<name>``) with ``write`` (default _write_commit) to a
+        fresh dir, then publish the version that maps ``cid`` to it — a
+        replay's new dir replaces the old one there; returns the row
+        count."""
+        s = self._state()
+        prefix = "delete=" if kind.endswith("deletes") else "batch="
+        d = self._fresh(f"{kind}/{prefix}{cid}", s)
+        n = (write or self._write_commit)(df, self._abs(d))
+        self._slot(s, kind)[str(cid)] = d
+        self._publish(s)
         return n
 
-    def _staged(self, dst: str) -> str:
-        """Staging dir of a commit bound for ``dst``; fixed, so a retry
-        overwrites its crashed attempt."""
-        rel = os.path.relpath(dst, self.path).replace("/", "-")
-        return f"{self.staging_dir}/commit-{rel}"
-
-    def _publish(self, src: str | None, dst: str) -> None:
-        """Make the finished commit dir ``src`` (data and manifest) visible
-        as ``dst``, or with ``src`` None take ``dst`` out — the only code
-        that moves a commit dir into or out of deltas/,
-        branches/<name>/, pos_deletes/ or eq_deletes/, apart from what
-        a fold absorbs and drop_branch discards. A new id is one
-        rename; a replaced id is first moved aside into staging/, so it
-        is missing only between two renames (a crash there: the batch
-        replays, its checkpoint unwritten)."""
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.makedirs(self.staging_dir, exist_ok=True)
-        old = f"{self._staged(dst)}.old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if src is not None:
-            os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-
     def unpublish_batch(self, batch_id: int) -> None:
-        """Take the published commit ``batch_id`` out of deltas/, the
-        reverse of _publish: one rename into staging/, then the delete,
-        so a reader sees the whole commit or none of it."""
-        self._publish(None, f"{self.delta_dir}/batch={batch_id}")
+        """Take commit ``batch_id`` out of main: one version without it."""
+        s = self._state()
+        if s["deltas"].pop(str(batch_id), None) is not None:
+            self._publish(s)
 
-    def _write_commit(self, df: DataFrame, staged: str) -> int:
-        """Write one commit's rows and its manifest to ``staged``, a dir
-        under staging/ that no reader opens (overwriting an earlier
-        attempt); returns the commit's row count. Spark jobs: the write,
-        plus one per shuffle stage in ``df``'s lineage; no read-back.
+    def _write_commit(self, df: DataFrame, target: str) -> int:
+        """Write one data dir's rows and its manifest to ``target``, a dir
+        no version lists yet (overwriting an earlier attempt); returns the
+        row count. Spark jobs: the write, plus one per shuffle stage in
+        ``df``'s lineage; no read-back.
 
-        The manifest is the Iceberg-manifest analog: key min/max,
-        per-column lower/upper bounds, and a key bloom filter
+        The manifest is the Iceberg-manifest analog: key and op_seq
+        min/max, per-column lower/upper bounds, and a key bloom filter
         (puffin-blob analog) so point lookups also skip commits whose
         [min,max] straddles a key they do not hold. Stats are advisory:
         a missing manifest or bloom only disables skipping.
@@ -652,7 +685,7 @@ class MorTable:
                 for j, pos in enumerate(self._bloom_slices())
             ],
         )
-        self._writer(observed).mode("overwrite").parquet(staged)
+        self._writer(observed).mode("overwrite").parquet(target)
         row = obs.get
         bitmap = 0
         for j in range(len(self._BLOOM_SLICES)):
@@ -662,24 +695,33 @@ class MorTable:
         if spec in col_stats:
             # a schema-only read lists the dirs to infer the partition
             # column's type, without the footer-reading job
-            read = self.spark.read.schema(schema).parquet(staged)
+            read = self.spark.read.schema(schema).parquet(target)
             types = {x.schema[spec].dataType.typeName() for x in (df, read)}
             if len(types) > 1 and not types <= {"byte", "short", "integer", "long"}:
                 del col_stats[spec]
-        self._dump_manifest(staged, schema, row["lo"], row["hi"], col_stats, bitmap)
+        self._dump_manifest(target, schema, spec, row, col_stats, bitmap)
         return row["n"]
 
-    def _write_delete(self, df: DataFrame, staged: str) -> int:
-        """_write_commit for a delete file, which has no key column: its
-        manifest records its schema alone."""
+    def _write_rows(
+        self, df: DataFrame, target: str, spec=None, max_records_per_file=None
+    ) -> int:
+        """_write_commit for a dir no read prunes — a delete file (no key
+        column) or a base dir (partitioned by ``spec``): its manifest
+        records schema and spec alone, so the write observes only its
+        row count."""
         obs = Observation()
-        df.observe(obs, F.expr("count(1) AS n")).write.mode("overwrite").parquet(staged)
-        self._dump_manifest(staged, df.schema)
+        w = df.observe(obs, F.expr("count(1) AS n")).write.mode("overwrite")
+        if spec is not None:
+            w = w.partitionBy(spec)
+        if max_records_per_file is not None:
+            w = w.option("maxRecordsPerFile", max_records_per_file)
+        w.parquet(target)
+        self._dump_manifest(target, df.drop(spec).schema if spec else df.schema, spec)
         return obs.get["n"]
 
     def _manifest(self, path: str) -> dict:
-        """The manifest of the commit dir ``path``; {} when it is missing
-        or unreadable. Stats are advisory: every use of a missing field
+        """The manifest of the dir ``path``; {} when it is missing or
+        unreadable. Stats are advisory: every use of a missing field
         degrades to "keep" (no skipping)."""
         try:
             with open(f"{path}/{MANIFEST}") as f:
@@ -689,28 +731,39 @@ class MorTable:
         return m if isinstance(m, dict) else {}
 
     def _read_commit(self, path: str) -> DataFrame:
-        """The commit dir ``path`` read with the schema its manifest
-        records: no schema-inference job. Without one (no manifest, or an
-        older one) the read infers it, one job."""
+        """The dir ``path`` read with the schema its manifest records: no
+        schema-inference job (without one the read infers it, one job),
+        less the partitions a partial compaction folded out of it."""
         schema = self._manifest(path).get("schema")
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(path)
+        df = reader.parquet(path)
+        masks = self._current()["drop"].get(os.path.relpath(path, self.path), {})
+        for col, vals in masks.items():
+            df = df.filter(~F.coalesce(F.col(col).cast("string").isin(vals), F.lit(False)))
+        return df
 
-    def _max_op_seq(self, exclude: str | None = None) -> int | None:
-        """Max op_seq over main's live commit dirs other than ``exclude``,
-        each read with its manifest's schema, before any delete file
-        applies (a delete must not lower its own replay's cut); None
-        when no commit holds one. Base rows carry op_seq 0."""
-        # the select drops the partition columns a read infers from dir
-        # names, so flat and partitioned commits union
-        seqs = [
-            self._read_commit(d).select(OP_SEQ) for d in self.prune_batches() if d != exclude
-        ]
-        if not seqs:
-            return None
-        return reduce(DataFrame.union, seqs).agg(F.max(OP_SEQ)).head()[0]
+    def _max_op_seq(self, exclude: int | None = None) -> int | None:
+        """Max op_seq over main's live commits other than batch
+        ``exclude``, from their manifests, before any delete file applies
+        (a delete must not lower its own replay's cut); None when no
+        commit holds one. A dir whose manifest lacks the bound is read,
+        one job for all of them. Base rows carry op_seq 0."""
+        seqs, reads = [], []
+        for b, d in self._dirs("deltas"):
+            m = self._manifest(d)
+            if b == exclude:
+                continue
+            if "seq_max" in m:
+                seqs.append(m["seq_max"])
+            else:
+                # the select drops the partition columns a read infers
+                # from dir names, so flat and partitioned commits union
+                reads.append(self._read_commit(d).select(OP_SEQ))
+        if reads:
+            seqs.append(reduce(DataFrame.union, reads).agg(F.max(OP_SEQ)).head()[0])
+        return max((x for x in seqs if x is not None), default=None)
 
     def _bloom_may_contain(self, manifest: dict, key_value) -> bool:
         """False-negative-free membership: False ⇒ the commit definitely
@@ -764,7 +817,7 @@ class MorTable:
         Raises if the table carries positional or equality delete files:
         this path applies no delete folding, so reading past them would
         silently resurrect deleted rows — use scan()/scan_latest()."""
-        if self._pos_delete_ids() or self._eq_delete_ids():
+        if self._ids("pos_deletes") or self._ids("eq_deletes"):
             raise ValueError(
                 "scan_append() on a table with row-level delete files "
                 f"({self.path}): the append-log path applies no pos/eq "
@@ -776,12 +829,9 @@ class MorTable:
 
     def _last_folded_batch(self) -> int | None:
         """Highest batch id folded into base by compact() — versions at
-        or before it are expired (their deltas no longer exist)."""
-        try:
-            with open(f"{self.path}/{COMPACTION_MARK}") as f:
-                return json.load(f)["last_folded_batch"]
-        except (OSError, ValueError, KeyError):
-            return None
+        or before it are expired (the current version no longer lists
+        their commits)."""
+        return self._current()["folded"]
 
     def _check_not_expired(self, as_of_batch: int | None) -> None:
         folded = self._last_folded_batch()
@@ -791,11 +841,6 @@ class MorTable:
                 f"batches <= {folded} into base (Iceberg ExpireSnapshots analog)"
             )
 
-    def _has_parquet(self, path: str) -> bool:
-        return any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        )
-
     def prune_batches(
         self,
         lo=None,
@@ -804,24 +849,19 @@ class MorTable:
         root: str | None = None,
         col_bounds: dict | None = None,
     ) -> list[str]:
-        """Scan planning: delta commit dirs that can contain keys in
-        [lo, hi] (either bound may be None) at or before as_of_batch.
-        Dirs without a manifest are conservatively kept; dirs left
-        without data files (partition-targeted compaction folded all
-        their partitions) are dropped. ``root`` defaults to main's
-        delta dir; branch reads pass the branch's commit root.
-        ``col_bounds`` ({column: (lo, hi)}) additionally skips commits
-        whose manifest COLUMN stats cannot intersect — the Iceberg
-        lower/upper-bounds evaluator; callers must only use it for
-        append-only reads (see scan_append)."""
-        root = root or self.delta_dir
+        """Scan planning: the live delta commit dirs that can contain
+        keys in [lo, hi] (either bound may be None) at or before
+        as_of_batch, from the current version and the commits'
+        manifests — nothing is listed. Dirs without a manifest are
+        conservatively kept; empty commits are dropped. ``root``
+        defaults to main's delta dir; branch reads pass the branch's
+        commit root. ``col_bounds`` ({column: (lo, hi)}) additionally
+        skips commits whose manifest COLUMN stats cannot intersect — the
+        Iceberg lower/upper-bounds evaluator; callers must only use it
+        for append-only reads (see scan_append)."""
+        kind = "deltas" if root is None else os.path.relpath(root, self.path)
         out = []
-        for b in self._ids(root, "batch="):
-            if as_of_batch is not None and b > as_of_batch:
-                continue
-            path = f"{root}/batch={b}"
-            if not self._has_parquet(path):
-                continue
+        for _, path in self._dirs(kind, as_of_batch):
             m = self._manifest(path)
             if "min" in m and "max" in m:
                 b_lo, b_hi = m["min"], m["max"]
@@ -863,18 +903,18 @@ class MorTable:
         col_bounds: dict | None = None,
     ) -> DataFrame | None:
         """Base ∪ live commits with key in [lo, hi], before the LWW fold.
-        Each commit and delete file is read with its manifest's schema,
-        so building this runs one job however many are live: the base's
-        schema read. ``col_bounds`` ({column: (lo, hi)}) also
-        prunes commits on column stats and filters rows: only sound
-        without the fold (scan_append)."""
+        Every dir the current version lists — base, commit and delete
+        file — is read with its manifest's schema, so building this runs
+        no Spark job, however many are live. ``col_bounds`` ({column:
+        (lo, hi)}) also prunes commits on column stats and filters rows:
+        only sound without the fold (scan_append)."""
         self._check_not_expired(as_of_batch)
-        parts = []
-        if self._has_parquet(self.base_dir):
-            # positional deletes strike physical base rows before any
-            # logical (LWW) merge — the Iceberg v2 read contract
-            base = self.spark.read.parquet(self.base_dir)
-            parts.append(self._apply_pos_deletes(base, as_of_batch))
+        # positional deletes strike physical base rows before any
+        # logical (LWW) merge — the Iceberg v2 read contract
+        parts = [
+            self._apply_pos_deletes(self._read_commit(d), as_of_batch)
+            for d in self._base_dirs()
+        ]
         if branch is not None:
             # branch view = main AS OF the fork + the branch's commits;
             # as_of_batch (if given) bounds the BRANCH-side commit ids
@@ -885,7 +925,7 @@ class MorTable:
             )
         else:
             dirs = self.prune_batches(lo, hi, as_of_batch, col_bounds=col_bounds)
-        # one read per commit dir, with its manifest's schema: a combined
+        # one read per dir, with its manifest's schema: a combined
         # multi-root read would unify `batch=N` roots with the partition
         # dirs beneath them (CONFLICTING_DIRECTORY_STRUCTURES), and under
         # partition EVOLUTION per-dir reads let mixed layouts coexist
@@ -1083,81 +1123,50 @@ class MorTable:
     # -- maintenance --------------------------------------------------
 
     def _generations(self) -> list[int]:
-        return self._ids(self.archive_dir, "gen=")
+        """The archived base generations the current version retains."""
+        return [g["gen"] for g in self._current()["archive"]]
 
     def _delta_batch_ids(self) -> list[int]:
-        return self._ids(self.delta_dir, "batch=")
-
-    def _commit_roots(self) -> list[tuple[str, str, str]]:
-        """(files() section, root, dir prefix) of main's commit roots."""
-        return [
-            ("delta", self.delta_dir, "batch="),
-            ("pos_delete", self.pos_delete_dir, "delete="),
-            ("eq_delete", self.eq_delete_dir, "delete="),
-        ]
-
-    def _mark_folded(self, batch_id: int | None) -> None:
-        if batch_id is None:
-            return
-        prev = self._last_folded_batch()
-        if prev is None or batch_id > prev:
-            with open(f"{self.path}/{COMPACTION_MARK}", "w") as f:
-                json.dump({"last_folded_batch": batch_id}, f)
+        return self._ids("deltas")
 
     def rollback_to_batch(self, batch_id: int) -> list[int]:
         """Iceberg rollback_to_snapshot analog: make VERSION AS OF
-        ``batch_id`` the CURRENT state by dropping every later commit
-        (and any staged batches). Metadata-only — nothing is rewritten;
-        the dropped commit dirs are removed like Iceberg orphaning the
-        rolled-back snapshots' files. Refuses to roll back past the
-        last compaction (those versions are expired — same contract as
-        snapshot(as_of_batch=...)). Returns the dropped batch ids."""
+        ``batch_id`` the CURRENT state with one version that drops every
+        later commit, delete files included (they share the id-space),
+        and then discard any staged batches. Metadata-only — nothing is
+        rewritten; the dropped commits' dirs go with expire_snapshots().
+        Refuses to roll back past the last compaction (those versions
+        are expired — same contract as snapshot(as_of_batch=...)).
+        Returns the dropped batch ids."""
         self._check_not_expired(batch_id)
+        s = self._state()
         dropped = []
-        # delete commits share the id-space: they roll back too, each
-        # taken out whole by _publish
-        for _, root, prefix in self._commit_roots():
-            for i in self._ids(root, prefix):
+        for kind in _COMMITS:
+            for i in self._ids(kind, s):
                 if i > batch_id:
-                    self._publish(None, f"{root}/{prefix}{i}")
+                    del s[kind][str(i)]
                     dropped.append(i)
+        if dropped:
+            self._publish(s)
         shutil.rmtree(self.staging_dir, ignore_errors=True)
         return dropped
 
     # -- branch refs (Iceberg branching / multi-commit WAP analog) ----
     #
     # A branch is a named ref forked from a main version: its commits
-    # land under branches/<name>/batch=N (invisible to main readers),
-    # its view is "main AS OF the fork + the branch's own commits", and
-    # fast_forward() publishes by MOVING the commit dirs into deltas —
-    # metadata + rename only, no data rewrite, exactly Iceberg's
-    # fast-forward of main to a validated audit branch. The single-
-    # commit WAP path (stage/audit/publish) is the degenerate form.
-    # Reference: the staged-commit plan item (docs/design.md WAP notes);
-    # Iceberg ref semantics per the public spec (refs map in table
-    # metadata).
+    # land under branches/<name>/batch=N and only the ref lists them
+    # (invisible to main readers), its view is "main AS OF the fork +
+    # the branch's own commits", and fast_forward() publishes them all
+    # with ONE version that lists the same dirs under main — metadata
+    # only, no data rewrite, exactly Iceberg's fast-forward of main to a
+    # validated audit branch. The single-commit WAP path
+    # (stage/audit/publish) is the degenerate form. Reference: the
+    # staged-commit plan item (docs/design.md WAP notes); Iceberg ref
+    # semantics per the public spec (refs map in table metadata).
 
     @property
     def branches_dir(self) -> str:
         return f"{self.path}/branches"
-
-    @property
-    def _refs_path(self) -> str:
-        return f"{self.path}/_refs.json"
-
-    def _read_refs(self) -> dict:
-        try:
-            with open(self._refs_path) as f:
-                refs = json.load(f)
-                refs.setdefault("branches", {})
-                refs.setdefault("tags", {})
-                return refs
-        except (OSError, ValueError):
-            return {"branches": {}, "tags": {}}
-
-    def _write_refs(self, refs: dict) -> None:
-        with open(self._refs_path, "w") as f:
-            json.dump(refs, f)
 
     def _main_head(self) -> int | None:
         ids = self._delta_batch_ids()
@@ -1166,45 +1175,42 @@ class MorTable:
     def create_branch(self, name: str, at_batch: int | None = None) -> int | None:
         """Fork a branch at ``at_batch`` (default: current main head).
         Metadata-only. Returns the fork batch id (None = empty table)."""
-        refs = self._read_refs()
-        if name in refs["branches"] or name in refs["tags"]:
+        s = self._state()
+        if name in s["branches"] or name in s["tags"]:
             raise ValueError(f"ref {name!r} already exists")
         fork = at_batch if at_batch is not None else self._main_head()
         if fork is not None:
             self._check_not_expired(fork)
-        refs["branches"][name] = {"fork_batch": fork, "batches": []}
-        self._write_refs(refs)
+        s["branches"][name] = {"fork_batch": fork, "batches": {}}
+        self._publish(s)
         return fork
 
     def _branch_ref(self, name: str) -> dict:
-        refs = self._read_refs()
-        if name not in refs["branches"]:
+        branches = self._current()["branches"]
+        if name not in branches:
             raise ValueError(f"no such branch {name!r}")
-        return refs["branches"][name]
+        return branches[name]
 
     def commit_to_branch(self, batch_df: DataFrame, batch_id: int, name: str) -> None:
-        """commit_batch onto a branch: the same stage → manifest →
-        publish commit and the same Spark jobs, but the commit dir is
-        reachable only via the ref."""
-        ref = self._branch_ref(name)
-        head = ref["batches"][-1] if ref["batches"] else ref["fork_batch"]
-        if head is not None and batch_id <= head and batch_id not in ref["batches"]:
+        """commit_batch onto a branch: the same write → manifest →
+        version commit and the same Spark jobs, but only the ref lists
+        the commit."""
+        fork = self._branch_ref(name)["fork_batch"]
+        ids = self._ids(f"branches/{name}")
+        head = ids[-1] if ids else fork
+        if head is not None and batch_id <= head and batch_id not in ids:
             raise ValueError(
                 f"branch {name!r} head is {head}; new batch id must advance"
             )
-        self._commit(batch_df, f"{self.branches_dir}/{name}/batch={batch_id}")
-        if batch_id not in ref["batches"]:
-            refs = self._read_refs()
-            refs["branches"][name]["batches"].append(batch_id)
-            self._write_refs(refs)
+        self._commit(batch_df, f"branches/{name}", batch_id)
 
     def fast_forward(self, name: str) -> list[int]:
-        """Publish a branch: move its commit dirs, manifests included,
-        into main's deltas (_publish, one rename each) and drop the ref.
-        Requires main to still be AT the fork point (a
-        true fast-forward — Iceberg's fastForwardBranch contract);
-        anything else would silently interleave diverged histories.
-        Returns the published batch ids."""
+        """Publish a branch: ONE version lists its commit dirs, manifests
+        included, under main's commits and drops the ref, so main gains
+        the whole branch or none of it. Requires main to still be AT the
+        fork point (a true fast-forward — Iceberg's fastForwardBranch
+        contract); anything else would silently interleave diverged
+        histories. Returns the published batch ids."""
         ref = self._branch_ref(name)
         if self._main_head() != ref["fork_batch"]:
             raise ValueError(
@@ -1212,22 +1218,20 @@ class MorTable:
                 f"batch {ref['fork_batch']} (now at {self._main_head()}); "
                 "recreate the branch from the new head"
             )
-        for b in ref["batches"]:
-            src = f"{self.branches_dir}/{name}/batch={b}"
-            dst = f"{self.delta_dir}/batch={b}"
-            if os.path.exists(dst):
+        s = self._state()
+        for b, d in s["branches"].pop(name)["batches"].items():
+            if b in s["deltas"]:
                 raise ValueError(f"batch {b} already exists on main")
-            self._publish(src, dst)
-        published = list(ref["batches"])
-        self.drop_branch(name)
-        return published
+            s["deltas"][b] = d
+        self._publish(s)
+        return sorted(int(b) for b in ref["batches"])
 
     def drop_branch(self, name: str) -> None:
-        """Delete a branch's ref and its unpublished commit dirs."""
-        refs = self._read_refs()
-        refs["branches"].pop(name, None)
-        self._write_refs(refs)
-        shutil.rmtree(f"{self.branches_dir}/{name}", ignore_errors=True)
+        """Delete a branch's ref; its unpublished commit dirs go with
+        expire_snapshots()."""
+        s = self._state()
+        if s["branches"].pop(name, None) is not None:
+            self._publish(s)
 
     def create_tag(self, name: str, at_batch: int | None = None) -> int:
         """Pin a named immutable ref to a version (Iceberg tag):
@@ -1235,41 +1239,39 @@ class MorTable:
         or until compaction expires the version, which resolve_tag
         surfaces as SnapshotExpiredError, same contract as any
         time-travel read. Tags and branches share the ref namespace."""
-        refs = self._read_refs()
-        if name in refs["tags"] or name in refs["branches"]:
+        s = self._state()
+        if name in s["tags"] or name in s["branches"]:
             raise ValueError(f"ref {name!r} already exists")
         at = at_batch if at_batch is not None else self._main_head()
         if at is None:
             raise ValueError("cannot tag an empty table")
         self._check_not_expired(at)
-        refs["tags"][name] = at
-        self._write_refs(refs)
+        s["tags"][name] = at
+        self._publish(s)
         return at
 
     def resolve_tag(self, name: str) -> int:
-        refs = self._read_refs()
-        if name not in refs["tags"]:
+        tags = self._current()["tags"]
+        if name not in tags:
             raise ValueError(f"no such tag {name!r}")
-        at = refs["tags"][name]
-        self._check_not_expired(at)
-        return at
+        self._check_not_expired(tags[name])
+        return tags[name]
 
     def drop_tag(self, name: str) -> None:
-        refs = self._read_refs()
-        refs["tags"].pop(name, None)
-        self._write_refs(refs)
+        s = self._state()
+        if s["tags"].pop(name, None) is not None:
+            self._publish(s)
 
     def refs(self) -> DataFrame:
         """Metadata table of named refs (Iceberg `refs` analog): main,
         every branch (fork point, head, commit count), every tag."""
-        refs = self._read_refs()
-        rows = [
-            ("main", "branch", None, self._main_head(), len(self._delta_batch_ids()))
-        ]
-        for name, ref in sorted(refs["branches"].items()):
-            head = ref["batches"][-1] if ref["batches"] else ref["fork_batch"]
-            rows.append((name, "branch", ref["fork_batch"], head, len(ref["batches"])))
-        for name, at in sorted(refs["tags"].items()):
+        s = self._current()
+        rows = [("main", "branch", None, self._main_head(), len(s["deltas"]))]
+        for name, ref in sorted(s["branches"].items()):
+            ids = self._ids(f"branches/{name}", s)
+            head = ids[-1] if ids else ref["fork_batch"]
+            rows.append((name, "branch", ref["fork_batch"], head, len(ids)))
+        for name, at in sorted(s["tags"].items()):
             rows.append((name, "tag", None, at, 0))
         return self.spark.createDataFrame(
             rows,
@@ -1283,20 +1285,16 @@ class MorTable:
         """Compaction trigger (reference A24's scheduling half,
         docs/design.md:394-400): the merge-on-read read path unions
         base + every delta commit, so read amplification grows with
-        the delta count. Fire when either the commit count or the
-        small-file count crosses its threshold — both are metadata
-        listings (no data read), cheap enough for every batch loop.
-        The thresholds mirror Iceberg's rewrite_data_files defaults in
-        spirit: bound reader fan-in, don't chase perfection."""
-        batches = self._delta_batch_ids()
-        if len(batches) >= max_delta_batches:
+        the delta count. Fire when either the live commit count or their
+        small-file count crosses its threshold — metadata and listings
+        of the live dirs (no data read), cheap enough for every batch
+        loop. The thresholds mirror Iceberg's rewrite_data_files
+        defaults in spirit: bound reader fan-in, don't chase
+        perfection."""
+        dirs = self._dirs("deltas")
+        if len(dirs) >= max_delta_batches:
             return True
-        n_files = 0
-        for root, _dirs, files in os.walk(self.delta_dir):
-            n_files += sum(1 for f in files if f.endswith(".parquet"))
-            if n_files >= max_delta_files:
-                return True
-        return False
+        return sum(1 for _, d in dirs for _ in self._walk_parquet(d)) >= max_delta_files
 
     def compact(
         self,
@@ -1306,9 +1304,9 @@ class MorTable:
     ) -> None:
         """Rewrite base from the merged snapshot; fold deltas (reference
         A24 RewriteDataFiles, docs/design.md:394-400). Spark jobs: the
-        base's schema read, the merged view's shuffle stage and the
-        write, as each commit is read with its manifest's schema; plus
-        one broadcast per live delete file (the positional ones as one).
+        merged view's shuffle stage and the write, as every dir is read
+        with its manifest's schema; plus one broadcast per live delete
+        file (the positional ones as one).
 
         ``max_records_per_file`` bounds output file size (Iceberg's
         rewrite target-file-size, record-count proxy) via Spark's
@@ -1340,11 +1338,12 @@ class MorTable:
         the current spec and no live equality-delete file; run a full
         compact() first otherwise.
 
-        Both forms go through _fold, which ARCHIVES the superseded base
-        (Iceberg keeps old snapshots' files until ExpireSnapshots;
-        expire_snapshots() is that step here) and advances the
-        last-folded-batch mark, so VERSION AS OF an earlier batch
-        raises SnapshotExpiredError (conservative for partial
+        Both forms go through _fold, which writes one version: the new
+        base listed, what it absorbed no longer read, the superseded
+        base ARCHIVED (Iceberg keeps old snapshots' files until
+        ExpireSnapshots; expire_snapshots() is that step here) and the
+        last-folded-batch mark advanced, so VERSION AS OF an earlier
+        batch raises SnapshotExpiredError (conservative for partial
         compaction: hot-partition history still exists but
         cold-partition history does not, and a half-historical snapshot
         would be silently wrong).
@@ -1369,13 +1368,13 @@ class MorTable:
             pc = self.partition_col
             if pc is None:
                 raise ValueError("compact(where=...) requires partition_col")
-            # partition-targeted rewrite moves partition DIRS by name, which
+            # a partition-targeted rewrite masks partitions by name, which
             # is only sound when every live commit shares the current spec;
             # after an evolution, run a full compact() first (Iceberg's
             # guidance for spec changes is the same: old files keep the old
             # layout until rewritten)
-            for b in self._delta_batch_ids():
-                spec = self._manifest(f"{self.delta_dir}/batch={b}").get("spec")
+            for b, d in self._dirs("deltas"):
+                spec = self._manifest(d).get("spec")
                 if spec != pc:
                     raise ValueError(
                         f"compact(where=...) needs all commits under spec "
@@ -1394,81 +1393,66 @@ class MorTable:
             # partitionBy renders simple values (int/str/date) as
             # str(value); exotic values needing Spark's %-escaping aren't
             # used as partition keys here
-            parts = [f"{pc}={v}" for v in cold_vals]
+            parts = (pc, [str(v) for v in cold_vals])
         self._fold(rows, parts, max_records_per_file)
 
     def _fold(
         self,
         rows: DataFrame | None,
-        parts: list[str] | None = None,
+        parts: tuple[str, list[str]] | None = None,
         max_records_per_file: int | None = None,
     ) -> None:
-        """Replace the base's ``col=value`` dirs ``parts`` (None: the
-        whole base) with ``rows`` (None: no rows) — the only code that
-        swaps base files and retires what they absorbed. The new base is
-        staged under staging/; each replaced dir moves into one new
-        archive/gen=N and the new ones move in. Then the folded deltas
-        go (whole batch=N dirs, or their ``parts`` subdirs), a whole fold
-        archives the delete files with the base they struck, and the
-        fold mark advances past every commit it covered, deletes too. A
-        partial fold refuses while equality deletes are live: its rows
-        restart at op_seq 0, under their sequence cut."""
-        if parts is not None and self._eq_delete_ids():
+        """Replace the base — or, with ``parts`` = (column, values), only
+        those partitions of it — with ``rows`` (None: no rows); the only
+        code that folds commits into base. ``rows`` go to a fresh base
+        dir, then ONE version lists it: a whole fold drops every commit
+        and delete file from the version and archives the old base dirs
+        and delete files as generation N; a partial fold masks
+        ``parts`` out of every live base dir and commit instead. The
+        fold mark advances past every commit the fold covered, deletes
+        too. Nothing is renamed or deleted, so a crash anywhere leaves
+        the previous version whole. A partial fold refuses while
+        equality deletes are live: its rows restart at op_seq 0, under
+        their sequence cut."""
+        s = self._state()
+        if parts is not None and s["eq_deletes"]:
             raise ValueError(
                 "compact(where=...) while equality-delete files are live "
                 "would let them strike the rewritten rows; run full "
                 "compact() first"
             )
-        folded = self._delta_batch_ids()
-        last = max(folded + self._pos_delete_ids() + self._eq_delete_ids(), default=None)
-        staged = self._staged(self.base_dir)
-        if rows is None:
-            shutil.rmtree(staged, ignore_errors=True)
-            os.makedirs(staged)
-        else:
-            w = self._writer(
-                rows.withColumn(OP_SEQ, F.lit(0).cast("long")).withColumn(
-                    OP_TYPE, F.lit("upsert")
-                )
-            )
-            if max_records_per_file is not None:
-                w = w.option("maxRecordsPerFile", max_records_per_file)
-            w.mode("overwrite").parquet(staged)
-        gens = self._generations()
-        gen_dir = f"{self.archive_dir}/gen={gens[-1] + 1 if gens else 0:06d}"
+        last = max((int(i) for k in _COMMITS for i in s[k]), default=None)
+        new = []
+        if rows is not None:
+            new.append(f"base/v{s['version'] + 1}")
+            rows = rows.withColumns({OP_SEQ: F.lit(0).cast("long"), OP_TYPE: F.lit("upsert")})
+            self._write_rows(rows, self._abs(new[0]), self.partition_col, max_records_per_file)
+        archived = []
         if parts is None:
-            os.makedirs(self.archive_dir, exist_ok=True)
-            moves = [(self.base_dir, gen_dir), (staged, self.base_dir)] + [
-                (d, f"{gen_dir}/{os.path.basename(d)}")
-                for d in (self.pos_delete_dir, self.eq_delete_dir)
-            ]
-            retired = [f"{self.delta_dir}/batch={b}" for b in folded]
+            archived = s["base"] + [d for k in _COMMITS[1:] for d in s[k].values()]
+            s.update(base=new, deltas={}, pos_deletes={}, eq_deletes={})
         else:
-            os.makedirs(gen_dir)
-            moves = [
-                (f"{src}/{d}", f"{dst}/{d}")
-                for d in parts
-                for src, dst in ((self.base_dir, gen_dir), (staged, self.base_dir))
-            ]
-            retired = [f"{self.delta_dir}/batch={b}/{d}" for b in folded for d in parts]
-        for src, dst in moves:
-            if os.path.isdir(src):  # absent: no base or delete files yet, or no live rows
-                os.rename(src, dst)
-        for d in retired:
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-        self._mark_folded(last)
+            col, vals = parts
+            for d in s["base"] + list(s["deltas"].values()):
+                s["drop"].setdefault(d, {}).setdefault(col, []).extend(vals)
+            s["base"] += new
+        s["archive"].append({"gen": s["gen"], "dirs": archived})
+        s["gen"] += 1
+        if last is not None and (s["folded"] is None or last > s["folded"]):
+            s["folded"] = last
+        self._publish(s)
 
     # -- write-audit-publish (staged commits) -------------------------
     # Iceberg's WAP pattern (spark.wap.id / branch commits): a batch is
     # written to an isolated staging location, validated there, and only
     # then made visible by an ATOMIC metadata operation — readers never
     # see unaudited rows, and an audit failure costs nothing but the
-    # staged files. The analog here: staging/batch=N is outside the
-    # deltas/ root the read path unions, and publish is one directory
-    # rename (atomic on POSIX), mirroring Iceberg's snapshot pointer
-    # swap. Reference hook: the design's at-least-once commit protocol
-    # (docs/design.md:339-348) — WAP adds the audit gate in front of it.
+    # staged files. The analog here: staging/batch=N is no table state
+    # (no version lists it), and publish_batch moves it to its commit
+    # dir and publishes the version that lists it, mirroring Iceberg's
+    # snapshot pointer swap. Reference hook: the design's at-least-once
+    # commit protocol (docs/design.md:339-348) — WAP adds the audit gate
+    # in front of it.
 
     @property
     def staging_dir(self) -> str:
@@ -1491,7 +1475,7 @@ class MorTable:
         sees exactly what publish would expose, not the batch lineage.
         """
         target = f"{self.staging_dir}/batch={batch_id}"
-        if not self._has_parquet(target):
+        if not self._manifest(target):
             return [f"batch {batch_id}: nothing staged"]
         return self._audit_df(self._read_commit(target), expect_min_rows, checks)
 
@@ -1534,15 +1518,12 @@ class MorTable:
         cross-commit rules (referential counts, aggregate drift) see
         the state readers would. Returns violation strings, empty =
         clean."""
-        ref = self._branch_ref(name)
+        self._branch_ref(name)
+        dirs = self._dirs(f"branches/{name}")
         problems: list[str] = []
-        if not ref["batches"]:
+        if not dirs:
             return [f"branch {name!r}: no commits to publish"]
-        for b in ref["batches"]:
-            target = f"{self.branches_dir}/{name}/batch={b}"
-            if not self._has_parquet(target):
-                problems.append(f"branch commit {b}: no data files")
-                continue
+        for b, target in dirs:
             problems += [
                 f"branch commit {b}: {p}"
                 for p in self._audit_df(
@@ -1559,7 +1540,7 @@ class MorTable:
 
     def publish_branch(self, name: str, checks=None) -> dict:
         """Audit-then-fast-forward: the branch flavor of WAP. A clean
-        audit fast-forwards main to the branch (rename-only) and
+        audit fast-forwards main to the branch (one version) and
         returns the published batch ids; any violation leaves the
         branch INTACT for inspection (drop_branch to discard) and
         nothing reaches main."""
@@ -1569,10 +1550,10 @@ class MorTable:
         return {"published": self.fast_forward(name), "problems": []}
 
     def publish_batch(self, batch_id: int) -> None:
-        """Atomically promote a staged batch into deltas/ (_publish: one
-        rename — the snapshot-pointer swap). Fails if nothing is staged;
-        replaces any existing commit with the same id (idempotent
-        replay).
+        """Atomically promote a staged batch into main: its dir moves to
+        a fresh commit dir and ONE version lists it (the
+        snapshot-pointer swap). Fails if nothing is staged; replaces any
+        existing commit with the same id (idempotent replay).
 
         Optimistic-concurrency rebase (Iceberg's retry-on-commit
         analog): op_seq is assigned at STAGE time, so if another batch
@@ -1584,27 +1565,32 @@ class MorTable:
         replaces the one with this id; base rows carry op_seq 0); on
         conflict, SHIFT every staged op_seq by a constant so the batch
         lands strictly after the interloper, preserving intra-batch
-        order, and publish that rewrite instead. The check is
-        _max_op_seq, delete_equality's sequence cut too: it reads only
-        op_seq columns, with each commit's manifest schema, so no job
-        per commit. CDC feeds with globally monotone
+        order, and publish that rewrite instead. Both bounds come from
+        manifests (_max_op_seq, delete_equality's sequence cut too), so
+        the check reads no data. CDC feeds with globally monotone
         resume-token seqs never trigger it; writers are otherwise
-        assumed single-publisher per table (no cross-process commit
-        lock here — the catalog provides that in a real Iceberg
-        deployment)."""
+        assumed single-publisher per table (a concurrent version write
+        fails its link rather than overwrite — the catalog provides the
+        lock in a real Iceberg deployment)."""
         src = f"{self.staging_dir}/batch={batch_id}"
-        dst = f"{self.delta_dir}/batch={batch_id}"
-        if not self._has_parquet(src):
+        m = self._manifest(src)
+        if not m:
             raise FileNotFoundError(f"no staged batch {batch_id} to publish")
-        staged = self._read_commit(src)
-        lo = staged.agg(F.min(OP_SEQ)).head()[0]
-        cur_max = self._max_op_seq(exclude=dst) or 0
+        lo = m["seq_min"]
+        cur_max = self._max_op_seq(exclude=batch_id) or 0
         if lo is None or lo > cur_max:
-            self._publish(src, dst)
+            s = self._state()
+            d = self._fresh(f"deltas/batch={batch_id}", s)
+            os.makedirs(self.delta_dir, exist_ok=True)
+            shutil.rmtree(self._abs(d), ignore_errors=True)  # a crashed publish's leftover
+            os.rename(src, self._abs(d))
+            s["deltas"][str(batch_id)] = d
+            self._publish(s)
         else:
             shift = F.lit(cur_max + 1 - lo)
             shifted = (F.col(OP_SEQ) + shift).cast("long")
-            self._commit(staged.withColumn(OP_SEQ, shifted), dst)
+            staged = self._read_commit(src).withColumn(OP_SEQ, shifted)
+            self._commit(staged, "deltas", batch_id)
             shutil.rmtree(src)
 
     def abort_batch(self, batch_id: int) -> None:
@@ -1612,79 +1598,71 @@ class MorTable:
         shutil.rmtree(f"{self.staging_dir}/batch={batch_id}", ignore_errors=True)
 
     def remove_orphan_files(self, older_than_s: float = 3 * 24 * 3600) -> list[str]:
-        """Iceberg remove_orphan_files analog: delete files under the
-        table root that no reader path can reach — leftovers from
-        crashed writes (`_temporary`, stray files outside any commit
-        dir), abandoned staging batches, and the staged dirs of commits
-        and of compact()/truncate() base rewrites that crashed before
-        their swap. Only entries older than ``older_than_s`` are removed
-        (Iceberg's 3-day default) so in-flight writers are never raced. Live
-        data — base/, deltas/batch=*/, archive/gen=*/ and fresh
-        staging — is structurally excluded, not timestamp-excluded:
-        the walk starts from the unreachable roots, so a clock skew
-        can delay cleanup but never delete reachable files. Returns
+        """Iceberg remove_orphan_files analog: delete what no retained
+        version lists — leftovers of crashed writes and version writes,
+        dirs and files outside any listed dir, abandoned staging
+        batches — one set difference between the entries on disk and
+        the dirs every version on disk lists (with their parents).
+        Only entries older than ``older_than_s`` are removed (Iceberg's
+        3-day default) so in-flight writers are never raced; a clock
+        skew can delay cleanup but never delete a listed dir. Returns
         the removed paths (relative to the table root)."""
         import time
 
         cutoff = time.time() - older_than_s
+        listed = set().union(*(self._listed(self._load(n)) for n in self._versions()))
+        keep = {"metadata", "base", "branches", "staging", *_COMMITS}
+        keep |= {os.path.dirname(d) for d in listed}
+        keep |= {f"metadata/v{n}.json" for n in self._versions()}
         doomed: list[str] = []
-
-        def _old(p: str) -> bool:
-            try:
-                return os.path.getmtime(p) <= cutoff
-            except OSError:
-                return False
-
-        # 1. crashed-write leftovers anywhere under the root
         for base, dirs, files in os.walk(self.path):
-            for d in list(dirs):
-                if d == "_temporary" and _old(os.path.join(base, d)):
-                    doomed.append(os.path.join(base, d))
-                    dirs.remove(d)
-        # 2. stray entries directly under deltas/ (not batch=N) and
-        #    archive/ (not gen=N)
-        for root, prefix in ((self.delta_dir, "batch="), (self.archive_dir, "gen=")):
-            if not os.path.isdir(root):
-                continue
-            for d in os.listdir(root):
-                p = os.path.join(root, d)
-                if not d.startswith(prefix) and _old(p):
-                    doomed.append(p)
-        # 3. abandoned staged batches, crashed commits and folds
-        if os.path.isdir(self.staging_dir):
-            for d in os.listdir(self.staging_dir):
-                p = os.path.join(self.staging_dir, d)
-                if _old(p):
-                    doomed.append(p)
-        for p in doomed:
+            for name in [*dirs, *files]:
+                rel = os.path.relpath(os.path.join(base, name), self.path)
+                if rel in keep:
+                    continue
+                if name in dirs:
+                    dirs.remove(name)  # a listed dir is whole; an unlisted one goes whole
+                if rel not in listed and os.path.getmtime(self._abs(rel)) <= cutoff:
+                    doomed.append(rel)
+        for rel in doomed:
+            p = self._abs(rel)
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
             else:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-        return [os.path.relpath(p, self.path) for p in doomed]
+                os.unlink(p)
+        return doomed
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Retention-based snapshot expiry (reference A25,
-        docs/design.md:399 ExpireSnapshots): drop archived base
-        generations beyond the newest keep_last. Never touches the live
-        base/deltas — the current snapshot is unaffected. Returns the
-        number of generations removed."""
-        gens = self._generations()
-        doomed = gens[: max(0, len(gens) - keep_last)] if keep_last > 0 else gens
-        for d in doomed:
-            shutil.rmtree(f"{self.archive_dir}/gen={d:06d}", ignore_errors=True)
-        return len(doomed)
+        docs/design.md:399 ExpireSnapshots): a version that keeps the
+        newest ``keep_last`` archived base generations, then every
+        older version goes, with the dirs they list that the current
+        one does not — one set difference (crash leftovers no version
+        lists are remove_orphan_files' work). Never touches what the
+        current version reads. Returns the number of generations
+        removed."""
+        s = self._state()
+        gone = s["archive"][: max(0, len(s["archive"]) - keep_last)]
+        if gone:
+            s["archive"] = s["archive"][len(gone):]
+            self._publish(s)
+        cur = self._current()
+        old = [n for n in self._versions() if n < cur["version"]]
+        doomed = set().union(*(self._listed(self._load(n)) for n in old)) - self._listed(cur)
+        for d in sorted(doomed):
+            shutil.rmtree(self._abs(d), ignore_errors=True)
+        for n in old:
+            os.unlink(self._vpath(n))
+        return len(gone)
 
     # -- metadata inspection ------------------------------------------
     # Iceberg exposes `db.tbl.files` / `.snapshots` / `.partitions` /
     # `.history` metadata tables for operational queries (how many
     # small files? which commits are live? is compaction due?). The
-    # same surface here, driven purely by directory listings + parquet
-    # FOOTER reads — no data pages are touched, so each call is O(files)
-    # metadata work regardless of table size.
+    # same surface here, driven by the current version, listings of the
+    # dirs it lists and parquet FOOTER reads — no data pages are
+    # touched, so each call is O(files) metadata work regardless of
+    # table size.
 
     def _walk_parquet(self, root: str):
         for base, _dirs, fs in os.walk(root):
@@ -1716,20 +1694,29 @@ class MorTable:
     ) -> list[dict]:
         # Iceberg's files metadata lists delete files beside data files
         # (content=POSITION_DELETES); same here, a section each, keyed by
-        # the delete commit id. Staged (WAP) commits show in files() for
+        # the delete commit id. Staged (WAP) batches show in files() for
         # an operator debugging a stuck audit, never in the live-state
-        # views snapshots()/partitions(). A root without a dir prefix is
-        # one section with no commit id.
-        roots = [("base", self.base_dir, None), *self._commit_roots()]
-        if include_staging:
-            roots.append(("staged", self.staging_dir, "batch="))
+        # views snapshots()/partitions(). Files in partitions a partial
+        # compaction masked are not live.
+        s = self._current()
+        dirs = [("base", None, d) for d in self._base_dirs()]
+        for kind, section in zip(_COMMITS, ("delta", "pos_delete", "eq_delete")):
+            dirs += [(section, i, d) for i, d in self._dirs(kind)]
         if include_archive:
-            roots.append(("archive", self.archive_dir, None))
+            dirs += [("archive", None, self._abs(d)) for g in s["archive"] for d in g["dirs"]]
         rows = []
-        for section, root, prefix in roots:
-            for i in [None] if prefix is None else self._ids(root, prefix):
-                d = root if i is None else f"{root}/{prefix}{i}"
-                rows += [self._file_row(p, section, i) for p in self._walk_parquet(d)]
+        for section, i, d in dirs:
+            masks = s["drop"].get(os.path.relpath(d, self.path), {})
+            rows += [
+                self._file_row(p, section, i)
+                for p in self._walk_parquet(d)
+                if not any(f"/{c}={v}/" in p for c, vals in masks.items() for v in vals)
+            ]
+        if include_staging:
+            for p in self._walk_parquet(self.staging_dir):
+                batch = os.path.relpath(p, self.staging_dir).split(os.sep)[0]
+                if batch.startswith("batch="):
+                    rows.append(self._file_row(p, "staged", int(batch.split("=", 1)[1])))
         return rows
 
     def files(self, include_archive: bool = False) -> DataFrame:
@@ -1757,15 +1744,12 @@ class MorTable:
             agg["n_files"] += 1
             agg["record_count"] += r["record_count"]
             agg["file_size_bytes"] += r["file_size_bytes"]
+        deltas = self._current()["deltas"]
         rows = []
         for (section, batch_id), agg in sorted(
             by_commit.items(), key=lambda kv: (kv[0][1] is not None, kv[0][1])
         ):
-            m = (
-                self._manifest(f"{self.delta_dir}/batch={batch_id}")
-                if section == "delta"
-                else {}
-            )
+            m = self._manifest(self._abs(deltas[str(batch_id)])) if section == "delta" else {}
             bounded = "min" in m and "max" in m
             rows.append(
                 {
@@ -1807,24 +1791,12 @@ class MorTable:
         """Iceberg `history` analog: the compaction lineage — archived
         base generations (oldest first), the live base, and the
         last-folded-batch watermark that bounds time travel."""
-        folded = self._last_folded_batch()
-        rows = [
-            {
-                "generation": g,
-                "status": "archived",
-                "folded_through": None,
-            }
-            for g in self._generations()
-        ]
-        rows.append(
-            {
-                "generation": (rows[-1]["generation"] + 1) if rows else 0,
-                "status": "current",
-                "folded_through": folded,
-            }
+        s = self._current()
+        rows = [(g["gen"], "archived", None) for g in s["archive"]]
+        rows.append((s["gen"], "current", s["folded"]))
+        return self.spark.createDataFrame(
+            rows, "generation long, status string, folded_through long"
         )
-        schema = "generation long, status string, folded_through long"
-        return self._meta_frame(rows, schema)
 
     def _meta_frame(self, rows: list[dict], schema: str) -> DataFrame:
         import pandas as pd

@@ -2,7 +2,7 @@
 instead of aggregating the events first. Its rare batches (an
 invalidation, no normal op) are corrected after that write; on every one
 of them the result must equal the former pre-pass implementation, kept
-below as the oracle: the same returned dict, the same ``batch=N`` dirs
+below as the oracle: the same returned dict, the same live commits
 and manifests, the same snapshot, the same dead letters and the same
 metrics, on the plain, ``apply_with_metrics`` and quarantine paths."""
 
@@ -155,17 +155,17 @@ def _rows(spark, path):
 
 
 def _state(spark, t, qdir):
-    """Every commit dir's name, manifest and rows, the snapshot, and the
+    """Every live commit's id, manifest and rows, the snapshot, and the
     dead letters."""
-    delta = t.delta_dir
-    dirs = sorted(os.listdir(delta))
+    dirs = dict(t._dirs("deltas"))
     manifests = {}
-    for d in dirs:
-        with open(f"{delta}/{d}/{MANIFEST}") as f:
-            manifests[d] = json.load(f)
+    for b, d in dirs.items():
+        with open(f"{d}/{MANIFEST}") as f:
+            manifests[b] = json.load(f)
+    rows = {b: _rows(spark, d) for b, d in dirs.items()}
     snap = sorted(repr(tuple(r)) for r in t.snapshot().collect())
     dlq = (sorted(os.listdir(qdir)), _rows(spark, qdir)) if qdir else None
-    return dirs, manifests, _rows(spark, delta), snap, dlq
+    return sorted(dirs), manifests, rows, snap, dlq
 
 
 def _run(spark, root, apply_fn, path, monkeypatch):
@@ -199,11 +199,11 @@ def test_apply_batch_equals_pre_pass_oracle(spark, tmp_path, monkeypatch, path):
     )
     for case, got, want in zip(["warm", *CASES], new_out, old_out):
         assert got == want, case
-    names = ("batch=N dirs", "manifests", "commit rows", "snapshot", "dead letters")
+    names = ("commit ids", "manifests", "commit rows", "snapshot", "dead letters")
     for name, got, want in zip(names, new_state, old_state):
         assert got == want, name
     assert new_metrics == old_metrics
     # the empty and invalidations-only batches commit nothing
-    assert "batch=4" not in new_state[0] and "batch=5" not in new_state[0]
+    assert 4 not in new_state[0] and 5 not in new_state[0]
     if path == "quarantine":
         assert all(o["max_seen_seq"] % 1000 == 999 for o in new_out)

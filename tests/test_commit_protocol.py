@@ -1,13 +1,14 @@
 """MorTable has one commit protocol: a commit's rows and manifest are
-staged under ``staging/``, and ``_publish`` makes the finished dir
-visible under ``deltas/``, ``branches/<name>/``, ``pos_deletes/`` or
-``eq_deletes/`` by rename.
+written to a fresh dir, and ``_publish`` makes it visible by writing
+the next table version, which lists it.
 
-Crash injection: for each write path, the manifest dump or the publish
-raises. Then the readable state must equal the state before the
-commit, no visible commit dir may lack its manifest, and a retry must
-leave the same commit dirs, manifests, staging listing and snapshot as
-a run that never failed."""
+Crash injection: for each write path, the manifest dump or the version
+write raises. Then the readable state must equal the state before the
+commit, every commit a version lists must have its manifest, and a
+retry must leave the same commits, manifests, staging listing and
+snapshot as a run that never failed. The layout-independent harness
+(tests/crash_harness.py) then fails every filesystem mutation of the
+multi-commit and metadata-only calls in turn."""
 
 from __future__ import annotations
 
@@ -19,7 +20,9 @@ from pyspark.sql import functions as F
 
 from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df
 from mongodb_iceberg_sync_spark.sync.apply import apply_batch, apply_batch_wap
-from mongodb_iceberg_sync_spark.sync.table_store import MANIFEST, MorTable
+from mongodb_iceberg_sync_spark.sync.table_store import MorTable
+
+from .crash_harness import check_every_crash, rows
 
 
 def _mk_batch(spark, rows):
@@ -104,20 +107,12 @@ COMMITS = {
 
 
 def _commit_dirs(t):
-    """{commit dir relative to the table root: its manifest, or None}
-    for every commit dir a reader can reach."""
-    out = {}
-    for root in (t.delta_dir, t.branches_dir, t.pos_delete_dir, t.eq_delete_dir):
-        for parent, dirs, _ in os.walk(root):
-            for d in [d for d in dirs if d.startswith(("batch=", "delete="))]:
-                path = os.path.join(parent, d)
-                try:
-                    with open(f"{path}/{MANIFEST}") as f:
-                        out[os.path.relpath(path, t.path)] = json.load(f)
-                except FileNotFoundError:
-                    out[os.path.relpath(path, t.path)] = None
-                dirs.remove(d)
-    return out
+    """{(commit root, id): its manifest, or None} for every commit a
+    version lists."""
+    kinds = ["deltas", "pos_deletes", "eq_deletes"]
+    refs = t.refs().filter("kind = 'branch' AND ref != 'main'").collect()
+    kinds += [f"branches/{r.ref}" for r in refs]
+    return {(k, i): t._manifest(d) or None for k in kinds for i, d in t._dirs(k)}
 
 
 def _readable(t):
@@ -176,31 +171,22 @@ def test_crash_leaves_state_and_retry_converges(spark, tmp_path, monkeypatch, na
 
 
 def test_bulk_crash_mid_publish_leaves_whole_commits(spark, tmp_path, monkeypatch):
-    """commit_batches publishes batch by batch: a crash after the first
-    publish leaves that batch visible with its manifest, nothing else,
-    and a retry converges."""
+    """commit_batches publishes all its batches in one version: a crash
+    at that write leaves none of them visible, and a retry converges."""
     clean = MorTable(spark, str(tmp_path / "clean"), key="doc_id")
     _setup(spark, clean)
     _commit_batches(spark, clean)
 
     t = MorTable(spark, str(tmp_path / "crash"), key="doc_id")
     _setup(spark, t)
-    publish = MorTable._publish
-    calls = []
-
-    def second_fails(self, src, dst):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise Crash("injected")
-        publish(self, src, dst)
-
+    before = _readable(t)
     with monkeypatch.context() as mp:
-        mp.setattr(MorTable, "_publish", second_fails)
+        boom, calls = _crash()
+        mp.setattr(MorTable, "_publish", boom)
         with pytest.raises(Crash):
             _commit_batches(spark, t)
-    dirs = _commit_dirs(t)
-    assert all(m is not None for m in dirs.values()), dirs
-    assert t._delta_batch_ids() == [0, 1, 2]  # batch 2 is the first published
+    assert len(calls) == 1
+    assert t._delta_batch_ids() == [0, 1] and _readable(t) == before
     _commit_batches(spark, t)
     assert _state(t) == _state(clean)
 
@@ -220,7 +206,6 @@ def test_bulk_commit_with_payload_column_named_batch(spark, tmp_path):
     assert sorted(map(tuple, bulk.snapshot().collect())) == sorted(
         map(tuple, loop.snapshot().collect())
     )
-    assert os.listdir(bulk.staging_dir) == []
 
 
 def _events(spark, rows):
@@ -238,7 +223,7 @@ def test_publish_replay_is_not_a_concurrent_commit(spark, tmp_path):
     assert apply_batch_wap(t, _events(spark, batch1), 1)["published"]
     # replay, as after a crash between publish and checkpoint
     assert apply_batch_wap(t, _events(spark, batch1), 1)["published"]
-    published = spark.read.parquet(f"{t.delta_dir}/batch=1").select("_op_seq")
+    published = spark.read.parquet(dict(t._dirs("deltas"))[1]).select("_op_seq")
     assert sorted(r[0] for r in published.collect()) == [10, 30]
     apply_batch(t, _events(spark, [(31, "update", "a")]), 2)
     got = {r.doc_id: json.loads(r.full_doc)["v"] for r in t.snapshot().collect()}
@@ -261,3 +246,76 @@ def test_publish_rebase_over_mixed_partition_layouts(spark, tmp_path):
     assert [r[0] for r in published.collect()] == [3]
     got = {r.doc_id: r.full_doc for r in t.snapshot().collect()}
     assert got == {"a": '{"v": 2}', "b": "{}"}
+
+
+# -- every mutation of a multi-commit or metadata-only call -----------
+
+
+def _refs(t):
+    return sorted(tuple(r) for r in t.refs().collect())
+
+
+def _branch_template(spark, path):
+    t = MorTable(spark, path, key="doc_id")
+    t.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1), ("b", 2, "upsert", 2)]), 0)
+    t.create_branch("audit")
+    t.commit_to_branch(_mk_batch(spark, [("c", 3, "upsert", 3)]), 1, "audit")
+    t.commit_to_branch(_mk_batch(spark, [("a", 4, "delete", None)]), 2, "audit")
+    return t
+
+
+def _history_template(spark, path):
+    t = MorTable(spark, path, key="doc_id")
+    t.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1), ("b", 2, "upsert", 2)]), 0)
+    t.compact()
+    t.commit_batch(_mk_batch(spark, [("c", 3, "upsert", 3)]), 1)
+    t.compact()
+    t.commit_batch(_mk_batch(spark, [("a", 4, "upsert", 4)]), 2)
+    t.delete_equality(_full_doc(spark, 2), batch_id=3)
+    t.commit_batch(_mk_batch(spark, [("d", 5, "upsert", 5)]), 4)
+    return t
+
+
+def _bulk(t):
+    df = _mk_batch(
+        t.spark, [("a", 10, "upsert", 10), ("h", 11, "upsert", 11), ("b", 12, "delete", None)]
+    )
+    df = df.withColumn("b", F.col("_op_seq") - 8).withColumn("day", F.lit("d1"))
+    t.commit_batches(df, "b")
+
+
+CALLS = {
+    "fast_forward": (_branch_template, lambda t: t.fast_forward("audit")),
+    "commit_batches": (_branch_template, _bulk),
+    "rollback_to_batch": (_history_template, lambda t: t.rollback_to_batch(2)),
+    "evolve_partition_spec": (_history_template, lambda t: t.evolve_partition_spec("day")),
+    "expire_snapshots": (_history_template, lambda t: t.expire_snapshots(keep_last=1)),
+}
+
+
+@pytest.mark.parametrize("name", list(CALLS))
+def test_crash_at_any_step_leaves_a_whole_state(spark, tmp_path, monkeypatch, name):
+    """Fast-forward lands the whole branch or none of it, a bulk commit
+    all its batches or none, and a rollback, spec change or expiry is
+    whole too; a retry converges."""
+    template, call = CALLS[name]
+    t = template(spark, str(tmp_path / "template"))
+
+    def view(t):
+        return rows(t), rows(t, as_of_batch=2), _refs(t), t.partition_col, [
+            tuple(r) for r in t.history().collect()
+        ]
+
+    assert check_every_crash(monkeypatch, t, tmp_path, call, view) >= 1
+
+
+def test_crash_at_any_step_of_a_partitioned_bulk_commit(spark, tmp_path, monkeypatch):
+    """Under a partition spec commit_batches writes each batch on its
+    own, still publishing them in one version."""
+    t = MorTable(spark, str(tmp_path / "template"), key="doc_id", partition_col="day")
+    t.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1)]).withColumn("day", F.lit("d0")), 0)
+
+    def view(t):
+        return rows(t), _refs(t)
+
+    assert check_every_crash(monkeypatch, t, tmp_path, _bulk, view) >= 1

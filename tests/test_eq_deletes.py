@@ -58,7 +58,7 @@ def test_equality_delete_strikes_matching_values(spark, table):
 def test_strikes_delta_rows_too(spark, table):
     # no compaction: rows live in a delta commit, not base — equality
     # deletes must reach them anyway (unlike positional deletes)
-    assert not table._has_parquet(table.base_dir)
+    assert not table.files().filter(F.col("section") == "base").count()
     table.delete_equality(_vals(spark, [("blue",)]), batch_id=1)
     assert _keys(table) == ["a", "c"]
 
@@ -86,14 +86,11 @@ def test_time_travel_and_rollback(spark, table):
 def test_compact_folds_and_archives(spark, table):
     table.delete_equality(_vals(spark, [("red",)]), batch_id=1)
     table.compact()
-    assert not os.path.isdir(table.eq_delete_dir)
+    assert table._ids("eq_deletes") == []
     assert _keys(table) == ["b"]
-    gens = sorted(
-        d for d in os.listdir(table.archive_dir) if d.startswith("gen=")
-    )
-    assert any(
-        os.path.isdir(f"{table.archive_dir}/{g}/eq_deletes") for g in gens
-    )
+    # the archived generation keeps the delete file beside the base
+    archived = table.files(include_archive=True).filter(F.col("section") == "archive")
+    assert any("eq_deletes/" in r.file_path for r in archived.collect())
 
 
 def test_files_metadata_lists_eq_delete_files(spark, table):
@@ -121,7 +118,7 @@ def test_unknown_equality_column_rejected(spark, table):
 
 
 def _seq_cuts(spark, t, batch_id):
-    d = f"{t.eq_delete_dir}/delete={batch_id}"
+    d = dict(t._dirs("eq_deletes"))[batch_id]
     return [r._seq_cut for r in spark.read.parquet(d).collect()]
 
 
@@ -142,7 +139,7 @@ def test_replayed_delete_keeps_its_cut(spark, tmp_path):
 
 def test_delete_file_without_manifest_still_applies(spark, table):
     table.delete_equality(_vals(spark, [("red",)]), batch_id=1)
-    os.remove(f"{table.eq_delete_dir}/delete=1/{MANIFEST}")
+    os.remove(f"{dict(table._dirs('eq_deletes'))[1]}/{MANIFEST}")
     assert _keys(table) == ["b"]
 
 

@@ -5,12 +5,13 @@ absorbed, and never changes the readable snapshot silently."""
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from mongodb_iceberg_sync_spark.sync.table_store import MorTable, SnapshotExpiredError
+
+from .crash_harness import check_every_crash, rows
 
 
 def _rows(spark, rows):
@@ -41,7 +42,7 @@ def test_partition_compact_refuses_live_eq_deletes(spark, tmp_path):
     with pytest.raises(ValueError, match=r"run full compact\(\) first"):
         t.compact(where=F.col("day") == "d1")
     assert _keys(t) == ["a", "b"]
-    assert not os.path.exists(t.archive_dir)
+    assert t._generations() == []
     t.compact()  # folds and archives the delete file
     assert _keys(t) == ["a", "b"]
     t.commit_batch(_rows(spark, [("c", 11, "d1", "red")]), 4)
@@ -81,3 +82,62 @@ def test_compact_expires_versions_before_a_folded_delete(spark, tmp_path):
     assert _keys(t) == ["b"]
     with pytest.raises(SnapshotExpiredError):
         t.snapshot(as_of_batch=3)
+
+
+# -- a crash at any step of a fold ------------------------------------
+
+
+def _probe(spark, path):
+    """Base row a, delta b (red, batch 1), an equality delete of red
+    (batch 2) and delta c (batch 3, day d2): reads [a, c] now and
+    [a, b] AS OF batch 1."""
+    t = MorTable(spark, path, key="doc_id")
+    t.append_base(_rows(spark, [("a", 0, "d1", "blue")]).drop("_op_seq", "_op"))
+    t.commit_batch(_rows(spark, [("b", 1, "d1", "red")]), 1)
+    t.delete_equality(_red(spark), batch_id=2)
+    t.commit_batch(_rows(spark, [("c", 3, "d2", "blue")]), 3)
+    return t
+
+
+def _folded_view(t):
+    """The readable state: now, AS OF a folded batch, and the history."""
+    return (
+        rows(t),
+        rows(t, as_of_batch=1),
+        [tuple(r) for r in t.history().collect()],
+    )
+
+
+@pytest.mark.parametrize(
+    "name, call",
+    [
+        ("compact", lambda t: t.compact()),
+        ("truncate", lambda t: t.truncate()),
+    ],
+)
+def test_crash_at_any_fold_step_leaves_a_whole_state(
+    spark, tmp_path, monkeypatch, name, call
+):
+    """A crash between any two of the fold's mutations leaves the table
+    reading as before the fold or as after it — never a lost base row,
+    a struck row back, or a folded batch still readable AS OF — and a
+    retry converges."""
+    template = _probe(spark, str(tmp_path / "template"))
+    assert check_every_crash(monkeypatch, template, tmp_path, call, _folded_view) >= 1
+
+
+def test_crash_at_any_partial_fold_step_leaves_a_whole_state(spark, tmp_path, monkeypatch):
+    """The same for a cold-partition fold, which masks partition d1 out
+    of the live base dir and commits instead of deleting it."""
+    t = MorTable(spark, str(tmp_path / "template"), key="doc_id", partition_col="day")
+    t.append_base(
+        _rows(spark, [("a", 0, "d1", "blue"), ("z", 0, "d2", "red")]).drop("_op_seq", "_op")
+    )
+    t.commit_batch(_rows(spark, [("b", 1, "d1", "red"), ("y", 2, "d2", "blue")]), 1)
+    t.commit_batch(_rows(spark, [("a", 3, "d1", "green")]), 2)
+
+    def view(t):
+        return rows(t), rows(t, as_of_batch=1), rows(t, lo="a", hi="a")
+
+    call = lambda t: t.compact(where=F.col("day") == "d1")  # noqa: E731
+    assert check_every_crash(monkeypatch, t, tmp_path, call, view) >= 1

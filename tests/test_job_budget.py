@@ -3,15 +3,15 @@ unpartitioned ``apply_batch`` without invalidations runs at most two
 Spark jobs, with or without a quarantine dir, ``MorTable.commit_batch``
 at most two, ``commit_to_branch`` at most two (the same commit onto a
 branch), a bulk ``commit_batches`` of LWW-folded ops at most eight, and
-``apply_batch_wap`` at most twelve, however many commits the table
-holds, ``MorTable.compact`` of a base plus three deltas at most three,
+``apply_batch_wap`` at most four, however many commits the table
+holds, ``MorTable.compact`` of a base plus three deltas at most two,
 and building ``MorTable._raw`` (the read path under ``snapshot``,
-``lookup``, ``changes`` and ``scan_append``) exactly one, however many
-commits and delete files are live: each commit and delete dir is read
-with the schema its manifest records, so only the base's schema read
-runs a job. ``delete_equality`` runs exactly five, however many
-equality deletes are live, and ``compact`` over a base, deltas,
-positional deletes and three equality deletes at most seven.
+``lookup``, ``changes`` and ``scan_append``) none, however many
+commits and delete files are live: every dir the table version lists,
+the base's too, is read with the schema its manifest records.
+``delete_equality`` runs exactly two, however many equality deletes are
+live (its op_seq cut comes from manifests), and ``compact`` over a base,
+deltas, positional deletes and three equality deletes at most seven.
 Jobs are counted with a job group and ``statusTracker``, the
 same attribution the benchmark's traced run uses.
 
@@ -90,7 +90,7 @@ def test_commit_to_branch_runs_at_most_two_jobs(spark, tmp_path):
         t.commit_to_branch(batch_to_ops(_batch(spark, b)), b, "audit")
     ops = batch_to_ops(_batch(spark, 2))
     _, n = _jobs(spark, "budget-branch", lambda: t.commit_to_branch(ops, 2, "audit"))
-    assert t._branch_ref("audit")["batches"] == [0, 1, 2]
+    assert t._ids("branches/audit") == [0, 1, 2]
     assert n <= 2, f"commit_to_branch ran {n} Spark jobs"
 
 
@@ -106,21 +106,23 @@ def test_bulk_commit_batches_runs_at_most_eight_jobs(spark, tmp_path):
     assert n <= 8, f"commit_batches ran {n} Spark jobs"
 
 
-def test_apply_batch_wap_runs_at_most_twelve_jobs(spark, tmp_path):
+def test_apply_batch_wap_runs_at_most_four_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
     for b in range(2):
         apply_batch_wap(t, _batch(spark, b), b)
-    # this is the third batch
+    # this is the third batch: the staging write (the LWW map stage and
+    # the write) and the audit's aggregate (the same two); the op_seq
+    # conflict check reads manifests and the publish moves no data
     stats, n = _jobs(
         spark, "budget-wap", lambda: apply_batch_wap(t, _batch(spark, 2), 2)
     )
     assert stats["published"] and stats["n_events"] == 120
-    assert n <= 12, f"apply_batch_wap ran {n} Spark jobs"
+    assert n <= 4, f"apply_batch_wap ran {n} Spark jobs"
 
 
 def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
     # publish_batch's op_seq conflict check reads every commit's op_seq
-    # with a declared schema: no per-commit schema-inference job
+    # bound from its manifest: no job per commit
     t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
     apply_batch_wap(t, _batch(spark, 0), 0)
     counts = [
@@ -130,27 +132,27 @@ def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
     assert len(set(counts)) == 1, f"apply_batch_wap jobs per batch: {counts}"
 
 
-def test_raw_runs_one_job_however_many_commits(spark, tmp_path):
+def test_raw_runs_no_job_however_many_commits(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "raw"), key="doc_id")
     t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
     counts = []
     for b in range(1, 7):
         t.commit_batch(batch_to_ops(_batch(spark, b)), b)
         counts.append(_jobs(spark, f"budget-raw-{b}", t._raw)[1])
-    assert counts == [1] * 6, f"_raw() jobs over a base plus 1..6 commits: {counts}"
+    assert counts == [0] * 6, f"_raw() jobs over a base plus 1..6 commits: {counts}"
 
 
-def test_compact_runs_at_most_three_jobs(spark, tmp_path):
+def test_compact_runs_at_most_two_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "compact"), key="doc_id")
     t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
     for b in range(1, 4):
         t.commit_batch(batch_to_ops(_batch(spark, b)), b)
     n_rows = t.snapshot().count()
-    # the base's schema read (each delta dir is read with its manifest's
-    # schema), the merged view's shuffle stage and the write
+    # the merged view's shuffle stage and the write: every dir, the
+    # base's too, is read with its manifest's schema
     _, n = _jobs(spark, "budget-compact", t.compact)
     assert t._delta_batch_ids() == [] and t.snapshot().count() == n_rows
-    assert n <= 3, f"compact ran {n} Spark jobs"
+    assert n <= 2, f"compact ran {n} Spark jobs"
 
 
 def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):
@@ -193,25 +195,25 @@ def _delete_equality(spark, t, i):
     return t.delete_equality(vals, 5 + i)
 
 
-def test_raw_runs_one_job_however_many_delete_files(spark, tmp_path):
+def test_raw_runs_no_job_however_many_delete_files(spark, tmp_path):
     # every delete file is read with the schema its manifest records
     t = _with_pos_deletes(spark, tmp_path, "raw-deletes")
     counts = []
     for i in range(3):
         _delete_equality(spark, t, i)
         counts.append(_jobs(spark, f"budget-raw-deletes-{i}", t._raw)[1])
-    assert counts == [1] * 3, f"_raw() jobs with 1..3 equality deletes: {counts}"
+    assert counts == [0] * 3, f"_raw() jobs with 1..3 equality deletes: {counts}"
 
 
 def test_delete_equality_jobs_do_not_grow_with_deletes(spark, tmp_path):
-    # the base's schema read, the op_seq max over the commits (a map
-    # stage and a result) and the distinct write (the same two)
+    # the distinct write (a map stage and a result); the columns and the
+    # op_seq cut come from manifests
     t = _with_pos_deletes(spark, tmp_path, "eq-deletes")
     counts = [
         _jobs(spark, f"budget-eq-{i}", lambda: _delete_equality(spark, t, i))[1]
         for i in range(4)
     ]
-    assert counts == [5] * 4, f"delete_equality jobs with 0..3 live: {counts}"
+    assert counts == [2] * 4, f"delete_equality jobs with 0..3 live: {counts}"
 
 
 def test_compact_with_delete_files_runs_at_most_seven_jobs(spark, tmp_path):
@@ -224,5 +226,5 @@ def test_compact_with_delete_files_runs_at_most_seven_jobs(spark, tmp_path):
     # compact()'s three jobs plus one broadcast per delete file read:
     # three equality deletes and the positional deletes' union
     _, n = _jobs(spark, "budget-compact-deletes", t.compact)
-    assert t._eq_delete_ids() == [] and t.snapshot().count() == n_rows
+    assert t._ids("eq_deletes") == [] and t.snapshot().count() == n_rows
     assert n <= 7, f"compact with live delete files ran {n} Spark jobs"

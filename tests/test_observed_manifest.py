@@ -33,8 +33,8 @@ _SCHEMA = (
 
 def _read_back_manifest(t: MorTable, target: str) -> dict:
     """Oracle: the manifest as computed from the files on disk — schema
-    inference, a column-stats agg, a key min/max agg and a distinct
-    collect of the key's bloom positions."""
+    inference, a column-stats agg, a key and op_seq min/max agg and a
+    distinct collect of the key's bloom positions."""
     df = t.spark.read.parquet(target)
     stat_cols = [
         f.name
@@ -46,6 +46,8 @@ def _read_back_manifest(t: MorTable, target: str) -> dict:
     row = df.agg(
         F.min(t.key).alias("lo"),
         F.max(t.key).alias("hi"),
+        F.min(OP_SEQ).alias("slo"),
+        F.max(OP_SEQ).alias("shi"),
         *[F.min(c).alias(f"lo_{c}") for c in stat_cols],
         *[F.max(c).alias(f"hi_{c}") for c in stat_cols],
     ).head()
@@ -71,6 +73,8 @@ def _read_back_manifest(t: MorTable, target: str) -> dict:
         "key": t.key,
         "min": row.lo,
         "max": row.hi,
+        "seq_min": row.slo,
+        "seq_max": row.shi,
         "bloom_bits": t._BLOOM_BITS,
         "bloom": format(bitmap, "x"),
         "spec": t.partition_col,
@@ -162,11 +166,14 @@ def test_stage_and_publish_with_seq_rebase(spark, tmp_path):
     _assert_matches_oracle(t, staged)
     before = _on_disk(staged)
     t.publish_batch(1)
-    published = f"{t.delta_dir}/batch=1"
+    published = dict(t._dirs("deltas"))[1]
     seqs = spark.read.parquet(published).agg(F.min(OP_SEQ)).head()[0]
     assert seqs > 102  # the rebase ran
     _assert_matches_oracle(t, published)
-    assert _on_disk(published) == before  # op_seq carries no bounds
+    after = _on_disk(published)
+    # only the op_seq bounds move, by the rebase's shift
+    assert after.pop("seq_min") == seqs and after.pop("seq_max") - seqs == 2
+    assert after == {k: v for k, v in before.items() if k not in ("seq_min", "seq_max")}
 
 
 def _oracle_copy(t: MorTable, dst) -> MorTable:

@@ -92,17 +92,15 @@ def test_later_upsert_resurrects_key(spark, table):
 def test_compact_folds_deletes_and_archives_them(table):
     table.delete_where(F.col("v") == 20, batch_id=1)
     table.compact()
-    # delete dir folded away; state unchanged; read path is clean base
-    assert not os.path.isdir(table.pos_delete_dir)
+    # delete file folded away; state unchanged; read path is clean base
+    assert table._ids("pos_deletes") == []
     assert _keys(table) == ["a", "c"]
-    # the delete files moved into the archived generation beside the
-    # data files they referenced
-    gens = sorted(
-        d for d in os.listdir(table.archive_dir) if d.startswith("gen=")
-    )
-    assert any(
-        os.path.isdir(f"{table.archive_dir}/{g}/pos_deletes") for g in gens
-    )
+    # the archived generation keeps the delete files beside the data
+    # files they referenced
+    files = table.files(include_archive=True)
+    archived = [r.file_path for r in files.filter(F.col("section") == "archive").collect()]
+    assert any("pos_deletes/" in p for p in archived)
+    assert any(p.startswith("base/") for p in archived)
 
 
 def test_rollback_drops_delete_commit(table):
@@ -132,10 +130,10 @@ def test_replayed_delete_where_converges(table):
     assert _keys(table) == ["a"]
     assert table.delete_where(F.col("v") >= 20, batch_id=1) == 2
     assert _keys(table) == ["a"]
-    assert os.listdir(table.staging_dir) == []
+    assert table._ids("pos_deletes") == [1]
 
 
 def test_delete_file_without_manifest_still_applies(table):
     table.delete_where(F.col("v") == 20, batch_id=1)
-    os.remove(f"{table.pos_delete_dir}/delete=1/{MANIFEST}")
+    os.remove(f"{dict(table._dirs('pos_deletes'))[1]}/{MANIFEST}")
     assert _keys(table) == ["a", "c"]

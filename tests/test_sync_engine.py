@@ -233,6 +233,35 @@ def test_state_machine_full_lifecycle(spark, tmp_path):
     assert int(store.read("lake.t3").resume_token) == max(r[0] for r in rows)
 
 
+def test_checkpoint_names_the_version_holding_the_last_batch(spark, tmp_path):
+    """last_snapshot_id (reference docs/design.md:318-328) is the table
+    version the checkpointed commit produced: the version that first
+    lists the last batch."""
+    table = MorTable(spark, str(tmp_path / "tv"), key="doc_id")
+    store = CheckpointStore(str(tmp_path / "cpv.jsonl"))
+    rows = make_events(n_docs=6, n_ops=40)
+    snap = spark.createDataFrame(
+        [("seed1", json.dumps({"_id": "seed1", "v": "seed"}))],
+        "doc_id string, full_doc string",
+    )
+    ids = []
+
+    def batches(resume_from):
+        for i in range(0, len(rows), 20):
+            ids.append(rows[i][0])
+            yield (rows[i][0], events_df(spark, rows[i : i + 20]))
+
+    assert store.read("lake.tv") is None
+    sync = CollectionSync(spark, "lake.tv", lambda: snap, batches, table, store, key="doc_id")
+    sync.run_once()
+    cp = store.read("lake.tv")
+    assert cp.last_snapshot_id == table.version
+    assert ids[-1] in table._delta_batch_ids()
+    # the version before it does not hold the last batch yet
+    before = table._load(cp.last_snapshot_id - 1)["deltas"]
+    assert str(ids[-1]) not in before and str(ids[-2]) in before
+
+
 def test_invalidate_triggers_reinitial_sync(spark, tmp_path):
     table = MorTable(spark, str(tmp_path / "t4"), key="doc_id")
     store = CheckpointStore(str(tmp_path / "cp4.jsonl"))
@@ -467,9 +496,10 @@ def test_partition_targeted_compaction(spark, tmp_path):
     hot_after = {p: s for p, s in {**stat_map(table.base_dir), **stat_map(table.delta_dir)}.items()
                  if "day=d02" in p}
     assert hot_after == hot_before  # hot partition files untouched
-    # cold partition folded into base, its delta files gone
+    # cold partition folded into base; its delta files are no longer read
     assert os.path.isdir(f"{table.base_dir}/day=d01")
-    assert not any("day=d01" in p for p in stat_map(table.delta_dir))
+    live_deltas = table.files().filter(F.col("section") == "delta").collect()
+    assert live_deltas and not any("day=d01" in r.file_path for r in live_deltas)
     after = {r.doc_id: (r.day, json.loads(r.full_doc)["v"])
              for r in table.snapshot().collect()}
     assert after == before  # merged state identical

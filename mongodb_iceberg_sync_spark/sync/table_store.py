@@ -118,6 +118,10 @@ class MorTable:
         # Iceberg, the spec can EVOLVE without rewriting data, so
         # reopening a table must recover the current spec from its
         # metadata, and a constructor arg only seeds a NEW table.
+        if not os.path.isdir(self._meta) and os.path.isdir(self.delta_dir):
+            # written before the version log (which always made deltas/):
+            # an empty log over it would hide its rows from every read
+            raise ValueError(f"{self.path} has deltas/ but no metadata/: an older layout")
         os.makedirs(self._meta, exist_ok=True)
         if not self._versions():
             col = partition_col
@@ -156,13 +160,21 @@ class MorTable:
             return json.load(f)
 
     def _current(self) -> dict:
-        """The current (newest) version; one stat per call once loaded."""
-        n = self._v["version"] if self._v else self._versions()[-1]
-        while os.path.exists(self._vpath(n + 1)):
-            n += 1
-        if self._v is None or self._v["version"] != n:
-            self._v = self._load(n)
-        return self._v
+        """The current (newest) version; two stats per call once loaded.
+        The log is listed again once the version last read is gone: an
+        expiry (by any handle) removed it and the ones after it."""
+        n = self._v["version"] if self._v else None
+        while True:
+            if n is None or not os.path.exists(self._vpath(n)):
+                n = self._versions()[-1]
+            while os.path.exists(self._vpath(n + 1)):
+                n += 1
+            try:
+                if self._v is None or self._v["version"] != n:
+                    self._v = self._load(n)
+                return self._v
+            except FileNotFoundError:
+                n = None  # expired between the probe and the read
 
     def _state(self) -> dict:
         """A copy of the current version to build the next one from."""
@@ -173,9 +185,13 @@ class MorTable:
         one commit point of every state change. A temp file is
         hard-linked to v<N+1>; the link fails if that version exists, so
         a version is never overwritten (FileExistsError: another writer
-        committed first). Masks of dirs no longer live are dropped."""
+        committed first), nor linked into a slot an expiry emptied (the
+        version ``s`` came from is gone too). Masks of dirs no longer
+        live are dropped."""
         live = self._live(s)
         s["drop"] = {d: m for d, m in s["drop"].items() if d in live}
+        if s["version"] >= 0 and not os.path.exists(self._vpath(s["version"])):
+            raise FileExistsError(f"version {s['version']} of {self.path} was expired")
         s["version"] += 1
         tmp = f"{self._meta}/.v{s['version']}-{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
@@ -752,9 +768,9 @@ class MorTable:
         one job for all of them. Base rows carry op_seq 0."""
         seqs, reads = [], []
         for b, d in self._dirs("deltas"):
-            m = self._manifest(d)
             if b == exclude:
                 continue
+            m = self._manifest(d)
             if "seq_max" in m:
                 seqs.append(m["seq_max"])
             else:
@@ -827,14 +843,8 @@ class MorTable:
         df = self._raw(col_bounds=where_bounds)
         return None if df is None else df.drop(OP_SEQ, OP_TYPE)
 
-    def _last_folded_batch(self) -> int | None:
-        """Highest batch id folded into base by compact() — versions at
-        or before it are expired (the current version no longer lists
-        their commits)."""
-        return self._current()["folded"]
-
     def _check_not_expired(self, as_of_batch: int | None) -> None:
-        folded = self._last_folded_batch()
+        folded = self._current()["folded"]  # the highest batch a fold absorbed
         if as_of_batch is not None and folded is not None and as_of_batch < folded:
             raise SnapshotExpiredError(
                 f"VERSION AS OF batch {as_of_batch} expired: compact() folded "
@@ -1122,13 +1132,6 @@ class MorTable:
 
     # -- maintenance --------------------------------------------------
 
-    def _generations(self) -> list[int]:
-        """The archived base generations the current version retains."""
-        return [g["gen"] for g in self._current()["archive"]]
-
-    def _delta_batch_ids(self) -> list[int]:
-        return self._ids("deltas")
-
     def rollback_to_batch(self, batch_id: int) -> list[int]:
         """Iceberg rollback_to_snapshot analog: make VERSION AS OF
         ``batch_id`` the CURRENT state with one version that drops every
@@ -1148,7 +1151,7 @@ class MorTable:
                     dropped.append(i)
         if dropped:
             self._publish(s)
-        shutil.rmtree(self.staging_dir, ignore_errors=True)
+        self._discard(self.staging_dir)
         return dropped
 
     # -- branch refs (Iceberg branching / multi-commit WAP analog) ----
@@ -1169,8 +1172,7 @@ class MorTable:
         return f"{self.path}/branches"
 
     def _main_head(self) -> int | None:
-        ids = self._delta_batch_ids()
-        return ids[-1] if ids else None
+        return (self._ids("deltas") or [None])[-1]
 
     def create_branch(self, name: str, at_batch: int | None = None) -> int | None:
         """Fork a branch at ``at_batch`` (default: current main head).
@@ -1287,14 +1289,14 @@ class MorTable:
         base + every delta commit, so read amplification grows with
         the delta count. Fire when either the live commit count or their
         small-file count crosses its threshold — metadata and listings
-        of the live dirs (no data read), cheap enough for every batch
+        of the live files (_live_files, no data read), cheap enough for every batch
         loop. The thresholds mirror Iceberg's rewrite_data_files
         defaults in spirit: bound reader fan-in, don't chase
         perfection."""
-        dirs = self._dirs("deltas")
-        if len(dirs) >= max_delta_batches:
+        s = self._current()
+        if len(s["deltas"]) >= max_delta_batches:
             return True
-        return sum(1 for _, d in dirs for _ in self._walk_parquet(d)) >= max_delta_files
+        return sum(len(self._live_files(s, d)) for d in s["deltas"].values()) >= max_delta_files
 
     def compact(
         self,
@@ -1309,10 +1311,8 @@ class MorTable:
         file (the positional ones as one).
 
         ``max_records_per_file`` bounds output file size (Iceberg's
-        rewrite target-file-size, record-count proxy) via Spark's
-        native maxRecordsPerFile write option — the writer rolls files
-        at the bound with NO extra repartition job, so compaction cost
-        is unchanged and downstream scans get uniformly-sized splits.
+        target-file-size, by record count) with Spark's maxRecordsPerFile
+        write option: the writer rolls files, no extra job.
 
         ``zorder_by=(colA, colB)`` clusters the rewritten base on the
         Morton interleaving of the two columns (Iceberg's z-ordered
@@ -1408,7 +1408,8 @@ class MorTable:
         dir, then ONE version lists it: a whole fold drops every commit
         and delete file from the version and archives the old base dirs
         and delete files as generation N; a partial fold masks
-        ``parts`` out of every live base dir and commit instead. The
+        ``parts`` out of every live base dir and commit instead, and
+        drops from the version a dir with no file left unmasked. The
         fold mark advances past every commit the fold covered, deletes
         too. Nothing is renamed or deleted, so a crash anywhere leaves
         the previous version whole. A partial fold refuses while
@@ -1435,7 +1436,9 @@ class MorTable:
             col, vals = parts
             for d in s["base"] + list(s["deltas"].values()):
                 s["drop"].setdefault(d, {}).setdefault(col, []).extend(vals)
-            s["base"] += new
+            gone = {d for d in s["drop"] if not self._live_files(s, d)}
+            s["base"] = [d for d in s["base"] if d not in gone] + new
+            s["deltas"] = {i: d for i, d in s["deltas"].items() if d not in gone}
         s["archive"].append({"gen": s["gen"], "dirs": archived})
         s["gen"] += 1
         if last is not None and (s["folded"] is None or last > s["folded"]):
@@ -1448,11 +1451,11 @@ class MorTable:
     # then made visible by an ATOMIC metadata operation — readers never
     # see unaudited rows, and an audit failure costs nothing but the
     # staged files. The analog here: staging/batch=N is no table state
-    # (no version lists it), and publish_batch moves it to its commit
-    # dir and publishes the version that lists it, mirroring Iceberg's
-    # snapshot pointer swap. Reference hook: the design's at-least-once
-    # commit protocol (docs/design.md:339-348) — WAP adds the audit gate
-    # in front of it.
+    # (no version lists it); publish_batch links its files into a fresh
+    # commit dir and publishes the version that lists it, mirroring
+    # Iceberg's snapshot pointer swap. Reference hook: the design's
+    # at-least-once commit protocol (docs/design.md:339-348) — WAP adds
+    # the audit gate in front of it.
 
     @property
     def staging_dir(self) -> str:
@@ -1550,10 +1553,11 @@ class MorTable:
         return {"published": self.fast_forward(name), "problems": []}
 
     def publish_batch(self, batch_id: int) -> None:
-        """Atomically promote a staged batch into main: its dir moves to
-        a fresh commit dir and ONE version lists it (the
-        snapshot-pointer swap). Fails if nothing is staged; replaces any
-        existing commit with the same id (idempotent replay).
+        """Atomically promote a staged batch into main: ONE version lists
+        a fresh commit dir holding its files (the snapshot-pointer swap),
+        and only then is it unstaged, so a crash leaves it staged or
+        published. Fails if nothing is staged; replaces any existing
+        commit with the same id (idempotent replay).
 
         Optimistic-concurrency rebase (Iceberg's retry-on-commit
         analog): op_seq is assigned at STAGE time, so if another batch
@@ -1565,37 +1569,52 @@ class MorTable:
         replaces the one with this id; base rows carry op_seq 0); on
         conflict, SHIFT every staged op_seq by a constant so the batch
         lands strictly after the interloper, preserving intra-batch
-        order, and publish that rewrite instead. Both bounds come from
+        order, and publish that rewrite instead; without one the staged
+        files are hard-linked, no Spark job. Both bounds come from
         manifests (_max_op_seq, delete_equality's sequence cut too), so
-        the check reads no data. CDC feeds with globally monotone
-        resume-token seqs never trigger it; writers are otherwise
-        assumed single-publisher per table (a concurrent version write
-        fails its link rather than overwrite — the catalog provides the
-        lock in a real Iceberg deployment)."""
+        the check reads no data (a manifest lacking one costs a read).
+        CDC feeds with globally monotone resume-token seqs never rebase;
+        writers are otherwise assumed single-publisher per table (a
+        concurrent version write fails its link rather than overwrite —
+        the catalog provides the lock in a real Iceberg deployment)."""
         src = f"{self.staging_dir}/batch={batch_id}"
         m = self._manifest(src)
         if not m:
             raise FileNotFoundError(f"no staged batch {batch_id} to publish")
-        lo = m["seq_min"]
+        lo = m["seq_min"] if "seq_min" in m else self._read_commit(src).agg(F.min(OP_SEQ)).head()[0]
         cur_max = self._max_op_seq(exclude=batch_id) or 0
         if lo is None or lo > cur_max:
-            s = self._state()
-            d = self._fresh(f"deltas/batch={batch_id}", s)
-            os.makedirs(self.delta_dir, exist_ok=True)
-            shutil.rmtree(self._abs(d), ignore_errors=True)  # a crashed publish's leftover
-            os.rename(src, self._abs(d))
-            s["deltas"][str(batch_id)] = d
-            self._publish(s)
+            self._commit(src, "deltas", batch_id, self._link_tree)
         else:
-            shift = F.lit(cur_max + 1 - lo)
-            shifted = (F.col(OP_SEQ) + shift).cast("long")
-            staged = self._read_commit(src).withColumn(OP_SEQ, shifted)
-            self._commit(staged, "deltas", batch_id)
-            shutil.rmtree(src)
+            shifted = (F.col(OP_SEQ) + F.lit(cur_max + 1 - lo)).cast("long")
+            self._commit(self._read_commit(src).withColumn(OP_SEQ, shifted), "deltas", batch_id)
+        self._discard(src)
+
+    @staticmethod
+    def _link_tree(src: str, target: str) -> None:
+        """Hard-link the files under ``src`` into ``target``, a dir no
+        version lists yet (an earlier attempt's leftover is cleared)."""
+        shutil.rmtree(target, ignore_errors=True)
+        for base, _dirs, files in os.walk(src):
+            out = os.path.join(target, os.path.relpath(base, src))
+            os.makedirs(out, exist_ok=True)
+            for f in files:
+                os.link(os.path.join(base, f), os.path.join(out, f))
+
+    def _discard(self, path: str) -> None:
+        """Unstage ``path`` in one rename, then delete it: a crash leaves
+        no half-deleted batch staged, only a leftover for
+        remove_orphan_files()."""
+        trash = f"{self.path}/.discard-{uuid.uuid4().hex}"
+        try:
+            os.rename(path, trash)
+        except FileNotFoundError:
+            return
+        shutil.rmtree(trash)
 
     def abort_batch(self, batch_id: int) -> None:
         """Drop a staged batch (audit failed). No effect on the table."""
-        shutil.rmtree(f"{self.staging_dir}/batch={batch_id}", ignore_errors=True)
+        self._discard(f"{self.staging_dir}/batch={batch_id}")
 
     def remove_orphan_files(self, older_than_s: float = 3 * 24 * 3600) -> list[str]:
         """Iceberg remove_orphan_files analog: delete what no retained
@@ -1651,7 +1670,7 @@ class MorTable:
         doomed = set().union(*(self._listed(self._load(n)) for n in old)) - self._listed(cur)
         for d in sorted(doomed):
             shutil.rmtree(self._abs(d), ignore_errors=True)
-        for n in old:
+        for n in old:  # oldest first: _publish relies on it
             os.unlink(self._vpath(n))
         return len(gone)
 
@@ -1670,20 +1689,28 @@ class MorTable:
                 if f.endswith(".parquet"):
                     yield os.path.join(base, f)
 
+    def _live_files(self, s: dict, rel: str) -> list[str]:
+        """The parquet files of the dir ``rel`` that version ``s`` reads:
+        all of them, less those in partition dirs a partial compaction
+        masked (_read_commit filters the same masks by value)."""
+        root = self._abs(rel)
+        masked = {f"{c}={v}" for c, vals in s["drop"].get(rel, {}).items() for v in vals}
+        return [
+            p for p in self._walk_parquet(root)
+            if masked.isdisjoint(os.path.relpath(p, root).split(os.sep))
+        ]
+
     def _file_row(self, path: str, section: str, batch_id):
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
-        part_val = None
-        if self.partition_col is not None:
-            for seg in path.split(os.sep):
-                if seg.startswith(f"{self.partition_col}="):
-                    part_val = seg.split("=", 1)[1]
+        col = self.partition_col
+        vals = [x.split("=", 1)[1] for x in path.split(os.sep) if col and x.startswith(f"{col}=")]
         return {
             "file_path": os.path.relpath(path, self.path),
             "section": section,
             "batch_id": batch_id,
-            "partition": part_val,
+            "partition": vals[-1] if vals else None,
             "record_count": md.num_rows,
             "file_size_bytes": os.path.getsize(path),
             "num_row_groups": md.num_row_groups,
@@ -1699,19 +1726,12 @@ class MorTable:
         # views snapshots()/partitions(). Files in partitions a partial
         # compaction masked are not live.
         s = self._current()
-        dirs = [("base", None, d) for d in self._base_dirs()]
+        dirs = [("base", None, d) for d in s["base"]]
         for kind, section in zip(_COMMITS, ("delta", "pos_delete", "eq_delete")):
-            dirs += [(section, i, d) for i, d in self._dirs(kind)]
+            dirs += [(section, i, s[kind][str(i)]) for i in self._ids(kind, s)]
         if include_archive:
-            dirs += [("archive", None, self._abs(d)) for g in s["archive"] for d in g["dirs"]]
-        rows = []
-        for section, i, d in dirs:
-            masks = s["drop"].get(os.path.relpath(d, self.path), {})
-            rows += [
-                self._file_row(p, section, i)
-                for p in self._walk_parquet(d)
-                if not any(f"/{c}={v}/" in p for c, vals in masks.items() for v in vals)
-            ]
+            dirs += [("archive", None, d) for g in s["archive"] for d in g["dirs"]]
+        rows = [self._file_row(p, sec, i) for sec, i, d in dirs for p in self._live_files(s, d)]
         if include_staging:
             for p in self._walk_parquet(self.staging_dir):
                 batch = os.path.relpath(p, self.staging_dir).split(os.sep)[0]
@@ -1734,7 +1754,7 @@ class MorTable:
         plus one for the compacted base, with manifest key bounds,
         file/record counts, and whether VERSION AS OF can still reach
         versions before it (expired = folded by compact())."""
-        folded = self._last_folded_batch()
+        folded = self._current()["folded"]
         by_commit: dict[tuple, dict] = {}
         for r in self._file_rows():
             k = (r["section"], r["batch_id"])

@@ -54,7 +54,7 @@ def test_bulk_equals_loop(spark, tmp_path):
     bulk_t = MorTable(spark, str(tmp_path / "bulk"), key="user_id")
     ids = bulk_t.commit_batches(_payload(ev), "__batch")
     assert ids == [0, 1, 2, 3]
-    assert loop_t._delta_batch_ids() == bulk_t._delta_batch_ids()
+    assert loop_t._ids("deltas") == bulk_t._ids("deltas")
     lm, bm = _manifests(loop_t), _manifests(bulk_t)
     assert lm.keys() == bm.keys()
     for d in lm:
@@ -92,4 +92,4 @@ def test_bulk_empty_input(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "empty"), key="user_id")
     df = _payload(_events(spark)).filter(F.lit(False))
     assert t.commit_batches(df, "__batch") == []
-    assert t._delta_batch_ids() == []
+    assert t._ids("deltas") == []

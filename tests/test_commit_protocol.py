@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df
 from mongodb_iceberg_sync_spark.sync.apply import apply_batch, apply_batch_wap
-from mongodb_iceberg_sync_spark.sync.table_store import MorTable
+from mongodb_iceberg_sync_spark.sync.table_store import MANIFEST, MorTable
 
 from .crash_harness import check_every_crash, rows
 
@@ -72,9 +72,7 @@ def _stage(spark, t):
 
 
 def _publish_batch(spark, t):
-    if not os.path.isdir(f"{t.staging_dir}/batch=5"):
-        _stage(spark, t)
-    t.publish_batch(5)
+    t.publish_batch(5)  # what it publishes was staged before (_stage)
 
 
 def _full_doc(spark, v):
@@ -147,14 +145,14 @@ def _crash():
 @pytest.mark.parametrize("name", list(COMMITS))
 def test_crash_leaves_state_and_retry_converges(spark, tmp_path, monkeypatch, name, point):
     commit = COMMITS[name]
-    clean = MorTable(spark, str(tmp_path / "clean"), key="doc_id")
-    _setup(spark, clean)
+    tables = []
+    for n in ("clean", "crash"):
+        tables.append(MorTable(spark, str(tmp_path / n), key="doc_id"))
+        _setup(spark, tables[-1])
+        if name == "publish_batch":
+            _stage(spark, tables[-1])  # the crash is injected into the publish alone
+    clean, t = tables
     commit(spark, clean)
-
-    t = MorTable(spark, str(tmp_path / "crash"), key="doc_id")
-    _setup(spark, t)
-    if name == "publish_batch":
-        _stage(spark, t)  # the crash is injected into the publish alone
     before = _readable(t)
     with monkeypatch.context() as mp:
         boom, calls = _crash()
@@ -186,7 +184,7 @@ def test_bulk_crash_mid_publish_leaves_whole_commits(spark, tmp_path, monkeypatc
         with pytest.raises(Crash):
             _commit_batches(spark, t)
     assert len(calls) == 1
-    assert t._delta_batch_ids() == [0, 1] and _readable(t) == before
+    assert t._ids("deltas") == [0, 1] and _readable(t) == before
     _commit_batches(spark, t)
     assert _state(t) == _state(clean)
 
@@ -228,6 +226,50 @@ def test_publish_replay_is_not_a_concurrent_commit(spark, tmp_path):
     apply_batch(t, _events(spark, [(31, "update", "a")]), 2)
     got = {r.doc_id: json.loads(r.full_doc)["v"] for r in t.snapshot().collect()}
     assert got == {"a": 31, "b": 30}
+
+
+def test_publish_reads_op_seq_when_the_manifest_lacks_it(spark, tmp_path):
+    """Manifest stats are advisory: a staged batch whose manifest has no
+    op_seq bounds is read for its min, and still rebased past a
+    colliding commit."""
+    t = MorTable(spark, str(tmp_path / "t"), key="doc_id")
+    t.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1), ("b", 2, "upsert", 2)]), 0)
+    t.stage_batch(_mk_batch(spark, [("b", 1, "upsert", 20)]), 1)
+    path = f"{t.staging_dir}/batch=1/{MANIFEST}"
+    with open(path) as f:
+        m = json.load(f)
+    del m["seq_min"], m["seq_max"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    t.publish_batch(1)
+    assert rows(t) == [("a", '{"v": 1}'), ("b", '{"v": 20}')]
+
+
+def test_handles_stay_consistent_across_another_handles_expiry(spark, tmp_path):
+    """Handle a last read a version that handle b then committed past
+    and expired: a reads b's commits, a's next commit keeps them, and a
+    version a built before them fails to link into the expired slot."""
+    a = MorTable(spark, str(tmp_path / "t"), key="doc_id")
+    a.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1)]), 0)
+    stale = a._state()
+    b = MorTable(spark, a.path, key="doc_id")
+    b.commit_batch(_mk_batch(spark, [("b", 2, "upsert", 2)]), 1)
+    b.commit_batch(_mk_batch(spark, [("c", 3, "upsert", 3)]), 2)
+    b.expire_snapshots()
+    with pytest.raises(FileExistsError):
+        a._publish(stale)
+    assert [r[0] for r in rows(a)] == ["a", "b", "c"]
+    a.commit_batch(_mk_batch(spark, [("d", 4, "upsert", 4)]), 3)
+    fresh = MorTable(spark, a.path, key="doc_id")
+    assert [r[0] for r in rows(fresh)] == ["a", "b", "c", "d"]
+    assert fresh.version == a.version == b.version
+
+
+def test_a_table_without_a_version_log_is_refused(spark, tmp_path):
+    """A table written before the version log must not open as empty."""
+    os.makedirs(tmp_path / "t" / "deltas" / "batch=0")
+    with pytest.raises(ValueError, match="older layout"):
+        MorTable(spark, str(tmp_path / "t"), key="doc_id")
 
 
 def test_publish_rebase_over_mixed_partition_layouts(spark, tmp_path):
@@ -276,6 +318,15 @@ def _history_template(spark, path):
     return t
 
 
+def _staged_template(spark, path, seq):
+    """Batch 0 committed at op_seq 1-2; batch 1 staged from ``seq`` on:
+    at 5 publish_batch links the staged files, at 1 it rebases them."""
+    t = MorTable(spark, path, key="doc_id")
+    t.commit_batch(_mk_batch(spark, [("a", 1, "upsert", 1), ("b", 2, "upsert", 2)]), 0)
+    t.stage_batch(_mk_batch(spark, [("b", seq, "upsert", 20), ("c", seq + 1, "upsert", 3)]), 1)
+    return t
+
+
 def _bulk(t):
     df = _mk_batch(
         t.spark, [("a", 10, "upsert", 10), ("h", 11, "upsert", 11), ("b", 12, "delete", None)]
@@ -290,14 +341,23 @@ CALLS = {
     "rollback_to_batch": (_history_template, lambda t: t.rollback_to_batch(2)),
     "evolve_partition_spec": (_history_template, lambda t: t.evolve_partition_spec("day")),
     "expire_snapshots": (_history_template, lambda t: t.expire_snapshots(keep_last=1)),
+    # a retry publishes what is still staged: it never stages again
+    "publish_batch": (
+        lambda spark, path: _staged_template(spark, path, 5),
+        lambda t: t.publish_batch(1),
+    ),
+    "publish_batch_rebase": (
+        lambda spark, path: _staged_template(spark, path, 1),
+        lambda t: t.publish_batch(1),
+    ),
 }
 
 
 @pytest.mark.parametrize("name", list(CALLS))
 def test_crash_at_any_step_leaves_a_whole_state(spark, tmp_path, monkeypatch, name):
     """Fast-forward lands the whole branch or none of it, a bulk commit
-    all its batches or none, and a rollback, spec change or expiry is
-    whole too; a retry converges."""
+    all its batches or none, a WAP publish its batch or none, and a
+    rollback, spec change or expiry is whole too; a retry converges."""
     template, call = CALLS[name]
     t = template(spark, str(tmp_path / "template"))
 

@@ -42,7 +42,7 @@ def test_partition_compact_refuses_live_eq_deletes(spark, tmp_path):
     with pytest.raises(ValueError, match=r"run full compact\(\) first"):
         t.compact(where=F.col("day") == "d1")
     assert _keys(t) == ["a", "b"]
-    assert t._generations() == []
+    assert t.history().filter("status = 'archived'").count() == 0
     t.compact()  # folds and archives the delete file
     assert _keys(t) == ["a", "b"]
     t.commit_batch(_rows(spark, [("c", 11, "d1", "red")]), 4)
@@ -141,3 +141,25 @@ def test_crash_at_any_partial_fold_step_leaves_a_whole_state(spark, tmp_path, mo
 
     call = lambda t: t.compact(where=F.col("day") == "d1")  # noqa: E731
     assert check_every_crash(monkeypatch, t, tmp_path, call, view) >= 1
+
+
+def test_partial_fold_drops_commits_it_masked_whole(spark, tmp_path):
+    """A commit whose every partition a cold fold absorbed leaves the
+    version, and the small-file trigger counts the live files files()
+    lists, so it drops after the fold."""
+    t = MorTable(spark, str(tmp_path / "t"), key="doc_id", partition_col="day")
+    t.commit_batch(_rows(spark, [("a", 1, "d1", "red")]), 1)
+    t.commit_batch(_rows(spark, [("b", 2, "d1", "red"), ("c", 3, "d2", "red")]), 2)
+
+    def delta_files():
+        return t.files().filter("section = 'delta'").collect()
+
+    before = len(delta_files())
+    assert t.should_compact(max_delta_files=before)
+    t.compact(where=F.col("day") == "d1")
+    assert t._ids("deltas") == [2]
+    after = delta_files()
+    assert {r.partition for r in after} == {"d2"} and len(after) < before
+    assert t.should_compact(max_delta_files=len(after))
+    assert not t.should_compact(max_delta_files=len(after) + 1)
+    assert _keys(t) == ["a", "b", "c"]

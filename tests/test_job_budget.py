@@ -151,7 +151,7 @@ def test_compact_runs_at_most_two_jobs(spark, tmp_path):
     # the merged view's shuffle stage and the write: every dir, the
     # base's too, is read with its manifest's schema
     _, n = _jobs(spark, "budget-compact", t.compact)
-    assert t._delta_batch_ids() == [] and t.snapshot().count() == n_rows
+    assert t._ids("deltas") == [] and t.snapshot().count() == n_rows
     assert n <= 2, f"compact ran {n} Spark jobs"
 
 

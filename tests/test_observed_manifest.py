@@ -180,7 +180,7 @@ def _oracle_copy(t: MorTable, dst) -> MorTable:
     """The same table with every commit manifest rebuilt by the oracle."""
     shutil.copytree(t.path, dst)
     o = MorTable(t.spark, str(dst), key=t.key)
-    for d in t._delta_batch_ids():
+    for d in t._ids("deltas"):
         target = f"{o.delta_dir}/batch={d}"
         manifest = _read_back_manifest(o, target)
         with open(f"{target}/{MANIFEST}", "w") as f:

@@ -92,5 +92,5 @@ def test_stream_offset_is_a_resume_token(spark, tmp_path):
     assert got == expected_final_state(make_events(n_docs=8, n_ops=90))
     # the second run committed only the NEW slice: batch ids continue,
     # and no delta dir holds an op_seq <= 50 beyond the first run's
-    ids = table._delta_batch_ids()
+    ids = table._ids("deltas")
     assert len(ids) >= 2

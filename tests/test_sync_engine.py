@@ -109,11 +109,11 @@ def test_snapshot_expiry_retention(spark, tmp_path):
             table, events_df(spark, rows[lo : lo + 10]), batch_id=rows[lo][0]
         )
         table.compact()
-    assert len(table._generations()) == 3
+    assert table.history().filter("status = 'archived'").count() == 3
     before = snapshot_dict(table)
     removed = table.expire_snapshots(keep_last=1)
     assert removed == 2
-    assert len(table._generations()) == 1
+    assert table.history().filter("status = 'archived'").count() == 1
     assert snapshot_dict(table) == before == expected_final_state(rows)
 
 
@@ -256,7 +256,7 @@ def test_checkpoint_names_the_version_holding_the_last_batch(spark, tmp_path):
     sync.run_once()
     cp = store.read("lake.tv")
     assert cp.last_snapshot_id == table.version
-    assert ids[-1] in table._delta_batch_ids()
+    assert ids[-1] in table._ids("deltas")
     # the version before it does not hold the last batch yet
     before = table._load(cp.last_snapshot_id - 1)["deltas"]
     assert str(ids[-1]) not in before and str(ids[-2]) in before

@@ -155,7 +155,7 @@ def test_apply_batch_wap_publishes_and_refuses_invalidations(spark, table):
     rows = make_events(n_docs=5, n_ops=12, start_seq=10)
     out = apply_batch_wap(table, events_df(spark, rows), 1)
     assert out == {"published": True, "n_events": 12, "max_seq": 21, "problems": []}
-    assert table._delta_batch_ids() == [0, 1]
+    assert table._ids("deltas") == [0, 1]
     empty = events_df(spark, rows).filter(F.lit(False))
     assert apply_batch_wap(table, empty, 2) == {
         "published": True, "n_events": 0, "max_seq": None, "problems": []
@@ -163,4 +163,4 @@ def test_apply_batch_wap_publishes_and_refuses_invalidations(spark, table):
     invalid = make_events(n_docs=5, n_ops=12, invalidate_at=6, start_seq=30)
     with pytest.raises(ValueError, match="invalidation"):
         apply_batch_wap(table, events_df(spark, invalid), 3)
-    assert table._delta_batch_ids() == [0, 1]
+    assert table._ids("deltas") == [0, 1]

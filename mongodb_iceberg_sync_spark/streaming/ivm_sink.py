@@ -69,8 +69,10 @@ def maintained_group_stats(
     agg_dir = f"{state_dir}/agg"
 
     def _fold_lww(batch_df: DataFrame) -> DataFrame:
-        """Within-batch LWW on op_seq (the typed-payload analog of
-        sync.apply.batch_to_ops — same max_by shape, no window)."""
+        """Within-batch LWW on op_seq (max_by, no window): the aggregate
+        delta needs each key's one net change in the batch. The sync
+        path commits every op instead (sync.apply.batch_to_ops) and
+        leaves this fold to MorTable's merge-on-read."""
         tagged = batch_df.select(
             key,
             group_col,

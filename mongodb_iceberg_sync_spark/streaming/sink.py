@@ -104,10 +104,7 @@ def foreach_batch_branch(
     base = refs[0].fork_batch if refs[0].fork_batch is not None else -1
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        n_invalid = batch_df.filter(
-            F.col("op_type").isin(*INVALIDATE_OPS)
-        ).count()
-        if n_invalid:
+        if batch_df.filter(F.col("op_type").isin(*INVALIDATE_OPS)).head(1):
             raise ValueError(
                 "foreach_batch_branch cannot handle invalidation ops — "
                 "route through apply_batch/SyncEngine"

@@ -6,9 +6,9 @@ op_type, doc_id, ts, full_doc) and applies it to a MorTable:
   1. dispatch by op_type (reference A3, docs/design.md:115-118):
      insert/update/replace → upsert; delete → tombstone;
      drop/rename/invalidate → surfaced to the engine (re-initial-sync)
-  2. within-batch last-writer-wins on op_seq (reference A14 — change
-     streams are ordered, DataFrames are not, so the explicit op_seq
-     carries the order; SURVEY.md §7 risk register)
+  2. one MorTable row per event, carrying its op_seq (reference A14 —
+     change streams are ordered, DataFrames are not); last-writer-wins
+     per key is the table's merge-on-read fold (docs/design.md:348)
   3. idempotent commit keyed on batch_id (reference A21)
 
 The same function body runs in batch tests and inside
@@ -44,29 +44,15 @@ IS_NORMAL = f"NOT ({IS_INVALID})"
 
 
 def batch_to_ops(events: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Normalize a raw event batch into MorTable rows:
-    [key, payload(full_doc JSON), _op_seq, _op] with within-batch LWW
-    already applied (one op per key — the max op_seq wins)."""
-    k = sql_ident(key)
-    ops = events.selectExpr(
-        k,
+    """Project raw events onto MorTable rows [key, full_doc, ts, _op_seq,
+    _op], one per event: a key changed k times lands k rows, which the
+    merge-on-read fold resolves (max op_seq), so no shuffle runs here."""
+    return events.selectExpr(
+        sql_ident(key),
         "full_doc",
         "ts",
         f"{SEQ} AS {OP_SEQ}",
         f"CASE WHEN {op_in(DELETE_OPS)} THEN 'delete' ELSE 'upsert' END AS {OP_TYPE}",
-    )
-    # within-batch LWW: hash agg on key, max_by op_seq (no sort/window)
-    row = f"struct(full_doc, ts, {OP_SEQ}, {OP_TYPE})"
-    return (
-        ops.groupBy(key)
-        .agg(F.expr(f"max_by({row}, {OP_SEQ}) AS _r"))
-        .selectExpr(
-            k,
-            "_r.full_doc AS full_doc",
-            "_r.ts AS ts",
-            f"_r.{OP_SEQ} AS {OP_SEQ}",
-            f"_r.{OP_TYPE} AS {OP_TYPE}",
-        )
     )
 
 
@@ -88,31 +74,25 @@ def apply_batch(
     bad rows exist in it; the dead letters are written after the
     commit, and both land before the engine writes its checkpoint.
 
-    Two Spark jobs per warm batch, with or without ``quarantine_dir``
-    (pinned by tests/test_job_budget.py): the LWW groupBy's map stage,
-    then the write. The write carries both Observations: the batch
-    statistics (invalidation count and first seq, normal-op count, max
-    seqs, quarantined count), observed on the raw events upstream of
-    the normal-op filter, and every manifest statistic plus the post-LWW
-    op count (MorTable._write_commit). No pass over the events runs
-    before the commit. At a 60s trigger interval job-count-per-batch is
-    the fixed overhead that bounds how many tables one driver can sync
-    (reference A32's pool sizing concern, docs/design.md:480-499).
+    One Spark job per warm batch, with or without ``quarantine_dir``
+    (pinned by tests/test_job_budget.py): the commit write. It carries
+    both Observations: the batch statistics (invalidation count and
+    first seq, normal-op count, max seqs, quarantined count), observed
+    on the raw events upstream of the normal-op filter, and every
+    manifest statistic (MorTable._write_commit). At a 60s trigger
+    interval job-count-per-batch is the fixed overhead that bounds how
+    many tables one driver can sync (reference A32's pool sizing
+    concern, docs/design.md:480-499). ``n_ops`` counts the normal ops
+    committed, one per event.
 
-    The statistics are only known once the write has run, so two rare
-    batches are corrected after it:
+    commit_batch asks those statistics, before publishing, whether the
+    write is the batch's commit. It is not, and its dir is discarded,
+    in two rare cases:
 
-    - no normal op (an empty batch, or invalidations only): the
-      write's ``batch=N`` commit is unpublished (one version), leaving
-      the table as if nothing had committed;
-    - an invalidation: ``batch=N`` is re-committed with only the ops
-      ordered before the first invalidation (4 jobs in all). This is
-      the idempotent replacement a replay performs. Between the two
-      commits ``batch=N`` holds ops ordered after the invalidation; a
-      crash there has not advanced the checkpoint, so the batch
-      replays and converges, and the engine truncates the table right
-      after an invalidation anyway. Each commit is whole on its own:
-      commit_batch publishes a dir only once its manifest is written.
+    - no normal op (empty, or invalidations only): nothing is published;
+    - an invalidation: ``batch=N`` is committed from only the ops
+      ordered before the first invalidation (2 jobs in all), replacing
+      any ``batch=N`` an earlier attempt published, as a replay does.
     """
     ok = "TRUE"
     if quarantine_dir is not None:
@@ -133,12 +113,15 @@ def apply_batch(
         F.expr(f"max({SEQ}) AS max_seen_seq"),
         F.expr(f"count(CASE WHEN NOT ({ok}) THEN 1 END) AS n_quarantined"),
     )
-    n_ops = table.commit_batch(batch_to_ops(observed.filter(normal), key=key), batch_id)
-    pre = obs.get
-    if not pre["n_normal"]:
-        table.unpublish_batch(batch_id)
-        n_ops = 0
-    elif pre["first_invalid_seq"] is not None:
+    pre: dict = {}
+
+    def whole_batch() -> bool:  # asked after the write, before its version
+        pre.update(obs.get)
+        return pre["n_normal"] > 0 and pre["first_invalid_seq"] is None
+
+    ops = batch_to_ops(observed.filter(normal), key=key)
+    n_ops = table.commit_batch(ops, batch_id, publish_if=whole_batch)
+    if pre["n_normal"] and pre["first_invalid_seq"] is not None:
         # An invalidation mid-batch clears the table: only ops ordered
         # BEFORE it may commit; the engine re-initial-syncs and then
         # replays the trailing ops (op_seq > invalidate) as their own

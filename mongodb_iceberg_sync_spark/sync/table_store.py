@@ -443,21 +443,23 @@ class MorTable:
         s["base"].append(d)
         self._publish(s)
 
-    def commit_batch(self, batch_df: DataFrame, batch_id: int) -> int:
+    def commit_batch(self, batch_df: DataFrame, batch_id: int, publish_if=None) -> int:
         """Apply one CDC micro-batch (upserts + deletes), idempotently;
         returns the number of rows committed.
 
-        batch_df must carry [key, OP_SEQ, OP_TYPE, payload...]. It is
+        batch_df must carry [key, OP_SEQ, OP_TYPE, payload...]; a key
+        may appear in several rows, the max OP_SEQ wins on read. It is
         written with its manifest to a fresh dir, then published
         (_commit); a replayed batch_id replaces its own commit in the
         next version — the Spark-native version of the reference's
         commit-ordering protocol (A21): state converges no matter how
         often the batch replays. Spark jobs: the write, plus one per
-        shuffle stage in batch_df's lineage (two in all for
-        apply_batch's LWW-folded ops); the manifest statistics ride the
-        write (_write_commit).
+        shuffle stage in batch_df's lineage (apply_batch's ops have
+        none); the manifest statistics ride the write (_write_commit). ``publish_if()``, if given, is
+        asked after the write: False discards the dir, publishes nothing
+        and returns 0 (a caller deciding on what the write observed).
         """
-        return self._commit(batch_df, "deltas", batch_id)
+        return self._commit(batch_df, "deltas", batch_id, publish_if=publish_if)
 
     def commit_batches(self, batch_df: DataFrame, batch_col: str) -> list[int]:
         """Bulk commit: one micro-batch per distinct integer value of
@@ -641,25 +643,22 @@ class MorTable:
         with open(f"{target}/{MANIFEST}", "w") as f:
             json.dump(m, f)
 
-    def _commit(self, df: DataFrame, kind: str, cid: int, write=None) -> int:
+    def _commit(self, df: DataFrame, kind: str, cid: int, write=None, publish_if=None) -> int:
         """Write commit ``cid`` of ``kind`` (a _COMMITS root or
         ``branches/<name>``) with ``write`` (default _write_commit) to a
         fresh dir, then publish the version that maps ``cid`` to it — a
         replay's new dir replaces the old one there; returns the row
-        count."""
+        count. A False ``publish_if()`` discards the dir instead."""
         s = self._state()
         prefix = "delete=" if kind.endswith("deletes") else "batch="
         d = self._fresh(f"{kind}/{prefix}{cid}", s)
         n = (write or self._write_commit)(df, self._abs(d))
+        if publish_if is not None and not publish_if():
+            self._discard(self._abs(d))
+            return 0
         self._slot(s, kind)[str(cid)] = d
         self._publish(s)
         return n
-
-    def unpublish_batch(self, batch_id: int) -> None:
-        """Take commit ``batch_id`` out of main: one version without it."""
-        s = self._state()
-        if s["deltas"].pop(str(batch_id), None) is not None:
-            self._publish(s)
 
     def _write_commit(self, df: DataFrame, target: str) -> int:
         """Write one data dir's rows and its manifest to ``target``, a dir
@@ -1346,9 +1345,13 @@ class MorTable:
         batch raises SnapshotExpiredError (conservative for partial
         compaction: hot-partition history still exists but
         cold-partition history does not, and a half-historical snapshot
-        would be silently wrong).
+        would be silently wrong). A full compact() without options that
+        would only rewrite the base as it is (_folded) returns at once:
+        no version, no Spark job.
         """
         if where is None:
+            if zorder_by is None and max_records_per_file is None and self._folded():
+                return
             rows, parts = self.snapshot(), None
             if rows is None:
                 return
@@ -1395,6 +1398,16 @@ class MorTable:
             # used as partition keys here
             parts = (pc, [str(v) for v in cold_vals])
         self._fold(rows, parts, max_records_per_file)
+
+    def _folded(self) -> bool:
+        """True when no commit or delete file is live and the base is one
+        unmasked dir written under the current spec: what a full fold
+        leaves, so folding again would change nothing."""
+        s = self._current()
+        if any(s[k] for k in _COMMITS) or len(s["base"]) != 1 or s["base"][0] in s["drop"]:
+            return False
+        m = self._manifest(self._abs(s["base"][0]))
+        return "spec" in m and m["spec"] == s["spec"]["current"]
 
     def _fold(
         self,
@@ -1602,9 +1615,9 @@ class MorTable:
                 os.link(os.path.join(base, f), os.path.join(out, f))
 
     def _discard(self, path: str) -> None:
-        """Unstage ``path`` in one rename, then delete it: a crash leaves
-        no half-deleted batch staged, only a leftover for
-        remove_orphan_files()."""
+        """Remove ``path`` (a staged batch, or a dir no version lists) in
+        one rename, then delete it: a crash leaves no half-deleted batch
+        staged, only a leftover for remove_orphan_files()."""
         trash = f"{self.path}/.discard-{uuid.uuid4().hex}"
         try:
             os.rename(path, trash)

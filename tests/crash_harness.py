@@ -12,7 +12,8 @@ crashing at each in turn. After each crash the table, reopened as a
 restarted process would, must read as it did before the call or as a
 crash-free run leaves it. Where it reads as before, retrying the call
 must reach the crash-free result; where it reads as after, the call had
-committed and a retry would be a second call."""
+committed and a retry would be a second call, which must change nothing
+for an idempotent call (a compaction)."""
 
 from __future__ import annotations
 
@@ -82,11 +83,13 @@ def reopen(t):
     return type(t)(t.spark, t.path, key=t.key)
 
 
-def check_every_crash(monkeypatch, template, work, call, read) -> int:
+def check_every_crash(monkeypatch, template, work, call, read, idempotent=False) -> int:
     """Copy the table at ``template`` into ``work/<k>`` and run ``call`` on
     it, failing at mutation k, for k = 1, 2, ... until the call makes
     fewer than k mutations; ``read(table)`` describes what a reader
-    sees. Returns the number of crash points checked."""
+    sees. With ``idempotent``, a retry of a call that crashed past its
+    commit point must leave the table reading as it does. Returns the
+    number of crash points checked."""
 
     def copy(name):
         return type(template)(
@@ -112,7 +115,7 @@ def check_every_crash(monkeypatch, template, work, call, read) -> int:
             return k - 1
         got = read(reopen(t))
         assert got in (before, want), f"crash at mutation {k} ({seen[-1]}): {got}"
-        if got == before:  # the crash came before the commit point
+        if got == before or idempotent:  # before the commit point, or a no-op
             retried = reopen(t)
             call(retried)
             assert read(reopen(retried)) == want, f"retry after a crash at mutation {k}"

@@ -1,10 +1,12 @@
 """apply_batch observes its batch statistics on the commit write itself
 instead of aggregating the events first. Its rare batches (an
-invalidation, no normal op) are corrected after that write; on every one
-of them the result must equal the former pre-pass implementation, kept
-below as the oracle: the same returned dict, the same live commits
-and manifests, the same snapshot, the same dead letters and the same
-metrics, on the plain, ``apply_with_metrics`` and quarantine paths."""
+invalidation, no normal op) are decided after that write, before its
+version is published; on every one of them the result must equal the
+former pre-pass implementation, kept below as the oracle (with the
+one-row-per-event projection of ``batch_to_ops``): the same returned
+dict, the same live commits and manifests, the same snapshot, the same
+dead letters and the same metrics, on the plain, ``apply_with_metrics``
+and quarantine paths."""
 
 from __future__ import annotations
 
@@ -29,7 +31,7 @@ INVALIDATE_OPS = ("drop", "rename", "invalidate")
 
 
 def _oracle_batch_to_ops(events, key):
-    ops = events.select(
+    return events.select(
         F.col(key),
         F.col("full_doc"),
         F.col("ts"),
@@ -37,18 +39,6 @@ def _oracle_batch_to_ops(events, key):
         F.when(F.col("op_type").isin("delete"), F.lit("delete"))
         .otherwise(F.lit("upsert"))
         .alias(OP_TYPE),
-    )
-    row = F.struct("full_doc", "ts", OP_SEQ, OP_TYPE)
-    return (
-        ops.groupBy(key)
-        .agg(F.max_by(row, F.col(OP_SEQ)).alias("_r"))
-        .select(
-            key,
-            F.col("_r.full_doc").alias("full_doc"),
-            F.col("_r.ts").alias("ts"),
-            F.col(f"_r.{OP_SEQ}").alias(OP_SEQ),
-            F.col(f"_r.{OP_TYPE}").alias(OP_TYPE),
-        )
     )
 
 
@@ -203,7 +193,10 @@ def test_apply_batch_equals_pre_pass_oracle(spark, tmp_path, monkeypatch, path):
     for name, got, want in zip(names, new_state, old_state):
         assert got == want, name
     assert new_metrics == old_metrics
-    # the empty and invalidations-only batches commit nothing
+    # the empty and invalidations-only batches commit nothing and leave
+    # no dir behind
     assert 4 not in new_state[0] and 5 not in new_state[0]
+    left = os.listdir(f"{tmp_path}/new/deltas")
+    assert not [d for d in left if d.split(".")[0] in ("batch=4", "batch=5")], left
     if path == "quarantine":
         assert all(o["max_seen_seq"] % 1000 == 999 for o in new_out)

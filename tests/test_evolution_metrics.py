@@ -67,8 +67,8 @@ def test_apply_with_metrics_counts_ops(spark, tmp_path):
     ]
     m = SyncMetrics()
     stats = apply_with_metrics(table, events_df(spark, rows), 0, "doc_id", m)
-    assert stats["n_ops"] == 2  # post-LWW: one op per key survives
-    # ...but the observed counters see every raw event (4), by op type:
+    assert stats["n_ops"] == 4  # every normal op commits; reads fold per key
+    # ...and the observed counters see the same raw events, by op type:
     snap = m.snapshot()
     assert snap["events_by_type"] == {"insert": 2, "update": 1, "delete": 1}
     assert snap["documents_processed"] == 4

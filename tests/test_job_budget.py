@@ -1,23 +1,27 @@
 """Job budgets stated in docstrings are checked claims: a warm,
-unpartitioned ``apply_batch`` without invalidations runs at most two
-Spark jobs, with or without a quarantine dir, ``MorTable.commit_batch``
-at most two, ``commit_to_branch`` at most two (the same commit onto a
-branch), a bulk ``commit_batches`` of LWW-folded ops at most eight, and
-``apply_batch_wap`` at most four, however many commits the table
+unpartitioned ``apply_batch`` without invalidations runs one Spark job,
+the commit write, with or without a quarantine dir; so do
+``MorTable.commit_batch`` and ``commit_to_branch`` (the same commit onto
+a branch) of ``batch_to_ops`` output, which is a projection with no
+shuffle. A bulk ``commit_batches`` of those ops runs at most six, and
+``apply_batch_wap`` at most three, however many commits the table
 holds, ``MorTable.compact`` of a base plus three deltas at most two,
-and building ``MorTable._raw`` (the read path under ``snapshot``,
-``lookup``, ``changes`` and ``scan_append``) none, however many
-commits and delete files are live: every dir the table version lists,
-the base's too, is read with the schema its manifest records.
+one that has nothing to fold none, and building ``MorTable._raw`` (the
+read path under ``snapshot``, ``lookup``, ``changes`` and
+``scan_append``) none, however many commits and delete files are live:
+every dir the table version lists, the base's too, is read with the
+schema its manifest records.
 ``delete_equality`` runs exactly two, however many equality deletes are
 live (its op_seq cut comes from manifests), and ``compact`` over a base,
 deltas, positional deletes and three equality deletes at most seven.
 Jobs are counted with a job group and ``statusTracker``, the
 same attribution the benchmark's traced run uses.
 
-The driver-side cost of building a batch's plan is pinned too, in Py4J
-round trips: every Column call costs several (PySpark records its call
-site), so the per-batch expressions are SQL text."""
+The driver-side cost of building a batch's plan is pinned too, at 108
+Py4J round trips: every Column call costs several (PySpark records its
+call site), so the per-batch expressions are SQL text. Three test names
+keep the looser budget they were written with (eight, four, 300); their
+asserts hold the measured one."""
 
 from __future__ import annotations
 
@@ -49,16 +53,23 @@ def _batch(spark, b):
     )
 
 
-def test_apply_batch_runs_at_most_two_jobs(spark, tmp_path):
+def _base(spark):
+    """A backfill of 40 distinct keys, one event each."""
+    events = events_df(spark, make_events(n_docs=40, n_ops=40))
+    return batch_to_ops(events).drop("_op_seq", "_op")
+
+
+def test_apply_batch_runs_one_job(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "apply"), key="doc_id")
     for b in range(2):  # warm: first batches pay one-off planning jobs
         apply_batch(t, _batch(spark, b), b)
     stats, n = _jobs(spark, "budget-apply", lambda: apply_batch(t, _batch(spark, 2), 2))
-    assert stats["n_ops"] == 40 and stats["n_invalidations"] == 0
-    assert n <= 2, f"apply_batch ran {n} Spark jobs"
+    # every one of the 120 events is a normal op, and each commits
+    assert stats["n_ops"] == 120 and stats["n_invalidations"] == 0
+    assert n <= 1, f"apply_batch ran {n} Spark jobs"
 
 
-def test_quarantine_clean_batch_runs_at_most_two_jobs(spark, tmp_path):
+def test_quarantine_clean_batch_runs_one_job(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "apply"), key="doc_id")
     qdir = str(tmp_path / "dlq")
     for b in range(2):
@@ -68,22 +79,22 @@ def test_quarantine_clean_batch_runs_at_most_two_jobs(spark, tmp_path):
         "budget-quarantine",
         lambda: apply_batch(t, _batch(spark, 2), 2, quarantine_dir=qdir),
     )
-    assert stats["n_ops"] == 40 and stats["n_quarantined"] == 0
-    assert n <= 2, f"apply_batch with a quarantine dir ran {n} Spark jobs"
+    assert stats["n_ops"] == 120 and stats["n_quarantined"] == 0
+    assert n <= 1, f"apply_batch with a quarantine dir ran {n} Spark jobs"
 
 
-def test_commit_batch_runs_at_most_two_jobs(spark, tmp_path):
+def test_commit_batch_runs_one_job(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "commit"), key="doc_id")
     for b in range(2):
         t.commit_batch(batch_to_ops(_batch(spark, b)), b)
-    # the LWW-folded ops apply_batch hands over: one shuffle, one write
+    # the ops apply_batch hands over, one per event: the write alone
     ops = batch_to_ops(_batch(spark, 2))
     n_rows, n = _jobs(spark, "budget-commit", lambda: t.commit_batch(ops, 2))
-    assert n_rows == 40
-    assert n <= 2, f"commit_batch ran {n} Spark jobs"
+    assert n_rows == 120
+    assert n <= 1, f"commit_batch ran {n} Spark jobs"
 
 
-def test_commit_to_branch_runs_at_most_two_jobs(spark, tmp_path):
+def test_commit_to_branch_runs_one_job(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "branch"), key="doc_id")
     t.create_branch("audit")
     for b in range(2):
@@ -91,7 +102,7 @@ def test_commit_to_branch_runs_at_most_two_jobs(spark, tmp_path):
     ops = batch_to_ops(_batch(spark, 2))
     _, n = _jobs(spark, "budget-branch", lambda: t.commit_to_branch(ops, 2, "audit"))
     assert t._ids("branches/audit") == [0, 1, 2]
-    assert n <= 2, f"commit_to_branch ran {n} Spark jobs"
+    assert n <= 1, f"commit_to_branch ran {n} Spark jobs"
 
 
 def test_bulk_commit_batches_runs_at_most_eight_jobs(spark, tmp_path):
@@ -99,25 +110,25 @@ def test_bulk_commit_batches_runs_at_most_eight_jobs(spark, tmp_path):
     events = events_df(spark, make_events(n_docs=40, n_ops=240, start_seq=1))
     ops = batch_to_ops(events).selectExpr("*", "_op_seq % 4 AS b")
     t.commit_batches(ops, "b")  # warm
-    # the write: the LWW map stage, the batch-key shuffle and the write;
-    # the manifests: a schema read and two grouped aggregations of two
+    # the write: the batch-key shuffle and the write; the manifests: two
+    # grouped aggregations of two
     ids, n = _jobs(spark, "budget-bulk", lambda: t.commit_batches(ops, "b"))
     assert ids == [0, 1, 2, 3]
-    assert n <= 8, f"commit_batches ran {n} Spark jobs"
+    assert n <= 6, f"commit_batches ran {n} Spark jobs"
 
 
 def test_apply_batch_wap_runs_at_most_four_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "wap"), key="doc_id")
     for b in range(2):
         apply_batch_wap(t, _batch(spark, b), b)
-    # this is the third batch: the staging write (the LWW map stage and
-    # the write) and the audit's aggregate (the same two); the op_seq
-    # conflict check reads manifests and the publish moves no data
+    # this is the third batch: the staging write, and the audit's
+    # aggregate (a map stage and its result); the op_seq conflict check
+    # reads manifests and the publish moves no data
     stats, n = _jobs(
         spark, "budget-wap", lambda: apply_batch_wap(t, _batch(spark, 2), 2)
     )
     assert stats["published"] and stats["n_events"] == 120
-    assert n <= 4, f"apply_batch_wap ran {n} Spark jobs"
+    assert n <= 3, f"apply_batch_wap ran {n} Spark jobs"
 
 
 def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
@@ -134,7 +145,7 @@ def test_apply_batch_wap_jobs_do_not_grow_with_commits(spark, tmp_path):
 
 def test_raw_runs_no_job_however_many_commits(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "raw"), key="doc_id")
-    t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
+    t.append_base(_base(spark))
     counts = []
     for b in range(1, 7):
         t.commit_batch(batch_to_ops(_batch(spark, b)), b)
@@ -144,7 +155,7 @@ def test_raw_runs_no_job_however_many_commits(spark, tmp_path):
 
 def test_compact_runs_at_most_two_jobs(spark, tmp_path):
     t = MorTable(spark, str(tmp_path / "compact"), key="doc_id")
-    t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
+    t.append_base(_base(spark))
     for b in range(1, 4):
         t.commit_batch(batch_to_ops(_batch(spark, b)), b)
     n_rows = t.snapshot().count()
@@ -153,6 +164,11 @@ def test_compact_runs_at_most_two_jobs(spark, tmp_path):
     _, n = _jobs(spark, "budget-compact", t.compact)
     assert t._ids("deltas") == [] and t.snapshot().count() == n_rows
     assert n <= 2, f"compact ran {n} Spark jobs"
+    # nothing left to fold: the retry writes no version and runs no job
+    v, history = t.version, t.history().collect()
+    _, n = _jobs(spark, "budget-compact-again", t.compact)
+    assert (t.version, t.history().collect()) == (v, history)
+    assert n == 0, f"compact with nothing to fold ran {n} Spark jobs"
 
 
 def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):
@@ -175,14 +191,14 @@ def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):
     )
     stats = apply_batch(t, events, 2)
     monkeypatch.undo()
-    assert stats["n_ops"] == 40
-    assert 0 < len(calls) <= 300, f"apply_batch made {len(calls)} Py4J round trips"
+    assert stats["n_ops"] == 120
+    assert 0 < len(calls) <= 108, f"apply_batch made {len(calls)} Py4J round trips"
 
 
 def _with_pos_deletes(spark, tmp_path, name):
     """A base plus one delta and three live positional deletes."""
     t = MorTable(spark, str(tmp_path / name), key="doc_id")
-    t.append_base(batch_to_ops(_batch(spark, 0)).drop("_op_seq", "_op"))
+    t.append_base(_base(spark))
     t.commit_batch(batch_to_ops(_batch(spark, 1)), 1)
     for i in range(3):
         t.delete_where(F.col("doc_id") == f"doc{i}", 2 + i)

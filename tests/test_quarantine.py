@@ -82,7 +82,7 @@ def test_no_quarantine_dir_keeps_legacy_behavior(spark, tmp_path):
     table = MorTable(spark, str(tmp_path / "t"), key="doc_id")
     stats = apply_batch(table, _batch(spark), batch_id=3)
     assert stats["n_quarantined"] == 0
-    assert stats["n_ops"] == 6  # 7 events, b insert+delete LWW-folded
+    assert stats["n_ops"] == 7  # every event commits, b insert+delete too
     assert stats["max_seen_seq"] == 7
 
 

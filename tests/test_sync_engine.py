@@ -90,6 +90,52 @@ def test_within_batch_lww_ordering(spark, table):
     assert snapshot_dict(table)["d1"]["v"] == "late"
 
 
+def test_hot_key_within_and_across_batches(spark, table):
+    """A key inserted, updated many times, deleted and re-inserted in one
+    batch, then deleted in the next and re-inserted in a third: every
+    normal op lands in its batch's commit, and the merge-on-read fold
+    (snapshot, lookup, changes, compact) picks the max op_seq."""
+
+    def ev(seq, op, key="hot"):
+        doc = None if op == "delete" else json.dumps({"_id": key, "v": seq})
+        return (seq, op, key, None, doc)
+
+    batches = [
+        [ev(1, "insert"), *[ev(s, "update") for s in range(2, 12)], ev(12, "delete"),
+         ev(13, "insert"), ev(14, "replace"), ev(15, "update"), ev(16, "insert", "cold")],
+        [*[ev(s, "update") for s in range(20, 25)], ev(25, "delete")],
+        [ev(30, "insert"), ev(31, "update")],
+    ]
+
+    def hot():
+        found = table.lookup("hot")
+        return [] if found is None else [json.loads(r.full_doc) for r in found.collect()]
+
+    seen = []
+    for b, rows in enumerate(batches):
+        # reversed: the order within a batch is carried by op_seq alone
+        stats = apply_batch(table, events_df(spark, rows[::-1]), batch_id=b)
+        seen += rows
+        want = expected_final_state(seen)
+        assert stats["n_ops"] == len(rows)
+        assert spark.read.parquet(dict(table._dirs("deltas"))[b]).count() == len(rows)
+        assert snapshot_dict(table) == want
+        assert hot() == ([want["hot"]] if "hot" in want else [])
+    assert snapshot_dict(table)["hot"]["v"] == 31
+    as_of_0 = {r.doc_id: json.loads(r.full_doc) for r in table.snapshot(as_of_batch=0).collect()}
+    assert as_of_0 == expected_final_state(batches[0])
+
+    def changes(*versions):
+        return {r.doc_id: r.change_type for r in table.changes(*versions).collect()}
+
+    assert changes(0, 1) == {"hot": "delete"}
+    assert changes(1, 2) == {"hot": "insert"}
+    assert changes(0) == {"hot": "update"}
+    table.compact()
+    assert snapshot_dict(table) == expected_final_state(seen)
+    assert hot() == [expected_final_state(seen)["hot"]]
+
+
 def test_compaction_preserves_state(spark, table):
     rows = make_events(n_docs=12, n_ops=100)
     apply_batch(table, events_df(spark, rows), batch_id=0)

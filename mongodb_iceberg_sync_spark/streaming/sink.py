@@ -2,8 +2,9 @@
 (reference A12/A15/A21; q_stream_foreachbatch_merge's engine).
 
 This is the steady-state write path of the sync engine: each
-micro-batch of CDC events is LWW-deduped within the batch and committed
-keyed by batch_id: written with its manifest to a fresh dir, then
+micro-batch of CDC events is committed one row per event (the table's
+merge-on-read fold resolves last-writer-wins per key) and keyed by
+batch_id: written with its manifest to a fresh dir, then
 published by one table-version write that lists it. Spark may replay a
 batch after failure, and the replay replaces that batch's commit,
 converging to the same state (the Spark-native equivalent of the reference's
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sync.apply import apply_batch, apply_batch_wap
+from ..sync.apply import apply_batch, apply_batch_wap, batch_to_ops, observe_batch
 from ..sync.batching import trigger_kwargs
 from ..sync.config import BatchConfig
 from ..sync.table_store import MorTable
@@ -95,24 +96,28 @@ def foreach_batch_branch(
     fork+1+N so replayed micro-batches replace their own commit dir
     (same idempotence contract as commit_batch). Invalidation ops are
     rejected per-batch (engine-level decision, same guard as
-    apply_batch_wap)."""
-    from ..sync.apply import INVALIDATE_OPS, batch_to_ops
-
+    apply_batch_wap). Both the guard and the empty-batch check read the
+    batch statistics observed on the commit write (observe_batch), so
+    no action precedes it: a rejected or empty micro-batch is written,
+    then discarded before its version, and leaves no branch commit."""
     refs = table.refs().filter(F.col("ref") == branch).collect()
     if not refs:
         raise ValueError(f"no such branch {branch!r}")
     base = refs[0].fork_batch if refs[0].fork_batch is not None else -1
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.filter(F.col("op_type").isin(*INVALIDATE_OPS)).head(1):
+        observed, stats = observe_batch(batch_df)
+
+        def clean() -> bool:  # asked after the write, before its version
+            return stats()["n_events"] > 0 and not stats()["n_invalid"]
+
+        ops = batch_to_ops(observed, key=key)
+        table.commit_to_branch(ops, base + 1 + batch_id, branch, publish_if=clean)
+        if stats()["n_invalid"]:
             raise ValueError(
                 "foreach_batch_branch cannot handle invalidation ops — "
                 "route through apply_batch/SyncEngine"
             )
-        if not batch_df.head(1):
-            return
-        ops = batch_to_ops(batch_df, key=key)
-        table.commit_to_branch(ops, base + 1 + batch_id, branch)
 
     return (
         cdc_stream.writeStream.foreachBatch(_apply)

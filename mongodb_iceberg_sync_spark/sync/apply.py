@@ -18,6 +18,8 @@ the streaming path oracle-testable (SURVEY.md §2 design rule).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -26,6 +28,7 @@ from .table_store import OP_SEQ, OP_TYPE, MorTable, sql_ident
 UPSERT_OPS = ("insert", "update", "replace")
 DELETE_OPS = ("delete",)
 INVALIDATE_OPS = ("drop", "rename", "invalidate")
+NORMAL_OPS = UPSERT_OPS + DELETE_OPS
 
 # Per-batch expressions are SQL text: one string is one Py4J call however
 # large it is, where a node-by-node Column tree costs several round trips
@@ -56,6 +59,36 @@ def batch_to_ops(events: DataFrame, key: str = "doc_id") -> DataFrame:
     )
 
 
+def observe_batch(events: DataFrame, commit: str = IS_NORMAL, dead: str = "FALSE"):
+    """(``events`` observed, a function returning the batch statistics
+    once an action on it has run): ``n_events``; ``n_invalid`` and
+    ``first_invalid_seq``; ``ops_by_type``, the rows the SQL predicate
+    ``commit`` selects counted by op_type (``other`` outside NORMAL_OPS),
+    and their ``max_seq``; ``n_quarantined``, the rows ``dead`` selects;
+    ``max_seen_seq``. One ``named_struct`` aggregate, so a few Py4J round
+    trips however many statistics it holds."""
+    by_type = {op: f"op_type = '{op}'" for op in NORMAL_OPS}
+    by_type["other"] = f"NOT ({op_in(NORMAL_OPS)})"
+    fields = {
+        "n_events": "count(1)",
+        "n_invalid": f"count(CASE WHEN {IS_INVALID} THEN 1 END)",
+        "first_invalid_seq": f"min(CASE WHEN {IS_INVALID} THEN {SEQ} END)",
+        "ops_by_type": _struct(
+            {op: f"count(CASE WHEN ({commit}) AND {p} THEN 1 END)" for op, p in by_type.items()}
+        ),
+        "max_seq": f"max(CASE WHEN {commit} THEN {SEQ} END)",
+        "max_seen_seq": f"max({SEQ})",
+        "n_quarantined": f"count(CASE WHEN {dead} THEN 1 END)",
+    }
+    obs = Observation()
+    observed = events.observe(obs, F.expr(f"{_struct(fields)} AS batch"))
+    return observed, functools.cache(lambda: obs.get["batch"].asDict(recursive=True))
+
+
+def _struct(fields: dict[str, str]) -> str:
+    return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
+
+
 def apply_batch(
     table: MorTable,
     events: DataFrame,
@@ -63,8 +96,16 @@ def apply_batch(
     key: str = "doc_id",
     quarantine_dir: str | None = None,
 ) -> dict:
-    """Apply one micro-batch; returns stats for checkpointing
-    (max op_seq = resume position, counts = metrics A34).
+    """Apply one micro-batch; returns what it committed, for the
+    checkpoint and SyncMetrics (reference A34):
+
+    - ``n_ops``: the normal ops committed, one row per event;
+      ``ops_by_type``: the same ops counted by op_type, so
+      ``sum(ops_by_type.values()) == n_ops``;
+    - ``n_quarantined``: the events dead-lettered;
+    - ``max_op_seq``: the max op_seq of the well-formed normal ops;
+      ``max_seen_seq``: of every event (the resume position);
+    - ``n_invalidations``, ``first_invalid_seq``: the invalidations.
 
     With ``quarantine_dir`` set, malformed events (null key / missing
     or unparseable document) are routed to a dead-letter parquet table
@@ -76,14 +117,12 @@ def apply_batch(
 
     One Spark job per warm batch, with or without ``quarantine_dir``
     (pinned by tests/test_job_budget.py): the commit write. It carries
-    both Observations: the batch statistics (invalidation count and
-    first seq, normal-op count, max seqs, quarantined count), observed
-    on the raw events upstream of the normal-op filter, and every
-    manifest statistic (MorTable._write_commit). At a 60s trigger
-    interval job-count-per-batch is the fixed overhead that bounds how
-    many tables one driver can sync (reference A32's pool sizing
-    concern, docs/design.md:480-499). ``n_ops`` counts the normal ops
-    committed, one per event.
+    both Observations: the batch statistics (observe_batch), on the raw
+    events upstream of the normal-op filter, and every manifest
+    statistic (MorTable._write_commit). At a 60s trigger interval
+    job-count-per-batch is the fixed overhead that bounds how many
+    tables one driver can sync (reference A32's pool sizing concern,
+    docs/design.md:480-499).
 
     commit_batch asks those statistics, before publishing, whether the
     write is the batch's commit. It is not, and its dir is discarded,
@@ -93,51 +132,53 @@ def apply_batch(
     - an invalidation: ``batch=N`` is committed from only the ops
       ordered before the first invalidation (2 jobs in all), replacing
       any ``batch=N`` an earlier attempt published, as a replay does.
+      The engine re-reads the trailing events (op_seq above the first
+      invalidation) as a batch of their own, so only the malformed
+      events it will not re-read are dead-lettered here. The returned
+      counts are observed on this cut commit.
     """
-    ok = "TRUE"
+    dead = "FALSE"
     if quarantine_dir is not None:
         from .quarantine import REASON_COL, tag_malformed, write_quarantine
 
-        # tag once; the batch statistics cover well-formed rows only
+        # tag once; only well-formed rows commit
         events = tag_malformed(events, key=key)
-        ok = f"{REASON_COL} IS NULL"
-    invalid, normal = f"{ok} AND {IS_INVALID}", f"{ok} AND {IS_NORMAL}"
-    obs = Observation()
-    observed = events.observe(
-        obs,
-        F.expr(f"count(CASE WHEN {invalid} THEN 1 END) AS n_invalid"),
-        F.expr(f"min(CASE WHEN {invalid} THEN {SEQ} END) AS first_invalid_seq"),
-        F.expr(f"count(CASE WHEN {normal} THEN 1 END) AS n_normal"),
-        F.expr(f"max(CASE WHEN {normal} THEN {SEQ} END) AS max_seq"),
-        # quarantined events are consumed: resume must advance past them
-        F.expr(f"max({SEQ}) AS max_seen_seq"),
-        F.expr(f"count(CASE WHEN NOT ({ok}) THEN 1 END) AS n_quarantined"),
-    )
-    pre: dict = {}
+        dead = f"{REASON_COL} IS NOT NULL"
+    normal = f"NOT ({dead}) AND {IS_NORMAL}"
+    observed, stats = observe_batch(events, commit=normal, dead=dead)
 
     def whole_batch() -> bool:  # asked after the write, before its version
-        pre.update(obs.get)
-        return pre["n_normal"] > 0 and pre["first_invalid_seq"] is None
+        return stats()["first_invalid_seq"] is None and any(stats()["ops_by_type"].values())
 
-    ops = batch_to_ops(observed.filter(normal), key=key)
-    n_ops = table.commit_batch(ops, batch_id, publish_if=whole_batch)
-    if pre["n_normal"] and pre["first_invalid_seq"] is not None:
+    n_ops = table.commit_batch(
+        batch_to_ops(observed.filter(normal), key=key), batch_id, publish_if=whole_batch
+    )
+    s = stats()
+    first, has_ops = s["first_invalid_seq"], any(s["ops_by_type"].values())
+    if first is not None and (has_ops or s["n_quarantined"]):
         # An invalidation mid-batch clears the table: only ops ordered
         # BEFORE it may commit; the engine re-initial-syncs and then
         # replays the trailing ops (op_seq > invalidate) as their own
-        # batch — matching the sequential-replay oracle.
-        cut = f"{normal} AND {SEQ} < {pre['first_invalid_seq']}"
-        n_ops = table.commit_batch(batch_to_ops(events.filter(cut), key=key), batch_id)
-    if pre["n_quarantined"]:
-        write_quarantine(events.filter(f"NOT ({ok})"), quarantine_dir, batch_id)
+        # batch — matching the sequential-replay oracle. The cut's
+        # statistics differ only in what ``commit`` and ``dead`` select.
+        cut = f"{normal} AND {SEQ} < {first}"
+        dead = f"{dead} AND ({SEQ} > {first}) IS NOT TRUE"
+        observed, stats = observe_batch(events, commit=cut, dead=dead)
+        n_ops = table.commit_batch(
+            batch_to_ops(observed.filter(cut), key=key), batch_id, publish_if=lambda: has_ops
+        )
+        s = {**stats(), "max_seq": s["max_seq"]}
+    if s["n_quarantined"]:
+        write_quarantine(events.filter(dead), quarantine_dir, batch_id)
     return {
         "batch_id": batch_id,
         "n_ops": n_ops,
-        "n_quarantined": pre["n_quarantined"],
-        "max_op_seq": pre["max_seq"],
-        "max_seen_seq": pre["max_seen_seq"],
-        "n_invalidations": pre["n_invalid"],
-        "first_invalid_seq": pre["first_invalid_seq"],
+        "ops_by_type": s["ops_by_type"],
+        "n_quarantined": s["n_quarantined"],
+        "max_op_seq": s["max_seq"],
+        "max_seen_seq": s["max_seen_seq"],
+        "n_invalidations": s["n_invalid"],
+        "first_invalid_seq": first,
     }
 
 
@@ -165,27 +206,21 @@ def apply_batch_wap(
     through apply_batch/SyncEngine instead; this guard raises so the
     mistake is loud.
 
-    The invalidation guard and the event count ride the staging write
-    as an Observation, so no pass over the events precedes it; a batch
-    that fails the guard, or is empty, is staged and then aborted.
-    Staging is invisible to readers, so none can tell the difference.
+    The invalidation guard and the event count are observe_batch's
+    statistics on the staging write, so no pass over the events precedes
+    it; a batch that fails the guard, or is empty, is staged and then
+    aborted. Staging is invisible to readers, so none can tell.
     """
-    obs = Observation()
-    observed = events.observe(
-        obs,
-        F.expr(f"count(CASE WHEN {IS_INVALID} THEN 1 END) AS n_invalid"),
-        F.expr("count(1) AS n"),
-        F.expr(f"max({SEQ}) AS mx"),
-    )
+    observed, batch_stats = observe_batch(events)
     table.stage_batch(batch_to_ops(observed, key=key), batch_id)
-    stats = obs.get
+    stats = batch_stats()
     if stats["n_invalid"]:
         table.abort_batch(batch_id)
         raise ValueError(
             "apply_batch_wap cannot handle invalidation ops "
             "(drop/rename/invalidate) — use apply_batch/SyncEngine"
         )
-    if not stats["n"]:
+    if not stats["n_events"]:
         table.abort_batch(batch_id)
         return {"published": True, "n_events": 0, "max_seq": None, "problems": []}
     problems = table.audit_batch(batch_id, checks=checks, expect_min_rows=1)
@@ -200,14 +235,14 @@ def apply_batch_wap(
             write_quarantine(bad, quarantine_dir, batch_id)
         return {
             "published": False,
-            "n_events": stats["n"],
-            "max_seq": stats["mx"],
+            "n_events": stats["n_events"],
+            "max_seq": stats["max_seen_seq"],
             "problems": problems,
         }
     table.publish_batch(batch_id)
     return {
         "published": True,
-        "n_events": stats["n"],
-        "max_seq": stats["mx"],
+        "n_events": stats["n_events"],
+        "max_seq": stats["max_seen_seq"],
         "problems": [],
     }

@@ -1192,10 +1192,12 @@ class MorTable:
             raise ValueError(f"no such branch {name!r}")
         return branches[name]
 
-    def commit_to_branch(self, batch_df: DataFrame, batch_id: int, name: str) -> None:
+    def commit_to_branch(
+        self, batch_df: DataFrame, batch_id: int, name: str, publish_if=None
+    ) -> int:
         """commit_batch onto a branch: the same write → manifest →
-        version commit and the same Spark jobs, but only the ref lists
-        the commit."""
+        version commit, the same Spark jobs and the same ``publish_if``
+        hook, but only the ref lists the commit."""
         fork = self._branch_ref(name)["fork_batch"]
         ids = self._ids(f"branches/{name}")
         head = ids[-1] if ids else fork
@@ -1203,7 +1205,7 @@ class MorTable:
             raise ValueError(
                 f"branch {name!r} head is {head}; new batch id must advance"
             )
-        self._commit(batch_df, f"branches/{name}", batch_id)
+        return self._commit(batch_df, f"branches/{name}", batch_id, publish_if=publish_if)
 
     def fast_forward(self, name: str) -> list[int]:
         """Publish a branch: ONE version lists its commit dirs, manifests

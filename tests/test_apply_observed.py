@@ -5,8 +5,13 @@ version is published; on every one of them the result must equal the
 former pre-pass implementation, kept below as the oracle (with the
 one-row-per-event projection of ``batch_to_ops``): the same returned
 dict, the same live commits and manifests, the same snapshot, the same
-dead letters and the same metrics, on the plain, ``apply_with_metrics``
-and quarantine paths."""
+dead letters and the same metrics, on the plain, metrics (the engine's
+recording path, ``CollectionSync._apply_one``) and quarantine paths.
+
+The oracle derives ``ops_by_type`` on its own, from the events it
+commits, and dead-letters on an invalidation only the malformed events
+that the engine's replay of the trailing ops (op_seq above the first
+invalidation) will not read again."""
 
 from __future__ import annotations
 
@@ -19,7 +24,8 @@ from pyspark.sql import functions as F
 
 from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df, make_events
 from mongodb_iceberg_sync_spark.sync import apply as apply_mod
-from mongodb_iceberg_sync_spark.sync.metrics import SyncMetrics, apply_with_metrics
+from mongodb_iceberg_sync_spark.sync import engine as engine_mod
+from mongodb_iceberg_sync_spark.sync.metrics import SyncMetrics
 from mongodb_iceberg_sync_spark.sync.table_store import (
     MANIFEST,
     OP_SEQ,
@@ -65,14 +71,9 @@ def oracle_apply_batch(table, events, batch_id, key="doc_id", quarantine_dir=Non
 
     is_invalid = F.col("op_type").isin(*INVALIDATE_OPS)
     seq = F.col("op_seq").cast("long")
-    q_max_seq = None
-    n_quarantined = 0
+    bad = None
     if quarantine_dir is not None:
         events, bad = _oracle_split_malformed(events, key)
-        qstat = bad.agg(F.count("*").alias("n"), F.max(seq).alias("mx")).head()
-        n_quarantined, q_max_seq = qstat.n, qstat.mx
-        if n_quarantined:
-            write_quarantine(bad, quarantine_dir, batch_id)
     pre = events.agg(
         F.count(F.when(is_invalid, 1)).alias("n_invalid"),
         F.min(F.when(is_invalid, seq)).alias("first_invalid_seq"),
@@ -81,17 +82,30 @@ def oracle_apply_batch(table, events, batch_id, key="doc_id", quarantine_dir=Non
         F.max(seq).alias("max_seen_seq"),
     ).head()
     n_ops = 0
+    ops_by_type = dict.fromkeys(("insert", "update", "replace", "delete", "other"), 0)
     if pre.n_normal:
         normal = events.filter(~is_invalid)
         if pre.first_invalid_seq is not None:
             normal = normal.filter(seq < F.lit(pre.first_invalid_seq))
         n_ops = table.commit_batch(_oracle_batch_to_ops(normal, key), batch_id)
+        for r in normal.groupBy("op_type").count().collect():
+            ops_by_type[r.op_type if r.op_type in ops_by_type else "other"] += r["count"]
     max_seen = pre.max_seen_seq
-    if q_max_seq is not None and (max_seen is None or q_max_seq > max_seen):
-        max_seen = q_max_seq
+    n_quarantined = 0
+    if bad is not None:
+        q_max_seq = bad.agg(F.max(seq)).head()[0]
+        if q_max_seq is not None and (max_seen is None or q_max_seq > max_seen):
+            max_seen = q_max_seq
+        if pre.first_invalid_seq is not None:
+            # the engine's replay of the trailing ops dead-letters the rest
+            bad = bad.filter((seq <= F.lit(pre.first_invalid_seq)) | seq.isNull())
+        n_quarantined = bad.count()
+        if n_quarantined:
+            write_quarantine(bad, quarantine_dir, batch_id)
     return {
         "batch_id": batch_id,
         "n_ops": n_ops,
+        "ops_by_type": ops_by_type,
         "n_quarantined": n_quarantined,
         "max_op_seq": pre.max_seq,
         "max_seen_seq": max_seen,
@@ -162,16 +176,17 @@ def _run(spark, root, apply_fn, path, monkeypatch):
     t = MorTable(spark, root, key="doc_id")
     qdir = f"{root}_dlq" if path == "quarantine" else None
     metrics = SyncMetrics()
+    sync = engine_mod.CollectionSync(spark, "observed", None, None, t, None, metrics=metrics)
     out = []
     with monkeypatch.context() as m:
-        # apply_with_metrics looks apply_batch up at call time
-        m.setattr(apply_mod, "apply_batch", apply_fn)
+        # the engine looks apply_batch up at call time
+        m.setattr(engine_mod, "apply_batch", apply_fn)
         for b, rows in enumerate([_normal(1, 24), *CASES.values()]):
             if path == "quarantine":
                 rows = rows + _malformed(b)
             events = events_df(spark, rows)
             if path == "metrics":
-                out.append(apply_with_metrics(t, events, b, "doc_id", metrics))
+                out.append(sync._apply_one(events, b))
             else:
                 out.append(apply_fn(t, events, b, quarantine_dir=qdir))
     snap = metrics.snapshot()
@@ -193,6 +208,10 @@ def test_apply_batch_equals_pre_pass_oracle(spark, tmp_path, monkeypatch, path):
     for name, got, want in zip(names, new_state, old_state):
         assert got == want, name
     assert new_metrics == old_metrics
+    # each call counts, by op type, exactly the ops it committed
+    assert all(sum(o["ops_by_type"].values()) == o["n_ops"] for o in new_out)
+    if path == "metrics":
+        assert new_metrics["documents_processed"] == sum(o["n_ops"] for o in new_out)
     # the empty and invalidations-only batches commit nothing and leave
     # no dir behind
     assert 4 not in new_state[0] and 5 not in new_state[0]

@@ -7,6 +7,7 @@ refuse the fast-forward."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -162,6 +163,45 @@ def test_streaming_branch_wap(spark, tmp_path):
         if r.doc_id != "seed"
     }
     assert final == expected_final_state(rows)
+
+
+def _branch_stream(spark, tmp_path, table, rows):
+    """Drain a one-file stream of ``rows`` (a file with no rows is one
+    empty micro-batch) onto branch ``ingest`` of ``table``."""
+    from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df, read_stream
+    from mongodb_iceberg_sync_spark.streaming.sink import foreach_batch_branch
+
+    src = str(tmp_path / "src")
+    events_df(spark, rows).coalesce(1).write.parquet(src)
+    table.create_branch("ingest")
+    q = foreach_batch_branch(
+        read_stream(spark, src), table, str(tmp_path / "ckpt"), "ingest"
+    )
+    return q, table.version
+
+
+def _no_branch_commit(table):
+    d = f"{table.branches_dir}/ingest"
+    return table._ids("branches/ingest") == [] and (
+        not os.path.exists(d) or os.listdir(d) == []
+    )
+
+
+def test_streaming_branch_rejects_invalidation(spark, table, tmp_path):
+    from mongodb_iceberg_sync_spark.sources.cdc_feed import make_events
+
+    rows = make_events(n_docs=5, n_ops=12, invalidate_at=6, start_seq=100)
+    q, version = _branch_stream(spark, tmp_path, table, rows)
+    with pytest.raises(Exception, match="cannot handle invalidation ops"):
+        q.awaitTermination()
+    assert table.version == version and _no_branch_commit(table)
+
+
+def test_streaming_branch_empty_batch_commits_nothing(spark, table, tmp_path):
+    q, version = _branch_stream(spark, tmp_path, table, [])
+    q.awaitTermination()
+    assert [p.batchId for p in q.recentProgress] == [0]  # the batch ran
+    assert table.version == version and _no_branch_commit(table)
 
 
 def test_publish_branch_refuses_dirty_audit(spark, table):

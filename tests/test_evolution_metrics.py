@@ -6,8 +6,9 @@ from __future__ import annotations
 import json
 
 from mongodb_iceberg_sync_spark.sources.cdc_feed import events_df
+from mongodb_iceberg_sync_spark.sync.engine import CollectionSync
 from mongodb_iceberg_sync_spark.sync.evolution import evolve
-from mongodb_iceberg_sync_spark.sync.metrics import SyncMetrics, apply_with_metrics
+from mongodb_iceberg_sync_spark.sync.metrics import SyncMetrics
 from mongodb_iceberg_sync_spark.sync.schema_infer import infer_union_schema
 from mongodb_iceberg_sync_spark.sync.table_store import MorTable
 
@@ -66,9 +67,11 @@ def test_apply_with_metrics_counts_ops(spark, tmp_path):
         (4, "delete", "d2", None, None),
     ]
     m = SyncMetrics()
-    stats = apply_with_metrics(table, events_df(spark, rows), 0, "doc_id", m)
+    # the engine records the counts apply_batch observed on its commit
+    sync = CollectionSync(spark, "m", None, None, table, None, metrics=m)
+    stats = sync._apply_one(events_df(spark, rows), 0)
     assert stats["n_ops"] == 4  # every normal op commits; reads fold per key
-    # ...and the observed counters see the same raw events, by op type:
+    # ...and the counters see the same committed ops, by op type:
     snap = m.snapshot()
     assert snap["events_by_type"] == {"insert": 2, "update": 1, "delete": 1}
     assert snap["documents_processed"] == 4

@@ -33,6 +33,28 @@ def test_analyst_reporting_example():
     assert "OK" in r.stdout
 
 
+def test_cli_sync_demo(tmp_path):
+    # the CLI's sync demo: two concurrent CollectionSyncs, each checked
+    # against the sequential replay and its SyncMetrics event count
+    r = _run(
+        [
+            "-m",
+            "mongodb_iceberg_sync_spark",
+            "-c",
+            "examples/sync-config.yaml",
+            "--demo",
+            str(tmp_path / "demo"),
+        ]
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+    import json as _json
+
+    line = [l for l in r.stdout.splitlines() if '"demo_ok"' in l][-1]
+    out = _json.loads(line)
+    assert out["demo_ok"] is True
+    assert len(out["syncs"]) == 2 and all(s["ok"] for s in out["syncs"])
+
+
 def test_cli_stream_demo_wap_quarantine(tmp_path):
     # the CLI's streaming demo: stage->audit->publish per micro-batch,
     # poisoned batch aborted wholesale into the dead-letter quarantine

@@ -17,9 +17,10 @@ deltas, positional deletes and three equality deletes at most seven.
 Jobs are counted with a job group and ``statusTracker``, the
 same attribution the benchmark's traced run uses.
 
-The driver-side cost of building a batch's plan is pinned too, at 108
+The driver-side cost of building a batch's plan is pinned too, at 88
 Py4J round trips: every Column call costs several (PySpark records its
-call site), so the per-batch expressions are SQL text. Three test names
+call site), so the per-batch expressions are SQL text and the batch
+statistics one ``named_struct`` aggregate. Three test names
 keep the looser budget they were written with (eight, four, 300); their
 asserts hold the measured one."""
 
@@ -192,7 +193,45 @@ def test_apply_batch_makes_at_most_300_py4j_calls(spark, tmp_path, monkeypatch):
     stats = apply_batch(t, events, 2)
     monkeypatch.undo()
     assert stats["n_ops"] == 120
-    assert 0 < len(calls) <= 108, f"apply_batch made {len(calls)} Py4J round trips"
+    assert 0 < len(calls) <= 88, f"apply_batch made {len(calls)} Py4J round trips"
+
+
+def _stream_jobs(spark, query):
+    """Spark jobs of a drained streaming query: its micro-batches run
+    under its run id as their job group."""
+    query.awaitTermination()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId)))
+
+
+def test_branch_sink_runs_no_more_jobs_than_merge_sink(spark, tmp_path):
+    # the invalidation guard and the empty-batch check read the batch
+    # statistics observed on the branch commit: no action precedes it
+    from mongodb_iceberg_sync_spark.sources.cdc_feed import (
+        read_stream,
+        write_stream_source,
+    )
+    from mongodb_iceberg_sync_spark.streaming.sink import (
+        foreach_batch_branch,
+        foreach_batch_merge,
+    )
+
+    rows = make_events(n_docs=40, n_ops=120)
+    src = write_stream_source(spark, rows, str(tmp_path / "src"), files=3)
+    merge_t = MorTable(spark, str(tmp_path / "merge"), key="doc_id")
+    branch_t = MorTable(spark, str(tmp_path / "branch"), key="doc_id")
+    branch_t.create_branch("ingest")
+    merge = _stream_jobs(
+        spark,
+        foreach_batch_merge(read_stream(spark, src), merge_t, str(tmp_path / "ck-m")),
+    )
+    branch = _stream_jobs(
+        spark,
+        foreach_batch_branch(
+            read_stream(spark, src), branch_t, str(tmp_path / "ck-b"), "ingest"
+        ),
+    )
+    assert merge_t._ids("deltas") == branch_t._ids("branches/ingest") == [0, 1, 2]
+    assert 0 < branch <= merge, f"branch sink {branch} jobs, merge sink {merge}"
 
 
 def _with_pos_deletes(spark, tmp_path, name):

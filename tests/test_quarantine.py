@@ -135,23 +135,22 @@ def test_split_matches_python_reference_on_random_junk(spark):
 
 
 def test_metrics_count_quarantined(spark, tmp_path):
-    from mongodb_iceberg_sync_spark.sync.metrics import (
-        SyncMetrics,
-        apply_with_metrics,
-    )
+    from mongodb_iceberg_sync_spark.sync.engine import CollectionSync
+    from mongodb_iceberg_sync_spark.sync.metrics import SyncMetrics
 
     table = MorTable(spark, str(tmp_path / "t"), key="doc_id")
     metrics = SyncMetrics()
-    apply_with_metrics(
-        table,
-        _batch(spark),
-        batch_id=1,
-        key="doc_id",
-        metrics=metrics,
-        quarantine_dir=str(tmp_path / "dlq"),
+    sync = CollectionSync(
+        spark, "q", None, None, table, None,
+        metrics=metrics, quarantine_dir=str(tmp_path / "dlq"),
     )
+    sync._apply_one(_batch(spark), batch_id=1)
     snap = metrics.snapshot()
+    # dead letters count only as quarantined; the four committed ops
+    # (a, b, e and the delete of b) as processed
     assert snap["quarantined"] == 3
+    assert snap["documents_processed"] == 4
+    assert snap["events_by_type"] == {"insert": 3, "delete": 1}
 
 
 def test_invalidations_pass_quarantine_and_engine_truncates(spark, tmp_path):
@@ -201,3 +200,53 @@ def test_invalidations_pass_quarantine_and_engine_truncates(spark, tmp_path):
     assert got == {"s1": {"_id": "s1", "v": "resynced"}, "d2": {"_id": "d2", "v": 4}}
     assert SyncState.INITIAL_SYNC in sync.history[2:]
     assert int(store.read("lake.q").resume_token) == 4
+
+
+def test_invalidation_dead_letters_once_and_counts_ops_once(spark, tmp_path):
+    """A malformed event after a mid-batch drop is read twice: by the
+    batch, then by the engine's replay of the ops after the drop. It is
+    dead-lettered once, by the replay, and SyncMetrics counts each
+    committed op once: d1 and d2 before the drop, d3's insert and update
+    after it (one per event)."""
+    import json
+    import os
+
+    from mongodb_iceberg_sync_spark.sync.checkpoint import CheckpointStore
+    from mongodb_iceberg_sync_spark.sync.engine import CollectionSync
+    from mongodb_iceberg_sync_spark.sync.metrics import SyncMetrics
+
+    def doc(k, v):
+        return json.dumps({"_id": k, "v": v})
+
+    rows = [
+        (1, "insert", "d1", None, doc("d1", 1)),
+        (2, "insert", "d2", None, doc("d2", 2)),
+        (3, "drop", None, None, None),
+        (4, "insert", "d3", None, doc("d3", 4)),
+        (5, "update", "d3", None, doc("d3", 5)),
+        (6, "insert", None, None, '{"v": 6}'),  # missing_key
+    ]
+
+    def batches(resume_from):
+        if resume_from is None:
+            yield (1, spark.createDataFrame(rows, SCHEMA))
+
+    qdir = str(tmp_path / "dlq")
+    metrics = SyncMetrics()
+    table = MorTable(spark, str(tmp_path / "t"), key="doc_id")
+    snap = spark.createDataFrame([], "doc_id string, full_doc string")
+    sync = CollectionSync(
+        spark, "lake.p", lambda: snap, batches, table,
+        CheckpointStore(str(tmp_path / "cp.jsonl")),
+        metrics=metrics, quarantine_dir=qdir,
+    )
+    sync.run_once()
+    got = {r.doc_id: json.loads(r.full_doc) for r in table.snapshot().collect()}
+    assert got == {"d3": {"_id": "d3", "v": 5}}
+    # the replay (batch id = the drop's op_seq) dead-letters it, alone
+    assert [d for d in os.listdir(qdir) if d.startswith("batch=")] == ["batch=3"]
+    assert [r["op_seq"] for r in spark.read.parquet(qdir).collect()] == [6]
+    out = metrics.snapshot()
+    assert out["quarantined"] == 1
+    assert out["documents_processed"] == 4
+    assert out["events_by_type"] == {"insert": 3, "update": 1}
